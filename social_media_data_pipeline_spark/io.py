@@ -221,6 +221,33 @@ def pin_stats(df: DataFrame, key: str | None = None) -> DataFrame:
     return pinned
 
 
+def release_pins(df: DataFrame) -> None:
+    """Unpersist every cache entry `df`'s plan scans.
+
+    `pin_stats` leaves `.unpersist()` to the caller, but a lazy frame
+    built OVER a pin (e.g. a union reading `graph.connected_components`'
+    stats pin) gives the caller no handle on the pinned frame itself.
+    This finds the cached relations the plan reads and drops exactly
+    those entries. Call it once every consumer of `df` has materialized
+    (a checkpoint or a write); entries `df` does not read stay, but an
+    identical plan pinned by another owner is the same entry and goes
+    too (the `pin_stats` caveat)."""
+    jspark = df.sparkSession._jsparkSession
+    cm = jspark.sharedState().cacheManager()
+    seq = df._jdf.queryExecution().withCachedData().collectLeaves()
+    leaves = [seq.apply(i) for i in range(seq.length())]
+    scanned = [
+        leaf.cacheBuilder()
+        for leaf in leaves
+        if leaf.getClass().getSimpleName() == "InMemoryRelation"
+    ]
+    seq = cm.cachedData()
+    entries = [seq.apply(i) for i in range(seq.size())]
+    for e in entries:
+        if e.cachedRepresentation().cacheBuilder() in scanned:
+            cm.uncacheQuery(jspark, e.plan(), False, False)
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every harness table as a temp view for spark.sql parity."""
     for name in TESTDATA_TABLES:

@@ -564,18 +564,27 @@ def incremental_dedup(
 # OWN signatures, joins them against the store, and appends its
 # survivors. The lifecycle below manages that store:
 #   append  — survivors only (flagged duplicates excluded HERE, not by
-#             caller convention), layout-stamped, bucketed for pruning
-#   read    — partition-pruned to the buckets a probe batch touches
+#             caller convention), layout-stamped, sorted by band
+#   read    — exact semi-join pruning to the (band_idx, band_hash) keys
+#             a probe batch carries
 #   compact — drop bands of docs later deduped/retired + coalesce the
-#             per-append small files (staged rewrite, swap documented)
-# Layout: parquet partitioned by (band_idx, band_bucket) where
-# band_bucket = crc32(band_hash) % buckets. A probe batch touches at
-# most its own distinct (band_idx, band_bucket) pairs — bounded by
-# bands × buckets — so the store read prunes to those directories: an
-# ingest batch far smaller than the corpus reads a correspondingly
-# small slice of the store instead of all of it.
+#             per-append files (staged rewrite, swap documented)
+# Layout: FLAT parquet — (doc, band_idx, band_hash) files directly under
+# the store root, one per write task, each sorted within the file by
+# (band_idx, band_hash) so row-group min/max stats cluster by band. Not
+# partitioned by band: a (band_idx, hash-bucket) directory layout writes
+# up to bands × buckets small files per append, every read lists all of
+# those directories, and a batch of a few hundred docs touches every
+# bucket anyway, so directory pruning saves nothing. The probe side is
+# the batch's own band table (bands × batch rows), so a broadcast
+# left-semi join keeps exactly the store rows the dedup join can match;
+# the scan itself still reads the whole store.
+# Stores stamped with `buckets` are the old hive layout: append refuses
+# them (a flat file beside band_idx= directories breaks partition
+# discovery) and band_store_compact migrates them.
 
 _BAND_STORE_META = "_band_store_meta.json"
+_BAND_COLS = ("doc", "band_idx", "band_hash")
 
 
 def _band_store_params_path(store_path: str) -> str:
@@ -584,23 +593,32 @@ def _band_store_params_path(store_path: str) -> str:
     return os.path.join(store_path, _BAND_STORE_META)
 
 
+def _write_band_files(df: DataFrame, path: str, mode: str) -> None:
+    """The flat layout: no partitionBy, rows sorted by band inside each
+    write task's single file."""
+    df.sortWithinPartitions("band_idx", "band_hash").write.mode(mode).parquet(path)
+
+
 def band_store_append(
     bands: DataFrame,
     store_path: str,
     flagged: DataFrame | None = None,
-    buckets: int = 64,
     params: dict | None = None,
 ) -> None:
     """Append a batch's band table (`sketches.minhash_band_table`
     output: doc, band_idx, band_hash) to the persisted store, EXCLUDING
     docs listed in `flagged` (the duplicates `incremental_dedup` just
     found — appending them would make the store grow with junk and
-    every future batch pay collision candidates against it).
+    every future batch pay collision candidates against it). Writes
+    the flat layout: one file per write task, sorted by
+    (band_idx, band_hash).
 
     `params` (num_hashes/bands/shingle_k) is stamped into a meta file on
     first append and verified on every later append/read: joining bands
     built with different signature parameters silently matches nothing,
-    so a mismatch raises instead.
+    so a mismatch raises instead. A store whose stamp carries `buckets`
+    has the old partitioned layout and is refused until
+    `band_store_compact` rewrites it flat.
 
     Crash/empty-batch safety (r9): the meta stamp — which includes the
     band schema DDL — is written BEFORE the first data write, so a
@@ -620,16 +638,21 @@ def band_store_append(
             "doc",
             "left_anti",
         )
-    out = bands.withColumn(
-        "band_bucket", F.pmod(F.crc32(F.col("band_hash")), F.lit(buckets))
-    )
+    out = bands.select(*_BAND_COLS)
     schema_ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in out.schema.fields
     )
-    meta = {"buckets": buckets, **(params or {}), "schema": schema_ddl}
+    meta = {**(params or {}), "schema": schema_ddl}
     mp = _band_store_params_path(store_path)
     if os.path.exists(mp):
         have = json.load(open(mp))
+        if "buckets" in have:
+            raise ValueError(
+                f"band_store_append: store {store_path} has the old "
+                "partitioned (band_idx, band_bucket) layout — a flat "
+                "append beside its directories breaks partition "
+                "discovery; migrate it once with band_store_compact"
+            )
         if {k: v for k, v in have.items() if k != "schema"} != {
             k: v for k, v in meta.items() if k != "schema"
         }:
@@ -652,9 +675,7 @@ def band_store_append(
         with open(mp, "w") as f:
             json.dump(meta, f)
     if not out.isEmpty():
-        out.write.mode("append").partitionBy(
-            "band_idx", "band_bucket"
-        ).parquet(store_path)
+        _write_band_files(out, store_path, "append")
 
 
 def band_store_read(
@@ -664,16 +685,18 @@ def band_store_read(
     params: dict | None = None,
 ) -> DataFrame:
     """Read the store back as (doc, band_idx, band_hash). With
-    `probe_bands` (the NEW batch's band table) the read is pruned to
-    the (band_idx, band_bucket) partitions the probe can possibly hit —
-    the collected probe-bucket set is bounded by bands × buckets, never
-    by data size. `params` re-verifies the signature stamp.
+    `probe_bands` (the NEW batch's band table) the rows are pruned by a
+    broadcast left-semi join on (band_idx, band_hash): exactly the
+    store rows the probe can join survive. The parquet scan under it
+    still reads the whole store. `params`
+    re-verifies the signature stamp.
 
     The read takes its schema from the meta stamp, never from parquet
     footer inference: a store holding only the stamp (zero-row appends,
     a crash before the first data write) resolves to an EMPTY frame
     instead of UNABLE_TO_INFER_SCHEMA. Parquet data WITHOUT a stamp is
-    refused — silently assuming default params would mis-prune buckets.
+    refused — silently assuming default params would match nothing.
+    Old partitioned stores read through partition discovery.
     """
     import glob
     import json
@@ -686,8 +709,7 @@ def band_store_read(
             raise ValueError(
                 f"band_store_read: {store_path} has parquet data but no "
                 f"{_BAND_STORE_META} stamp — refusing to guess signature "
-                "params (wrong bucket pruning); restore the stamp or "
-                "rebuild the store"
+                "params; restore the stamp or rebuild the store"
             )
         old = store_path.rstrip("/") + ".old"
         hint = (
@@ -710,28 +732,16 @@ def band_store_read(
     reader = spark.read
     if "schema" in meta:
         reader = reader.schema(meta["schema"])
-    df = reader.parquet(store_path)
+    df = reader.parquet(store_path).select(*_BAND_COLS)
     if probe_bands is not None:
-        buckets = int(meta.get("buckets", 64))
-        touched = [
-            (int(r["band_idx"]), int(r["__b"]))
-            for r in probe_bands.select(
-                "band_idx",
-                F.pmod(F.crc32(F.col("band_hash")), F.lit(buckets)).alias("__b"),
-            )
-            .distinct()
-            .collect()
-        ]
-        if not touched:
-            return df.limit(0).select("doc", "band_idx", "band_hash")
-        cond = F.lit(False)
-        for bi, bb in sorted(set(touched)):
-            cond = cond | (
-                (F.col("band_idx") == F.lit(bi))
-                & (F.col("band_bucket") == F.lit(bb))
-            )
-        df = df.filter(cond)
-    return df.select("doc", "band_idx", "band_hash")
+        # no distinct() on the probe: a broadcast semi join's build
+        # side already ignores duplicate keys
+        df = df.join(
+            F.broadcast(probe_bands.select("band_idx", "band_hash")),
+            ["band_idx", "band_hash"],
+            "left_semi",
+        ).select(*_BAND_COLS)
+    return df
 
 
 def band_store_compact(
@@ -742,8 +752,12 @@ def band_store_compact(
 ) -> dict:
     """Rewrite the store (a) WITHOUT bands of `drop_docs` — documents
     since deduped away or retired from the kept corpus, whose bands
-    otherwise feed every future batch useless candidates — and (b) with
-    per-append small files coalesced to `files_per_partition`.
+    otherwise feed every future batch useless candidates — and (b) as
+    `files_per_partition` flat files sorted by (band_idx, band_hash),
+    coalescing the per-append files. Reads either layout (old
+    partitioned stores through partition discovery) and always writes
+    the flat one, so it is also the migration for stores stamped with
+    `buckets`; the rewritten stamp drops that key.
 
     Staged rewrite: the new store is fully written to `<path>.compact`
     BEFORE the old directory is swapped out, so a crash before the swap
@@ -770,17 +784,13 @@ def band_store_compact(
     reader = spark.read
     if "schema" in meta:
         reader = reader.schema(meta["schema"])
-    cur = reader.parquet(store_path)
-    # legacy (pre-r9) stores lack the schema stamp: adopt the inferred
-    # one so the compacted store — possibly zero-row — reads cleanly
-    meta.setdefault(
-        "schema",
-        ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in cur.schema.fields
-        ),
+    cur = reader.parquet(store_path).select(*_BAND_COLS)
+    # the stamp describes the flat layout: no bucket count, and (for
+    # old or pre-r9 stores) the schema of the three band columns only
+    meta.pop("buckets", None)
+    meta["schema"] = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in cur.schema.fields
     )
-    reader = spark.read.schema(meta["schema"])
     n_before = cur.count()
     f_before = len(glob.glob(os.path.join(store_path, "**", "*.parquet"),
                              recursive=True))
@@ -793,17 +803,11 @@ def band_store_compact(
         )
     if os.path.exists(staged):
         shutil.rmtree(staged)
-    (
-        keep.repartition(files_per_partition, "band_idx", "band_bucket")
-        .write.mode("overwrite")
-        .partitionBy("band_idx", "band_bucket")
-        .parquet(staged)
-    )
+    _write_band_files(keep.repartition(files_per_partition), staged, "overwrite")
     with open(_band_store_params_path(staged), "w") as f:
         json.dump(meta, f)
-    n_after = reader.parquet(staged).count()
-    f_after = len(glob.glob(os.path.join(staged, "**", "*.parquet"),
-                            recursive=True))
+    n_after = spark.read.schema(meta["schema"]).parquet(staged).count()
+    f_after = len(glob.glob(os.path.join(staged, "*.parquet")))
     if os.path.exists(old):
         shutil.rmtree(old)
     os.rename(store_path, old)
@@ -827,13 +831,12 @@ def incremental_dedup_against_store(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
-    buckets: int = 64,
     append_survivors: bool = True,
 ) -> DataFrame:
     """One ingest-batch cycle against the persisted band store: compute
-    the NEW batch's bands once, prune-read the store to the touched
-    buckets, flag near-duplicates (`incremental_dedup` semantics), then
-    append the survivors' bands — the complete continuous-crawl step,
+    the NEW batch's bands once, semi-join-read the store down to the
+    band keys the batch carries, flag near-duplicates
+    (`incremental_dedup` semantics), then append the survivors' bands — the complete continuous-crawl step,
     so the append-excludes-flagged rule lives here instead of in every
     caller. Returns the flagged (id_col, dup_of, jaccard) DataFrame
     (materialized: the append already consumed it)."""
@@ -897,7 +900,6 @@ def incremental_dedup_against_store(
             new_bands,
             store_path,
             flagged=flagged.select(id_col),
-            buckets=buckets,
             params=params,
         )
     return flagged

@@ -12,7 +12,7 @@ nine imperative scripts):
       ▼
     quality survivors
       │  incremental_dedup_against_store(...)      — batch bands only;
-      │    store read pruned to probe buckets;     history NEVER
+      │    store read semi-joined to probe bands;  history NEVER
       │    survivors' bands appended               recomputes
       ▼
     unique survivors
@@ -22,7 +22,7 @@ nine imperative scripts):
 
 Per-batch cost is bounded by the BATCH, not the corpus: quality is a
 scan of the batch; dedup computes signatures for the batch only and
-reads a probe-bucket-pruned slice of the band store; the upsert
+keeps only the band-store rows its bands can join; the upsert
 rewrites only files whose key range overlaps the batch. An empty
 micro-batch (routine in production streams) is a no-op at every stage
 — pinned by test, the exact r8 regression (a zero-row append used to
@@ -167,6 +167,7 @@ def curate_batch(
     n_labels_changed = 0
     if labels_path is not None and n_flagged > 0:
         from social_media_data_pipeline_spark.functions import graph
+        from social_media_data_pipeline_spark.io import release_pins
 
         pairs = flagged.select(
             F.col(id_col).alias("id_a"), F.col("dup_of").alias("id_b")
@@ -192,6 +193,10 @@ def curate_batch(
         changed = changed.observe(
             _c_obs, F.count(F.lit(1)).alias("m")
         ).localCheckpoint(eager=True)
+        # `changed` is materialized: release the stats pin that
+        # connected_components leaves under `updated`, or a long-lived
+        # stream keeps one label-sized cache entry per batch
+        release_pins(updated)
         n_labels_changed = int(_c_obs.get["m"])
         if n_labels_changed > 0:
             if have_store:

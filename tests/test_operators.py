@@ -475,29 +475,95 @@ class TestBandStoreLifecycle:
             b4, self._docs(spark, [(1, self.BASE)]), store, "doc_id", "text")
         assert {r["doc_id"]: r["dup_of"] for r in f4.collect()} == {30: 1}
 
+    P16 = {"num_hashes": 16, "bands": 4, "shingle_k": 3}
+
+    def _forty_doc_bands(self, spark):
+        from social_media_data_pipeline_spark.functions import sketches
+
+        docs = self._docs(spark, [(i, f"document number {i} with body {i * 7}") for i in range(40)])
+        return sketches.minhash_band_table(docs, "doc_id", "text")
+
+    @staticmethod
+    def _rows(df):
+        return sorted((r["doc"], r["band_idx"], r["band_hash"]) for r in df.collect())
+
     def test_pruned_read_equals_full_read_for_probe_buckets(self, spark, tmp_path):
+        """Pruning is exact: the probed read keeps precisely the store
+        rows the probe's (band_idx, band_hash) keys can join."""
         from social_media_data_pipeline_spark.functions import sketches
         from social_media_data_pipeline_spark.operators import dedup as ddp
 
         store = str(tmp_path / "bands")
-        docs = self._docs(spark, [(i, f"document number {i} with body {i * 7}") for i in range(40)])
-        bands = sketches.minhash_band_table(docs, "doc_id", "text")
-        ddp.band_store_append(bands, store, params={"num_hashes": 16, "bands": 4, "shingle_k": 3})
+        ddp.band_store_append(self._forty_doc_bands(spark), store, params=self.P16)
         probe_docs = self._docs(spark, [(100, "document number 7 with body 49")])
         probe = sketches.minhash_band_table(probe_docs, "doc_id", "text")
         pruned = ddp.band_store_read(spark, store, probe_bands=probe)
         full = ddp.band_store_read(spark, store)
-        # pruning never loses a joinable row: equi-join results identical
-        j_pruned = sorted(
-            (r["doc"],) for r in probe.join(
-                pruned.withColumnRenamed("doc", "h"), ["band_idx", "band_hash"]
-            ).select(F.col("h").alias("doc")).distinct().collect())
-        j_full = sorted(
-            (r["doc"],) for r in probe.join(
-                full.withColumnRenamed("doc", "h"), ["band_idx", "band_hash"]
-            ).select(F.col("h").alias("doc")).distinct().collect())
-        assert j_pruned == j_full
+        assert self._rows(pruned) == self._rows(
+            full.join(probe, ["band_idx", "band_hash"], "left_semi"))
+        assert pruned.columns == full.columns == ["doc", "band_idx", "band_hash"]
         assert pruned.count() < full.count()  # and it actually pruned
+
+    def test_append_writes_few_flat_band_sorted_files(self, spark, tmp_path):
+        """The flat layout: no band_idx=/band_bucket= directories, at
+        most one file per write task, rows sorted by band in each."""
+        import glob
+        import os
+
+        import pyarrow.parquet as pq
+
+        from social_media_data_pipeline_spark.operators import dedup as ddp
+
+        store = str(tmp_path / "bands")
+        ddp.band_store_append(self._forty_doc_bands(spark), store, params=self.P16)
+        assert not [d for d in os.listdir(store) if os.path.isdir(os.path.join(store, d))]
+        files = glob.glob(os.path.join(store, "*.parquet"))
+        assert 1 <= len(files) <= spark.sparkContext.defaultParallelism
+        n = 0
+        for f in files:
+            t = pq.read_table(f)
+            keys = list(zip(t.column("band_idx").to_pylist(), t.column("band_hash").to_pylist()))
+            assert keys == sorted(keys)
+            n += t.num_rows
+        assert n == 40 * 4
+
+    def test_old_partitioned_store_refused_then_migrated_by_compact(self, spark, tmp_path):
+        """A store in the old partitionBy(band_idx, band_bucket) layout
+        (stamp carries `buckets`) refuses appends with the migration in
+        the message; band_store_compact rewrites it flat with rows and
+        probe results preserved, after which appends work again."""
+        import json
+        import os
+
+        from social_media_data_pipeline_spark.functions import sketches
+        from social_media_data_pipeline_spark.operators import dedup as ddp
+
+        store = str(tmp_path / "bands")
+        bands = self._forty_doc_bands(spark)
+        old = bands.withColumn("band_bucket", F.pmod(F.crc32(F.col("band_hash")), F.lit(64)))
+        old.write.partitionBy("band_idx", "band_bucket").parquet(store)
+        schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in old.schema.fields)
+        with open(os.path.join(store, "_band_store_meta.json"), "w") as f:
+            json.dump({"buckets": 64, **self.P16, "schema": schema}, f)
+        probe = sketches.minhash_band_table(
+            self._docs(spark, [(100, "document number 7 with body 49")]), "doc_id", "text")
+        rows_before = self._rows(ddp.band_store_read(spark, store))
+        hits_before = self._rows(ddp.band_store_read(spark, store, probe_bands=probe))
+        assert len(rows_before) == 160 and hits_before
+
+        with pytest.raises(ValueError, match="band_store_compact"):
+            ddp.band_store_append(probe, store, params=self.P16)
+
+        stats = ddp.band_store_compact(spark, store)
+        assert stats["rows_before"] == stats["rows_after"] == 160
+        assert stats["files_after"] == 1
+        assert not [d for d in os.listdir(store) if os.path.isdir(os.path.join(store, d))]
+        meta = json.load(open(os.path.join(store, "_band_store_meta.json")))
+        assert "buckets" not in meta and "band_bucket" not in meta["schema"]
+        assert self._rows(ddp.band_store_read(spark, store)) == rows_before
+        assert self._rows(ddp.band_store_read(spark, store, probe_bands=probe)) == hits_before
+        ddp.band_store_append(probe, store, params=self.P16)
+        assert len(self._rows(ddp.band_store_read(spark, store))) == 164
 
     def test_param_stamp_refuses_mixed_signatures(self, spark, tmp_path):
         import pytest

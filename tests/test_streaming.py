@@ -772,6 +772,31 @@ class TestStreamingCurationLabels:
         # final components: {1,10,20} -> 1 and {2,11} -> 2
         assert snaps[-1] == {1: 1, 10: 1, 20: 1, 2: 2, 11: 2}
 
+    def test_label_batches_leave_no_cache_entry(self, spark, tmp_path):
+        """The connected-components stats pin behind each batch's
+        updated labeling is released once the changed rows are
+        checkpointed: the label store's bootstrap batch and its first
+        merge batch leave the cache manager as they found it."""
+        from social_media_data_pipeline_spark.streaming import curation
+
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        before = cache.cachedData().size()
+        batches = [
+            [(1, self._doc(self.GOOD, "northern")), (2, self._doc(self.ALT, "river"))],
+            [(10, self._doc(self.GOOD, "nothern")), (11, self._doc(self.ALT, "rivers"))],
+            [(20, self._doc(self.GOOD, "norther"))],
+        ]
+        stats = [
+            curation.curate_batch(
+                spark, spark.createDataFrame(rows, "doc_id long, text string"),
+                str(tmp_path / "curated"), str(tmp_path / "bands"),
+                labels_path=str(tmp_path / "labels"),
+            )
+            for rows in batches
+        ]
+        assert [s["labels_changed"] for s in stats] == [0, 4, 1]
+        assert cache.cachedData().size() == before
+
     def test_spectrum_alarm_fires_on_planted_shift_only(
         self, spark, tmp_path
     ):

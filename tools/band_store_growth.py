@@ -2,17 +2,17 @@
 
 Splits the sf documents table into 8 ingest batches (doc_id mod 8,
 arriving in order), runs the full continuous-crawl cycle per batch
-(`dedup.incremental_dedup_against_store`: pruned store read → flag →
-survivors-only append), and measures what the long-lived asset does:
-store rows, parquet file count, flagged duplicates, and per-batch wall
-time. Then compacts (coalescing the 8 appends' small files) and
+(`dedup.incremental_dedup_against_store`: semi-join-pruned store read →
+flag → survivors-only append), and measures what the long-lived asset
+does: store rows, parquet file count, flagged duplicates, and per-batch
+wall time. Then compacts (coalescing the 8 appends' files into one) and
 re-times a probe batch against the compacted store.
 
 The numbers to read: (a) per-batch wall time should stay ~flat as the
-store grows 8× — the batch side of the join is constant and the store
-read is bucket-pruned; (b) file count grows linearly with appends
-(the small-file problem) and compaction collapses it; (c) flagged
-counts reflect real cross-batch duplicates in the synthetic corpus.
+store grows 8× — the batch side of the join is constant; (b) the flat
+store layout adds one file per append write task (one per append at
+this size), and compaction collapses them to one; (c) flagged counts
+reflect real cross-batch duplicates in the synthetic corpus.
 
 Usage: python tools/band_store_growth.py   (sf dir from
 SPARK_GRAFT_SF_DIR, default sf0.1)

@@ -40,27 +40,41 @@ def exchange_count(df) -> int:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    plan = buf.getvalue().split("===== Subqueries =====")[0]
-    # Count DISTINCT Exchange operator ids from the plan TREE (r13):
-    # a persist-pinned table (io.pin_stats) displays its cached child
-    # plan under EVERY InMemoryTableScan that reads it, including the
-    # nested AdaptiveSparkPlan's "== Initial Plan ==" duplicate — the
-    # old detail-section line count charged those exchanges once per
-    # display even though the cached plan executes exactly once at pin
-    # time. Dedupe by operator id and skip Initial Plan regions (the
-    # Final Plan is what ran). BroadcastExchange/ReusedExchange are not
-    # shuffles and stay excluded.
+    return count_exchanges(buf.getvalue())
+
+
+def _tree_col(line: str) -> int:
+    """Column of a plan-tree line's own "+-" or node text, past the
+    spaces and ":" rails its ancestors draw."""
+    return len(line) - len(line.lstrip(" :"))
+
+
+def count_exchanges(plan_text: str) -> int:
+    """Distinct shuffle Exchange operators in a formatted explain.
+
+    Counts DISTINCT Exchange operator ids from the plan TREE (r13): a
+    persist-pinned table (io.pin_stats) displays its cached child plan
+    under EVERY InMemoryTableScan that reads it, including the nested
+    AdaptiveSparkPlan's "== Initial Plan ==" duplicate — a line count
+    would charge those exchanges once per display even though the
+    cached plan executes exactly once at pin time. Dedupe by operator
+    id and skip Initial Plan regions (the Final Plan is what ran).
+    BroadcastExchange/ReusedExchange are not shuffles and stay
+    excluded. An Initial Plan region is every following line drawn
+    right of its marker's "+-"; marker and lines are measured with the
+    same rule, so a node drawn at the marker's own column ends the
+    region instead of being skipped with it."""
+    plan = plan_text.split("===== Subqueries =====")[0]
     ids: set[str] = set()
     skip_col: int | None = None
     for line in plan.splitlines():
-        content = len(line) - len(line.lstrip(" :+-*"))
         if skip_col is not None:
-            if content <= skip_col and line.strip():
+            if _tree_col(line) <= skip_col and line.strip():
                 skip_col = None
             else:
                 continue
         if "== Initial Plan ==" in line:
-            skip_col = len(line) - len(line.lstrip(" :"))
+            skip_col = _tree_col(line)
             continue
         for m in re.finditer(r"\b(?<!Broadcast)(?<!Reused)Exchange \((\d+)\)", line):
             ids.add(m.group(1))
