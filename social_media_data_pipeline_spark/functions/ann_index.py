@@ -9,9 +9,10 @@ model once and reuses it across runs, ImageLabeling/DIRAdapter.py:20-76
 — it never retrains per query).
 
 This module persists trained IVF centroids as a manifest-committed
-parquet table (the `scale.write_table_manifest` commit point — the
-same crash-safe flip the mutable tables use) stamped with the training
-params AND a corpus fingerprint, and serves them back to searches:
+parquet table (`scale.commit_store` — the same crash-safe CAS flip
+every store uses) whose manifest also lists a meta JSON with the
+training params AND a corpus fingerprint, and serves them back to
+searches:
 
     centroids = ivf_centroids_for(spark, sf_dir)   # get-or-train
     hits = similarity.ivf_topk_multiprobe(queries, emb, centroids, ...)
@@ -37,15 +38,13 @@ for hot paths that own their invalidation).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_META = "_ann_index_meta.json"
+from social_media_data_pipeline_spark import scale
 
 
 def artifacts_root() -> str:
@@ -87,67 +86,11 @@ def ivf_index_path(corpus_tag: str, params: dict) -> str:
 
 
 def _load_meta(path: str) -> dict | None:
-    mp = os.path.join(path, _META)
-    if not os.path.exists(mp):
-        return None
-    with open(mp) as fh:
-        return json.load(fh)
-
-
-def _commit_artifact(
-    df, path: str, prefix: str, meta: dict
-) -> None:
-    """Shared commit path for small trained artifacts (centroid /
-    codeword tables): stage parquet, move into uniquely-named data
-    files, stamp meta, CAS-flip the manifest.
-
-    Data-file naming (r10, ADVICE fix): the tag derives from the LIVE
-    manifest's generation + 1 — not from len(manifest_versions()),
-    which shrinks after vacuum_table drops old generation files and
-    would re-issue a tag that live data files already carry — plus a
-    per-writer unique suffix, so even two concurrent trainers that
-    both read the same generation stage into DISJOINT file names:
-    os.replace can never overwrite a committed file.
-
-    CAS commit (r10): a concurrent trainer that committed since this
-    writer read the table loses loudly (ConcurrentCommitError) and its
-    staged files stay orphans — cleaned by the next vacuum — instead
-    of silently mutating the live artifact. A brand-new path (no
-    manifest yet) has no pointer to compare against; the unique tag
-    still keeps racing first-trainers' files disjoint, and both commit
-    IDENTICAL content (same seeded training over the same
-    fingerprinted corpus), so last-writer-wins is benign there.
-    """
-    import shutil
-
-    from social_media_data_pipeline_spark import scale
-
-    os.makedirs(path, exist_ok=True)
-    prev_doc = scale._read_manifest_doc(path)
-    cur_gen = prev_doc["generation"] if prev_doc else None
-    next_gen = 0 if cur_gen is None else cur_gen + 1
-    gen_tag = f"g{next_gen}-{uuid.uuid4().hex[:8]}"
-    staged = os.path.join(path, f"_staged-{gen_tag}")
-    df.coalesce(1).write.mode("overwrite").parquet(staged)
-    live = []
-    for i, f in enumerate(sorted(glob.glob(os.path.join(staged, "*.parquet")))):
-        dst = os.path.join(path, f"{prefix}-{gen_tag}-{i}.parquet")
-        os.replace(f, dst)
-        live.append(dst)
-    shutil.rmtree(staged)
-    tmp = os.path.join(path, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, _META))
-    try:
-        scale.write_table_manifest(path, live, expect_generation=cur_gen)
-    except scale.ConcurrentCommitError:
-        for f in live:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-        raise
+    """The live generation's meta (params + fingerprint), resolved
+    through the manifest: the CAS flip commits it together with the
+    files, so a writer that lost the race or crashed can never leave
+    its params live over files it never committed."""
+    return scale.read_store(path)[2]
 
 
 def train_ivf_index(
@@ -174,14 +117,15 @@ def train_ivf_index(
                    "vec_col": vec_col},
         "fingerprint": fp,
     }
-    _commit_artifact(cents, path, "centroids", meta)
+    scale.commit_store(
+        path, [("centroids", cents.coalesce(1))], scale.read_store(path)[1],
+        meta=meta,
+    )
     return cents
 
 
 def load_ivf_index(spark: SparkSession, path: str) -> DataFrame:
     """Read the committed centroid table (manifest-honoring)."""
-    from social_media_data_pipeline_spark import scale
-
     return scale.manifest_read(spark, path)
 
 
@@ -205,12 +149,8 @@ def ivf_centroids_for(
     instead of one per artifact."""
     params = {"k": k, "iters": iters, "id_col": id_col, "vec_col": vec_col}
     path = ivf_index_path(corpus_tag, params)
-    meta = _load_meta(path)
-    from social_media_data_pipeline_spark import scale
-
-    if meta is not None and meta.get("params") == params and (
-        scale.read_table_manifest(path) or None
-    ):
+    live, _gen, meta = scale.read_store(path)
+    if meta is not None and meta.get("params") == params and live:
         if trust_cache:
             return load_ivf_index(emb.sparkSession, path)
         fp = fingerprint or corpus_fingerprint(emb, id_col, vec_col)
@@ -289,7 +229,10 @@ def train_pq_residual_codebook(
             "vec_col": vec_col},
         "fingerprint": fp,
     }
-    _commit_artifact(rows, path, "codebook", meta)
+    scale.commit_store(
+        path, [("codebook", rows.coalesce(1))], scale.read_store(path)[1],
+        meta=meta,
+    )
     return codebook
 
 
@@ -299,8 +242,6 @@ def load_pq_codebook(
     """Rebuild the nested-list codebook from the committed parquet
     rows — exact: codeword components are micro-int/1e6 doubles, and
     parquet round-trips doubles bit-for-bit."""
-    from social_media_data_pipeline_spark import scale
-
     rows = scale.manifest_read(spark, path).collect()
     m = max(r["j"] for r in rows) + 1
     ksub = max(r["cid"] for r in rows) + 1
@@ -338,12 +279,8 @@ def pq_residual_codebook_for(
         "id_col": id_col, "vec_col": vec_col,
     }
     path = pq_index_path(corpus_tag, params)
-    meta = _load_meta(path)
-    from social_media_data_pipeline_spark import scale
-
-    if meta is not None and meta.get("params") == params and (
-        scale.read_table_manifest(path) or None
-    ):
+    live, _gen, meta = scale.read_store(path)
+    if meta is not None and meta.get("params") == params and live:
         if trust_cache:
             return load_pq_codebook(emb.sparkSession, path)
         fp = fingerprint or corpus_fingerprint(emb, id_col, vec_col)
@@ -412,7 +349,6 @@ def pq_codes_for(
     tag and ONE fingerprint scan when `fingerprint` is passed), then
     encodes the corpus once and commits. Invalidation mirrors the
     other artifacts: params mismatch or fingerprint drift re-encodes."""
-    from social_media_data_pipeline_spark import scale
     from social_media_data_pipeline_spark.functions import pq
 
     params = {
@@ -421,10 +357,8 @@ def pq_codes_for(
         "id_col": id_col, "vec_col": vec_col,
     }
     path = pq_codes_path(corpus_tag, params)
-    meta = _load_meta(path)
-    if meta is not None and meta.get("params") == params and (
-        scale.read_table_manifest(path) or None
-    ):
+    live, gen, meta = scale.read_store(path)
+    if meta is not None and meta.get("params") == params and live:
         if trust_cache:
             return scale.manifest_read(emb.sparkSession, path)
         fp = fingerprint or corpus_fingerprint(emb, id_col, vec_col)
@@ -445,8 +379,10 @@ def pq_codes_for(
     codes = pq.pq_encode(
         c_res, codebook, id_col, "__resid", keep_cols=["cluster"]
     )
-    meta_doc = {"params": params, "fingerprint": fp}
-    _commit_artifact(codes, path, "codes", meta_doc)
+    scale.commit_store(
+        path, [("codes", codes.coalesce(1))], gen,
+        meta={"params": params, "fingerprint": fp},
+    )
     return scale.manifest_read(emb.sparkSession, path)
 
 
@@ -485,9 +421,6 @@ def pq_codes_append(
     table. Raises if no base index exists — append needs a base
     (`pq_codes_for` builds it).
     """
-    import shutil
-
-    from social_media_data_pipeline_spark import scale
     from social_media_data_pipeline_spark.functions import pq
 
     params = {
@@ -496,8 +429,7 @@ def pq_codes_append(
         "id_col": id_col, "vec_col": vec_col,
     }
     path = pq_codes_path(corpus_tag, params)
-    meta = _load_meta(path)
-    live = scale.read_table_manifest(path)
+    live, gen, meta = scale.read_store(path)
     if meta is None or meta.get("params") != params or not live:
         raise ValueError(
             f"pq_codes_append: no committed codes artifact for "
@@ -524,33 +456,10 @@ def pq_codes_append(
         "n": old_fp["n"] + batch_fp["n"],
         "h": old_fp["h"] ^ batch_fp["h"],
     }
-    prev_doc = scale._read_manifest_doc(path)
-    cur_gen = prev_doc["generation"] if prev_doc else None
-    next_gen = 0 if cur_gen is None else cur_gen + 1
-    gen_tag = f"g{next_gen}-{uuid.uuid4().hex[:8]}"
-    staged = os.path.join(path, f"_staged-{gen_tag}")
-    batch_codes.coalesce(1).write.mode("overwrite").parquet(staged)
-    new_files = []
-    for i, f in enumerate(sorted(glob.glob(os.path.join(staged, "*.parquet")))):
-        dst = os.path.join(path, f"codes-{gen_tag}-{i}.parquet")
-        os.replace(f, dst)
-        new_files.append(dst)
-    shutil.rmtree(staged)
-    tmp = os.path.join(path, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"params": params, "fingerprint": merged_fp}, fh)
-    os.replace(tmp, os.path.join(path, _META))
-    try:
-        scale.write_table_manifest(
-            path, list(live) + new_files, expect_generation=cur_gen
-        )
-    except scale.ConcurrentCommitError:
-        for f in new_files:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-        raise
+    scale.commit_store(
+        path, [("codes", batch_codes.coalesce(1))], gen, keep=live,
+        meta={"params": params, "fingerprint": merged_fp},
+    )
     return scale.manifest_read(spark, path)
 
 
@@ -603,7 +512,10 @@ def train_opq_rotation(
         "params": {"m": m, "id_col": id_col, "vec_col": vec_col},
         "fingerprint": fp,
     }
-    _commit_artifact(df, path, "rotation", meta)
+    scale.commit_store(
+        path, [("rotation", df.coalesce(1))], scale.read_store(path)[1],
+        meta=meta,
+    )
     return mean, r_mat
 
 
@@ -611,8 +523,6 @@ def load_opq_rotation(spark: SparkSession, path: str):
     """(mean, R) from the committed rotation table — a bounded
     d² + d collect (64×64 = 4 KiB of doubles)."""
     import numpy as np
-
-    from social_media_data_pipeline_spark import scale
 
     rows = scale.manifest_read(spark, path).collect()
     d = max(r["i"] for r in rows) + 1
@@ -641,12 +551,8 @@ def opq_rotation_for(
     contract as `ivf_centroids_for`)."""
     params = {"m": m, "id_col": id_col, "vec_col": vec_col}
     path = opq_index_path(corpus_tag, params)
-    meta = _load_meta(path)
-    from social_media_data_pipeline_spark import scale
-
-    if meta is not None and meta.get("params") == params and (
-        scale.read_table_manifest(path) or None
-    ):
+    live, _gen, meta = scale.read_store(path)
+    if meta is not None and meta.get("params") == params and live:
         if trust_cache:
             return load_opq_rotation(emb.sparkSession, path)
         fp = fingerprint or corpus_fingerprint(emb, id_col, vec_col)

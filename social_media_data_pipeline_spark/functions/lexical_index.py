@@ -10,7 +10,7 @@ same never-redo-training economics `functions/ann_index.py` gives the
 ANN stack).
 
 The persisted index is THREE tables committed under ONE root manifest
-(`scale.write_table_manifest` over the union of their files — filename
+(one `scale.commit_store` over the union of their files — filename
 prefixes distinguish them), so postings, term document-frequencies and
 per-document lengths flip atomically:
 
@@ -23,13 +23,13 @@ per-document lengths flip atomically:
                                         the source of truth for stats
 
 Corpus-level stats (N docs, total token count) and the corpus
-fingerprint live in a per-commit meta file `_lex_meta-<gen_tag>.json`
-(tag = generation + a per-writer uuid) written BEFORE the manifest
-flip AND referenced IN the manifest's file list — a reader resolves
-the meta through the manifest, so files+stats+fingerprint are one
-atomic unit: racing writers write disjoint meta files and the CAS
-decides whose meta+files become live together (a crash between meta
-write and manifest flip leaves an orphan meta file and the previous
+fingerprint live in the per-commit meta JSON `commit_store` writes
+BEFORE the manifest flip AND lists IN the manifest — a reader resolves
+the meta through the manifest (`scale.read_store`), so
+files+stats+fingerprint are one atomic unit: racing writers write
+disjoint meta files and the CAS decides whose meta+files become live
+together (a crash between meta write and manifest flip leaves an
+orphan meta file, reclaimed by `vacuum_table`, and the previous
 generation fully live).
 
 Search (`bm25_search_indexed`) filters postings and dfreq to the query
@@ -63,21 +63,18 @@ terms' row groups, never the corpus.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import shutil
-import uuid
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from social_media_data_pipeline_spark import scale
+
 from .ann_index import artifacts_root, corpus_fingerprint
 from .retrieval import BM25_B, BM25_K1, bm25_term_score_expr, ranked_desc_topn
 from .text import tokenize
-
-_META_PREFIX = "_lex_meta-g"
 
 _POSTINGS_SCHEMA = "t string, doc_id bigint, tf bigint, dl bigint"
 _DFREQ_SCHEMA = "t string, df bigint"
@@ -99,118 +96,19 @@ def _doc_fingerprint(docs: DataFrame, id_col: str, text_col: str) -> dict:
     return corpus_fingerprint(docs, id_col=id_col, vec_col=text_col)
 
 
-def _stage_files(
-    df: DataFrame,
-    path: str,
-    prefix: str,
-    gen_tag: str,
-    n_buckets: int = 1,
-    sort_cols: Sequence[str] | None = None,
-) -> list[str]:
-    """Write `df` into uniquely-named `{prefix}-{gen_tag}-*.parquet`
-    files under `path` (same naming discipline as
-    `ann_index._commit_artifact`: the tag carries a per-writer uuid, so
-    concurrent writers stage into disjoint names and os.replace can
-    never clobber a committed file).
-
-    `n_buckets` > 1 range-partitions on `sort_cols` and writes ONE
-    file per bucket IN PARALLEL — the corpus-sized postings table must
-    not funnel through a single writer task (a `coalesce(1)` there
-    serializes the one corpus-sized job of the index lifecycle onto one
-    core). Each bucket covers a disjoint range of the leading sort
-    column and is sorted within, so every file keeps the term-clustered
-    row groups that let a pushed `t IN (…)` skip non-matching row
-    groups — file-level min/max stats additionally skip whole buckets.
-    `n_buckets=1` with `sort_cols` degenerates to one globally-sorted
-    file (vocab-/doc-count-sized tables stay single-file)."""
-    staged = os.path.join(path, f"_staged-{prefix}-{gen_tag}")
-    if sort_cols:
-        out_df = df.repartitionByRange(
-            max(1, int(n_buckets)), *[F.col(c) for c in sort_cols]
-        ).sortWithinPartitions(*sort_cols)
-    else:
-        out_df = df.coalesce(1)
-    out_df.write.mode("overwrite").parquet(staged)
-    out = []
-    for i, f in enumerate(sorted(glob.glob(os.path.join(staged, "*.parquet")))):
-        dst = os.path.join(path, f"{prefix}-{gen_tag}-{i}.parquet")
-        os.replace(f, dst)
-        out.append(dst)
-    shutil.rmtree(staged)
-    return out
-
-
-def _commit(
-    path: str,
-    live: list[str],
-    meta: dict,
-    expect_generation: int | None,
-    gen_tag: str,
-) -> str:
-    """Meta-then-manifest commit. The meta file is named with the
-    WRITER'S unique tag (`_lex_meta-<gen_tag>.json`, tag = generation +
-    uuid — the `ann_index._commit_artifact` naming discipline) and is
-    REFERENCED IN the manifest's file list, so the CAS flip binds data
-    files and meta atomically: two racing writers write disjoint meta
-    files, the manifest points at exactly its own writer's meta, and a
-    loser's meta can never shadow the winner's stats (a
-    generation-NUMBERED meta name would collide — both writers claim
-    the same next generation). Returns the meta path so callers can
-    un-stage it on a lost CAS. Readers never confuse the .json entry
-    with a table: every table read filters by its `prefix-` basename."""
-    from social_media_data_pipeline_spark import scale
-
-    meta_path = os.path.join(path, f"{_META_PREFIX.rstrip('g')}{gen_tag}.json")
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, meta_path)
-    try:
-        scale.write_table_manifest(
-            path, live + [meta_path], expect_generation=expect_generation
-        )
-    except Exception:
-        try:
-            os.remove(meta_path)  # the loser's meta is never referenced
-        except OSError:
-            pass
-        raise
-    return meta_path
-
-
-def _live_meta_path(path: str) -> str | None:
-    from social_media_data_pipeline_spark import scale
-
-    live = scale.read_table_manifest(path) or []
-    metas = [
-        f for f in live
-        if os.path.basename(f).startswith(_META_PREFIX.rstrip("g"))
-    ]
-    return metas[0] if metas else None
-
-
 def load_index_meta(path: str) -> dict | None:
     """The live generation's meta (params, fingerprint, stats) resolved
     THROUGH the manifest — the commit point covers it — or None when no
     committed index exists at `path`."""
-    mp = _live_meta_path(path)
-    if mp is None or not os.path.exists(mp):
-        return None
-    with open(mp) as fh:
-        return json.load(fh)
-
-
-def _live_files(path: str, prefix: str) -> list[str]:
-    from social_media_data_pipeline_spark import scale
-
-    live = scale.read_table_manifest(path) or []
-    return [f for f in live if os.path.basename(f).startswith(prefix + "-")]
+    return scale.read_store(path)[2]
 
 
 def _read_part(
-    spark: SparkSession, path: str, prefix: str, schema: str
+    spark: SparkSession, path: str, live: list[str], prefix: str, schema: str
 ) -> DataFrame:
-    files = _live_files(path, prefix)
+    """One of the three tables, from the live files of ONE manifest
+    read (`scale.read_store`), so all parts come from one commit."""
+    files = [f for f in live if os.path.basename(f).startswith(prefix + "-")]
     if not files:
         raise ValueError(
             f"lexical_index: no live {prefix!r} files under {path} — "
@@ -231,15 +129,28 @@ def _corpus_tables(
     tf = toks.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
     lengths = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     postings = tf.join(lengths, "doc_id").select("t", "doc_id", "tf", "dl")
-    # term-clustering (range partition + sort) happens at STAGE time
-    # (`_stage_files` sort_cols) so the one range exchange both
-    # parallelizes the write and produces IN-skippable row groups
+    # term-clustering (range partition + sort) happens at commit time
+    # (`_postings_layout`) so the one range exchange both parallelizes
+    # the write and produces IN-skippable row groups
     dfreq = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
     srow = lengths.agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("dl_sum")
     ).collect()[0]
     stats = {"n": int(srow["n"]), "dl_sum": int(srow["dl_sum"] or 0)}
     return postings, dfreq, lengths, stats
+
+
+def _postings_layout(postings: DataFrame, n_buckets: int) -> DataFrame:
+    """Range-bucket the corpus-sized postings on (t, doc_id) into
+    `n_buckets` files written IN PARALLEL — a `coalesce(1)` here would
+    serialize the one corpus-sized job of the index lifecycle onto one
+    core. Each bucket covers a disjoint range of terms and is sorted
+    within, so every file keeps the term-clustered row groups that let
+    a pushed `t IN (…)` skip non-matching row groups — file-level
+    min/max stats additionally skip whole buckets."""
+    return postings.repartitionByRange(
+        max(1, int(n_buckets)), F.col("t"), F.col("doc_id")
+    ).sortWithinPartitions("t", "doc_id")
 
 
 def build_bm25_index(
@@ -260,36 +171,23 @@ def build_bm25_index(
     term-sorted files written concurrently (at 100 TB size this to the
     cluster's write parallelism / target file size; dfreq and lengths
     are vocab-/doc-count-sized and stay single-file)."""
-    from social_media_data_pipeline_spark import scale
-
-    os.makedirs(path, exist_ok=True)
     postings, dfreq, lengths, stats = _corpus_tables(docs, id_col, text_col)
     fp = fingerprint or _doc_fingerprint(docs, id_col, text_col)
-    prev = scale._read_manifest_doc(path)
-    cur_gen = prev["generation"] if prev else None
-    gen_tag = f"g{(0 if cur_gen is None else cur_gen + 1)}-{uuid.uuid4().hex[:8]}"
-    live = (
-        _stage_files(
-            postings, path, "postings", gen_tag,
-            n_buckets=postings_buckets, sort_cols=("t", "doc_id"),
-        )
-        + _stage_files(dfreq, path, "dfreq", gen_tag)
-        + _stage_files(lengths, path, "lengths", gen_tag)
+    _live, gen, _meta = scale.read_store(path)
+    scale.commit_store(
+        path,
+        [
+            ("postings", _postings_layout(postings, postings_buckets)),
+            ("dfreq", dfreq.coalesce(1)),
+            ("lengths", lengths.coalesce(1)),
+        ],
+        gen,
+        meta={
+            "params": {"id_col": id_col, "text_col": text_col},
+            "fingerprint": fp,
+            "stats": stats,
+        },
     )
-    meta = {
-        "params": {"id_col": id_col, "text_col": text_col},
-        "fingerprint": fp,
-        "stats": stats,
-    }
-    try:
-        _commit(path, live, meta, expect_generation=cur_gen, gen_tag=gen_tag)
-    except Exception:
-        for f in live:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-        raise
 
 
 def bm25_index_for(
@@ -339,17 +237,17 @@ def bm25_search_indexed(
     types the full-cycle stats aggregate produces — the score
     expression tree is shared (`bm25_term_score_expr`), so both paths
     agree far inside the rounding."""
-    meta = load_index_meta(path)
+    live, _gen, meta = scale.read_store(path)
     if meta is None:
         raise ValueError(
             f"lexical_index: no committed index at {path} — build it "
             "with bm25_index_for / build_bm25_index first"
         )
     terms = [t.lower() for t in query_terms]
-    postings = _read_part(spark, path, "postings", _POSTINGS_SCHEMA).filter(
+    postings = _read_part(spark, path, live, "postings", _POSTINGS_SCHEMA).filter(
         F.col("t").isin(terms)
     )
-    dfreq = _read_part(spark, path, "dfreq", _DFREQ_SCHEMA).filter(
+    dfreq = _read_part(spark, path, live, "dfreq", _DFREQ_SCHEMA).filter(
         F.col("t").isin(terms)
     )
     stats = spark.createDataFrame(
@@ -392,11 +290,9 @@ def bm25_index_append(
     instead of being baked into postings (contrast
     `ann_index.pq_codes_append`, where the frozen-model contract is
     the point)."""
-    from social_media_data_pipeline_spark import scale
-
     params = {"id_col": id_col, "text_col": text_col}
     path = lex_index_path(corpus_tag, params)
-    meta = load_index_meta(path)
+    live, gen, meta = scale.read_store(path)
     if meta is None or meta.get("params") != params:
         raise ValueError(
             f"bm25_index_append: no committed index for {corpus_tag!r} "
@@ -404,7 +300,7 @@ def bm25_index_append(
             "bm25_index_for first"
         )
     spark = new_docs.sparkSession
-    old_lengths = _read_part(spark, path, "lengths", _LENGTHS_SCHEMA)
+    old_lengths = _read_part(spark, path, live, "lengths", _LENGTHS_SCHEMA)
     dup = (
         new_docs.select(F.col(id_col).alias("doc_id"))
         .join(old_lengths, "doc_id", "left_semi")
@@ -421,7 +317,7 @@ def bm25_index_append(
     b_postings, b_dfreq, b_lengths, b_stats = _corpus_tables(
         new_docs, id_col, text_col
     )
-    old_dfreq = _read_part(spark, path, "dfreq", _DFREQ_SCHEMA)
+    old_dfreq = _read_part(spark, path, live, "dfreq", _DFREQ_SCHEMA)
     merged_dfreq = (
         old_dfreq.unionByName(b_dfreq)
         .groupBy("t")
@@ -429,38 +325,27 @@ def bm25_index_append(
     )
     batch_fp = _doc_fingerprint(new_docs, id_col, text_col)
     old_fp, old_stats = meta["fingerprint"], meta["stats"]
-    prev = scale._read_manifest_doc(path)
-    cur_gen = prev["generation"] if prev else None
-    gen_tag = f"g{(0 if cur_gen is None else cur_gen + 1)}-{uuid.uuid4().hex[:8]}"
-    staged = (
-        _stage_files(
-            b_postings, path, "postings", gen_tag,
-            n_buckets=postings_buckets, sort_cols=("t", "doc_id"),
-        )
-        + _stage_files(b_lengths, path, "lengths", gen_tag)
-        + _stage_files(merged_dfreq, path, "dfreq", gen_tag)
+    # batch postings and lengths append beside the live ones; only the
+    # superseded dfreq file leaves the live set (vacuum_table reclaims
+    # it — a search may still be reading it)
+    scale.commit_store(
+        path,
+        [
+            ("postings", _postings_layout(b_postings, postings_buckets)),
+            ("lengths", b_lengths.coalesce(1)),
+            ("dfreq", merged_dfreq.coalesce(1)),
+        ],
+        gen,
+        keep=[f for f in live if not os.path.basename(f).startswith("dfreq-")],
+        meta={
+            "params": params,
+            "fingerprint": {
+                "n": old_fp["n"] + batch_fp["n"],
+                "h": old_fp["h"] ^ batch_fp["h"],
+            },
+            "stats": {
+                "n": old_stats["n"] + b_stats["n"],
+                "dl_sum": old_stats["dl_sum"] + b_stats["dl_sum"],
+            },
+        },
     )
-    keep = _live_files(path, "postings") + _live_files(path, "lengths")
-    new_meta = {
-        "params": params,
-        "fingerprint": {
-            "n": old_fp["n"] + batch_fp["n"],
-            "h": old_fp["h"] ^ batch_fp["h"],
-        },
-        "stats": {
-            "n": old_stats["n"] + b_stats["n"],
-            "dl_sum": old_stats["dl_sum"] + b_stats["dl_sum"],
-        },
-    }
-    try:
-        _commit(
-            path, keep + staged, new_meta,
-            expect_generation=cur_gen, gen_tag=gen_tag,
-        )
-    except Exception:
-        for f in staged:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-        raise

@@ -22,9 +22,9 @@ through `selective_upsert` keyed on `rollup_key` (day|type) — footer
 key ranges pick the rewrite set, so a batch touching yesterday
 rewrites yesterday's file, not the multi-year table (cluster the
 store by key via the upsert's natural append pattern and the rewrite
-set stays ~touched-days-sized). First batch bootstraps with a plain
-write; the first upsert adopts the manifest-less directory — the
-`streaming/curation.py:161` convention.
+set stays ~touched-days-sized). The first batch's upsert creates
+generation 0 (a CAS, so two racing creators cannot both win); a
+manifest-less directory of state files is adopted by the first fold.
 
 The monoid state also makes the rollup a drop-in foreachBatch body
 (`rollup_stream_batch`): Structured Streaming's own incremental agg
@@ -39,11 +39,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from social_media_data_pipeline_spark import scale
+
 from .aggregates import time_bucket
 
 #: micro-unit scale for exact (order-independent) value accumulation
 _SCALE = 1_000_000
 
+# State tables are read with their schema spelled out: inferring it
+# from a parquet footer costs one Spark job per read.
 _STATE_SCHEMA = (
     "rollup_key bigint, day timestamp, event_type string, "
     "n bigint, sum_micro bigint, min_micro bigint, max_micro bigint"
@@ -138,12 +142,10 @@ def incremental_rollup_batch(batch: DataFrame, store_path: str) -> dict:
     history never enters the job) → `selective_upsert` rewrites only
     the files whose key range overlaps the touched keys. Returns
     {"rows_batch", "keys_touched"} plus the upsert's file stats
-    ("files_total"/"files_rewritten"/"rows_written") once the store
-    exists. An empty batch is a no-op (no commit, no state churn — the
-    band-store lesson)."""
+    ("files_total"/"files_rewritten"/"rows_written"; the first batch's
+    upsert creates the store). An empty batch is a no-op (no commit,
+    no state churn — the band-store lesson)."""
     from pyspark.sql import Observation
-
-    from social_media_data_pipeline_spark import scale
 
     spark = batch.sparkSession
     # rows_batch rides the partial-aggregate job as an observation on
@@ -161,27 +163,16 @@ def incremental_rollup_batch(batch: DataFrame, store_path: str) -> dict:
     keys_touched = len(touched_keys)
     if keys_touched == 0:
         return {"rows_batch": 0, "keys_touched": 0}
-    have_store = bool(scale.read_table_manifest(store_path)) or (
-        os.path.isdir(store_path)
-        and any(f.endswith(".parquet") for f in os.listdir(store_path))
-    )
-    stats: dict = {}
-    if have_store:
-        existing = spark.read.schema(_STATE_SCHEMA).parquet(store_path) \
-            if not scale.read_table_manifest(store_path) \
-            else scale.manifest_read(spark, store_path)
-        affected = existing.join(
+    merged = partial
+    files = scale.live_files(store_path)
+    if files:
+        affected = spark.read.schema(_STATE_SCHEMA).parquet(*files).join(
             partial.select("rollup_key"), "rollup_key", "left_semi"
         )
         merged = rollup_merge(affected, partial)
-        stats = scale.selective_upsert(
-            spark, store_path, merged, "rollup_key",
-            update_keys=touched_keys,
-        )
-    else:
-        # bootstrap: plain write; the first upsert adopts the
-        # manifest-less directory (streaming/curation.py convention)
-        partial.write.mode("overwrite").parquet(store_path)
+    stats = scale.selective_upsert(
+        spark, store_path, merged, "rollup_key", update_keys=touched_keys
+    )
     return {
         "rows_batch": int(_obs.get["rows"]),
         "keys_touched": keys_touched,
@@ -191,13 +182,9 @@ def incremental_rollup_batch(batch: DataFrame, store_path: str) -> dict:
 
 def read_rollup(spark: SparkSession, store_path: str) -> DataFrame:
     """The finalized rollup view over the committed state table."""
-    from social_media_data_pipeline_spark import scale
-
-    if scale.read_table_manifest(store_path):
-        state = scale.manifest_read(spark, store_path)
-    else:
-        state = spark.read.schema(_STATE_SCHEMA).parquet(store_path)
-    return rollup_finalize(state)
+    return rollup_finalize(
+        spark.read.schema(_STATE_SCHEMA).parquet(*scale.live_files(store_path))
+    )
 
 
 def rollup_stream_batch(store_path: str):
@@ -238,23 +225,6 @@ _TRANS_STATE_SCHEMA = "trans_key bigint, src string, dst string, n bigint"
 _TAIL_STATE_SCHEMA = (
     "user_id bigint, last_ts timestamp, last_event_id bigint, last_event string"
 )
-
-
-def _have_store(path: str) -> bool:
-    from social_media_data_pipeline_spark import scale
-
-    return bool(scale.read_table_manifest(path)) or (
-        os.path.isdir(path)
-        and any(f.endswith(".parquet") for f in os.listdir(path))
-    )
-
-
-def _read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    from social_media_data_pipeline_spark import scale
-
-    if scale.read_table_manifest(path):
-        return scale.manifest_read(spark, path)
-    return spark.read.schema(schema).parquet(path)
 
 
 def transition_partial(
@@ -299,17 +269,15 @@ def incremental_transition_batch(batch: DataFrame, store_path: str) -> dict:
     pairs (recorded tail → batch first, per user) merge into the
     counts table; each touched user's tail is REPLACED by their last
     batch event. Empty batch is a no-op. Returns fold stats."""
-    from social_media_data_pipeline_spark import scale
-
     spark = batch.sparkSession
     counts_path = os.path.join(store_path, "counts")
     tails_path = os.path.join(store_path, "tails")
     pairs, ends = transition_partial(batch)
-    have_tails = _have_store(tails_path)
 
     seam_pairs = 0
-    if have_tails:
-        tails = _read_state(spark, tails_path, _TAIL_STATE_SCHEMA)
+    tail_files = scale.live_files(tails_path)
+    if tail_files:
+        tails = spark.read.schema(_TAIL_STATE_SCHEMA).parquet(*tail_files)
         matched = ends.join(tails, "user_id", "left").localCheckpoint(eager=True)
         # ONE bounded collect carries every driver probe the fold
         # needs: batch row count (empty-batch no-op), seam-pair total,
@@ -385,35 +353,38 @@ def incremental_transition_batch(batch: DataFrame, store_path: str) -> dict:
     keys_touched = len(delta_rows)
     stats: dict = {}
     if keys_touched:
-        if _have_store(counts_path):
-            # the affected existing counts are a subset of the
-            # |types|²-bounded state — ONE literal-IN filtered scan
-            # collects them, the merge is exact int64 addition driver-
-            # side, and the upsert's updates become a LocalTableScan.
-            # The previous shape passed the scan⋈delta⋈agg PLAN as the
-            # updates, and every selective_upsert action (containment
-            # probe, observed write) re-ran the whole join (measured:
-            # 2.9 s vs 0.6 s for the tails upsert of MORE rows)
-            existing = _read_state(spark, counts_path, _TRANS_STATE_SCHEMA)
-            keys = [r["trans_key"] for r in delta_rows]
-            by_key = {
-                r["trans_key"]: list(r)
-                for r in existing.filter(
-                    F.col("trans_key").isin(keys)
-                ).collect()
-            }
-            merged_rows = []
-            for r in delta_rows:
-                old = by_key.get(r["trans_key"])
-                n = int(r["n"]) + (int(old[3]) if old else 0)
-                merged_rows.append((r["trans_key"], r["src"], r["dst"], n))
-            merged = spark.createDataFrame(merged_rows, _TRANS_STATE_SCHEMA)
-            stats = scale.selective_upsert(
-                spark, counts_path, merged, "trans_key", update_keys=keys
+        # the affected existing counts are a subset of the
+        # |types|²-bounded state — ONE literal-IN filtered scan collects
+        # them, the merge is exact int64 addition driver-side, and the
+        # upsert's updates become a LocalTableScan. The previous shape
+        # passed the scan⋈delta⋈agg PLAN as the updates, and every
+        # selective_upsert action (containment probe, observed write)
+        # re-ran the whole join (measured: 2.9 s vs 0.6 s for the tails
+        # upsert of MORE rows)
+        keys = [r["trans_key"] for r in delta_rows]
+        count_files = scale.live_files(counts_path)
+        by_key = {
+            r["trans_key"]: r["n"]
+            for r in (
+                spark.read.schema(_TRANS_STATE_SCHEMA)
+                .parquet(*count_files)
+                .filter(F.col("trans_key").isin(keys))
+                .collect()
+                if count_files
+                else []
             )
-        else:
-            partial = spark.createDataFrame(delta_rows, _TRANS_STATE_SCHEMA)
-            partial.write.mode("overwrite").parquet(counts_path)
+        }
+        merged = spark.createDataFrame(
+            [
+                (r["trans_key"], r["src"], r["dst"],
+                 int(r["n"]) + int(by_key.get(r["trans_key"], 0)))
+                for r in delta_rows
+            ],
+            _TRANS_STATE_SCHEMA,
+        )
+        stats = scale.selective_upsert(
+            spark, counts_path, merged, "trans_key", update_keys=keys
+        )
 
     new_tails = ends.select(
         "user_id",
@@ -421,10 +392,7 @@ def incremental_transition_batch(batch: DataFrame, store_path: str) -> dict:
         F.col("last.event_id").alias("last_event_id"),
         F.col("last.et").alias("last_event"),
     )
-    if have_tails:
-        scale.selective_upsert(spark, tails_path, new_tails, "user_id")
-    else:
-        new_tails.write.mode("overwrite").parquet(tails_path)
+    scale.selective_upsert(spark, tails_path, new_tails, "user_id")
 
     return {
         "rows_batch": rows_batch,
@@ -436,9 +404,10 @@ def incremental_transition_batch(batch: DataFrame, store_path: str) -> dict:
 
 def read_transition_counts(spark: SparkSession, store_path: str) -> DataFrame:
     """The committed (src, dst, n) transition counts."""
-    return _read_state(
-        spark, os.path.join(store_path, "counts"), _TRANS_STATE_SCHEMA
-    ).select("src", "dst", "n")
+    files = scale.live_files(os.path.join(store_path, "counts"))
+    return spark.read.schema(_TRANS_STATE_SCHEMA).parquet(*files).select(
+        "src", "dst", "n"
+    )
 
 
 def transition_stream_batch(store_path: str):

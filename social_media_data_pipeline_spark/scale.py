@@ -16,6 +16,7 @@ hold up at 1000 executors (SURVEY.md §7.1 M8 notes):
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -176,18 +177,24 @@ def file_skipping_index(spark: SparkSession, path: str, cols: Sequence[str]) -> 
 # --------------------------------------------------------------------------
 # live-file manifest: the commit primitive for in-place table mutation
 # --------------------------------------------------------------------------
-# `selective_upsert` swaps files inside a directory; without a commit
-# point, a crash between move-in and remove leaves BOTH the staged and
-# the replaced files visible to a raw directory read (transient
-# duplicate keys). The manifest closes that window: `_manifest.json`
-# lists the table's LIVE parquet files, is replaced ATOMICALLY
+# A copy-on-write mutation swaps files inside a directory; without a
+# commit point, a crash between move-in and remove leaves BOTH the
+# staged and the replaced files visible to a raw directory read
+# (transient duplicate keys). The manifest closes that window:
+# `_manifest.json` lists the table's LIVE files, is replaced ATOMICALLY
 # (tmp + os.replace — the POSIX rename guarantee), and every
 # manifest-aware reader (`live_files` → `footer_stats_index*`,
-# `pruned_read*`, `manifest_read`) sees exactly the pre-commit or the
-# post-commit snapshot, never a mix. At 100 TB this file IS the
-# transaction log entry (Delta/Iceberg keep a sequence of them; one
-# generation suffices here because the engine mutates tables only
-# through `selective_upsert`, which re-reads the manifest it wrote).
+# `pruned_read*`, `manifest_read`, `read_store`) sees exactly the
+# pre-commit or the post-commit snapshot, never a mix. At 100 TB this
+# file IS the transaction log entry; like Delta/Iceberg, every commit
+# also keeps a numbered generation (`_manifest-<n>.json`) for time
+# travel until `vacuum_table` drops it. Every store in the package —
+# the tables `selective_upsert`/`selective_delete`/`compact_table`
+# mutate, the curation and IVM state tables, the drift and spectrum
+# monoid stores, the ANN artifacts and the lexical index — writes
+# through ONE path, `commit_store`, and reads its CAS base through
+# `read_store` (the dedup band store keeps its own stamp-and-rename
+# layout).
 
 _MANIFEST = "_manifest.json"
 
@@ -229,13 +236,15 @@ def write_table_manifest(
     generation file is the atomic claim, so two writers that both read
     generation N can never both commit N+1 (one loses loudly; retry by
     re-reading the table and redoing the rewrite against the new live
-    set). All the in-package mutators (`selective_upsert`,
-    `selective_delete`, `compact_table`) pass it. Pass the
-    `EXPECT_ABSENT` sentinel when the writer read NO manifest and
-    expects to CREATE generation 0 — the O_EXCL claim then arbitrates
-    two writers racing to initialize the same store. Without
-    `expect_generation` the commit keeps the legacy last-writer-wins
-    semantics — single-writer-per-table is then the caller's contract.
+    set). The only in-package caller is `commit_store`, so every
+    in-package mutator — `selective_upsert`, `selective_delete`,
+    `compact_table`, `fold_store` (drift, spectrum), the ANN artifacts
+    and the lexical index — passes it. Pass the `EXPECT_ABSENT`
+    sentinel when the writer read NO manifest and expects to CREATE
+    generation 0 — the O_EXCL claim then arbitrates two writers racing
+    to initialize the same store. Without `expect_generation` the
+    commit keeps the legacy last-writer-wins semantics —
+    single-writer-per-table is then the caller's contract.
 
     Crash note: a writer that claimed a generation file and died before
     the pointer flip leaves an orphan `_manifest-<n>.json`; the next
@@ -311,14 +320,162 @@ def _read_manifest_doc(path: str, version: int | None = None) -> dict | None:
 
 def read_table_manifest(path: str, version: int | None = None) -> list[str] | None:
     """The table's live files (absolute) at the current commit, or at
-    historical generation `version`; None when the table has no
-    manifest (never mutated in place — the plain-directory contract)."""
+    historical generation `version`, including a bound meta JSON; None
+    when the table has no manifest (never mutated in place — the
+    plain-directory contract)."""
     import os as _os
 
     doc = _read_manifest_doc(path, version)
     if doc is None:
         return None
     return [_os.path.join(path, n) for n in doc["files"]]
+
+
+def _data_files(files: Sequence[str]) -> list[str]:
+    """Drop the meta JSON `commit_store` lists beside the data files."""
+    return [f for f in files if not f.endswith(".json")]
+
+
+# `commit_store`'s data-file names: {prefix}-g{N}-{uuid8}-{i}.parquet
+_COMMITTED_NAME = re.compile(r"-g\d+-[0-9a-f]{8}-\d+\.parquet$")
+
+
+def read_store(path: str) -> tuple[list[str], object, dict | None]:
+    """Strict manifest read of a store: (live data files, generation,
+    meta). Before generation 0 lands it answers ([], EXPECT_ABSENT,
+    None) — never `live_files`' plain-directory fallback: a racing
+    creator's renamed-in, uncommitted files already sit in the
+    directory, and a glob would count them (the double-merge hazard
+    the drift init-race test plants). `meta` is the JSON document a
+    `commit_store(meta=...)` bound to this generation, or None. The
+    generation is the CAS base to hand back to `commit_store`."""
+    import json as _json
+    import os as _os
+
+    # ONE document read: files and generation must come from the same
+    # commit, or a flip in between would hand back a stale CAS base
+    doc = _read_manifest_doc(path)
+    if doc is None:
+        return [], EXPECT_ABSENT, None
+    files = [_os.path.join(path, n) for n in doc["files"]]
+    meta = None
+    for f in files:
+        if f.endswith(".json"):
+            with open(f) as fh:
+                meta = _json.load(fh)
+    return _data_files(files), doc["generation"], meta
+
+
+def commit_store(
+    path: str,
+    frames: Sequence[tuple[str, DataFrame]],
+    expect_generation,
+    keep: Sequence[str] = (),
+    meta: dict | None = None,
+    replaced: Sequence[str] = (),
+    keep_history: bool = False,
+) -> list[str]:
+    """The one commit path of every manifest-committed store. Writes
+    each `(prefix, frame)` as the caller laid it out (range-bucketed,
+    `coalesce(1)`, ...), moves the part files in under
+    `{prefix}-g{N}-{uuid}-{i}.parquet` — N is the generation this
+    commit claims and the uuid is unique per writer, so racing writers
+    never share a name and a move can never clobber a committed file —
+    writes `meta` (when given) as `_meta-g{N}-{uuid}.json`, and
+    CAS-flips the manifest to `keep` + the new files (+ the meta)
+    against `expect_generation` (the generation `read_store` returned:
+    an int, or EXPECT_ABSENT to create generation 0).
+
+    Listing the meta IN the manifest binds it to its files: a reader
+    resolves it through the pointer (`read_store`), so a writer that
+    loses the race or crashes can never leave its stats live over
+    files it never committed. The flip is the commit point: a crash
+    before it leaves the previous generation fully live (the moved-in
+    files stay unreferenced until `vacuum_table`). A lost CAS
+    un-stages this writer's files and re-raises
+    `ConcurrentCommitError`. After a won flip the `replaced` files are
+    deleted unless `keep_history` — then earlier generations stay
+    readable via `manifest_read(version=...)` until `vacuum_table`.
+    Returns the new data files."""
+    import json as _json
+    import os as _os
+    import shutil as _shutil
+    import uuid as _uuid
+
+    gen = (
+        0 if isinstance(expect_generation, _ExpectAbsent)
+        else expect_generation + 1
+    )
+    tag = f"g{gen}-{_uuid.uuid4().hex[:8]}"
+    _os.makedirs(path, exist_ok=True)
+    # staged under a `_`-prefixed directory: Spark's file listing skips
+    # it, so a raw read of the table never sees half-written output
+    staging = _os.path.join(path, f"_staged-{tag}")
+    new: list[str] = []
+    try:
+        for k, (prefix, df) in enumerate(frames):
+            out = _os.path.join(staging, str(k))
+            df.write.mode("overwrite").parquet(out)
+            for f in sorted(_os.listdir(out)):
+                if f.endswith(".parquet"):
+                    dst = _os.path.join(path, f"{prefix}-{tag}-{len(new)}.parquet")
+                    _os.replace(_os.path.join(out, f), dst)
+                    new.append(dst)
+    finally:
+        _shutil.rmtree(staging, ignore_errors=True)
+    staged = list(new)
+    if meta is not None:
+        staged.append(_os.path.join(path, f"_meta-{tag}.json"))
+        with open(staged[-1], "w") as fh:
+            _json.dump(meta, fh)
+    try:
+        write_table_manifest(
+            path, [*keep, *staged], expect_generation=expect_generation
+        )
+    except ConcurrentCommitError:
+        # lost the race: un-stage so the winner's directory holds only
+        # what it committed, then surface the conflict
+        for f in staged:
+            _os.remove(f)
+        raise
+    if not keep_history:
+        for f in replaced:
+            _os.remove(f)
+    return new
+
+
+_MAX_COMMIT_RETRIES = 5
+
+
+def fold_store(
+    spark: SparkSession,
+    path: str,
+    prefix: str,
+    merge,
+    first: tuple | None = None,
+) -> None:
+    """Retry-and-remerge commit for a store whose rows form a
+    commutative monoid (the drift baseline counts, the spectrum Gram
+    partials): `merge(base)` folds the caller's PINNED batch into the
+    committed table `base` (None before generation 0), and the merged
+    table replaces the whole (small) store as one file. Two folders
+    that read the same generation both merge; the CAS lets only one
+    flip, and the loser re-reads the NEW live table and re-merges —
+    the fold is commutative, so every batch lands exactly once.
+    `first` = (base, generation) from the caller's own `read_store`
+    saves the first re-read (one parquet schema job)."""
+    for attempt in range(_MAX_COMMIT_RETRIES):
+        if first is None:
+            files, gen, _ = read_store(path)
+            first = (spark.read.parquet(*files) if files else None, gen)
+        base, gen = first
+        try:
+            commit_store(path, [(prefix, merge(base).coalesce(1))], gen)
+            return
+        except ConcurrentCommitError:
+            if attempt == _MAX_COMMIT_RETRIES - 1:
+                raise
+            first = None
 
 
 def manifest_versions(path: str) -> list[int]:
@@ -339,7 +496,8 @@ def vacuum_table(
     path: str, keep_generations: int = 1, grace_seconds: float = 3600.0
 ) -> dict:
     """Delta-VACUUM analog: drop manifest generations beyond the newest
-    `keep_generations` and delete data files no kept generation (nor
+    `keep_generations` and delete data files — and the meta JSONs
+    `commit_store` binds to a generation — that no kept generation (nor
     the current pointer) references. After a vacuum, time travel is
     bounded to the kept window — that is the documented trade the
     retention knob buys. Returns counts for alerting.
@@ -376,7 +534,12 @@ def vacuum_table(
     kept_young = 0
     cutoff = _time.time() - grace_seconds
     for f in sorted(_os.listdir(path)):
-        if f.endswith(".parquet") and f not in referenced:
+        # data files, and the meta JSONs `commit_store` binds to a
+        # generation (every superseded commit leaves one behind)
+        dead = f.endswith(".parquet") or (
+            f.endswith(".json") and not f.startswith("_manifest")
+        )
+        if dead and f not in referenced:
             fp = _os.path.join(path, f)
             if _os.path.getmtime(fp) > cutoff:
                 kept_young += 1  # possibly an in-flight writer's move-in
@@ -393,16 +556,23 @@ def vacuum_table(
 
 def live_files(path: str) -> list[str]:
     """Live parquet files of a table directory: the manifest when one
-    exists, else every *.parquet in the directory."""
+    exists, else every *.parquet in the directory; [] when nothing
+    exists at `path`."""
     import glob as _glob
     import os as _os
 
     manifest = read_table_manifest(path)
     if manifest is not None:
-        return manifest
+        return _data_files(manifest)
     if _os.path.isdir(path):
-        return sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-    return [path]
+        # a manifest-less directory is a plain table — minus files named
+        # by `commit_store`: no manifest lists them, so they are a
+        # racing creator's uncommitted move-in, not table rows
+        return sorted(
+            f for f in _glob.glob(_os.path.join(path, "*.parquet"))
+            if not _COMMITTED_NAME.search(f)
+        )
+    return [path] if _os.path.exists(path) else []
 
 
 def manifest_read(
@@ -422,7 +592,7 @@ def manifest_read(
     column, because non-rewritten files still carry the old schema and
     a plain read resolves columns from one footer only."""
     if version is not None:
-        files = read_table_manifest(path, version)
+        files = _data_files(read_table_manifest(path, version))
     else:
         files = live_files(path)
     if not files:
@@ -858,6 +1028,21 @@ def _small_table_rewrite_set(
     )
 
 
+def _cas_base(path: str) -> tuple[list[str], object]:
+    """(live files, CAS generation) for a copy-on-write mutation, from
+    ONE manifest read. A plain directory table is bootstrapped to
+    generation 0 here — committing its current live set changes
+    nothing for readers, and makes the later move-in invisible to the
+    glob fallback. Nothing at `path` yields ([], EXPECT_ABSENT)."""
+    files, gen, _ = read_store(path)
+    if gen is EXPECT_ABSENT:
+        files = live_files(path)
+        if files:
+            commit_store(path, [], EXPECT_ABSENT, keep=files)
+            gen = 0
+    return files, gen
+
+
 def selective_upsert(
     spark: SparkSession,
     path: str,
@@ -893,15 +1078,36 @@ def selective_upsert(
     kept-rows anti join run with zero extra jobs (bisect containment +
     a literal-IN filter); the caller is responsible for the list
     matching `updates`' keys exactly.
-    """
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
 
-    before = live_files(path)
+    On a path that holds no table the upsert CREATES generation 0 from
+    `updates` with a CAS (a racing creator loses with
+    `ConcurrentCommitError`), at the cost of the plain write it
+    replaces: one write job, no footer read, schema merge or
+    containment probe.
+    """
+    from pyspark.sql import Observation
+
+    # CAS base (r9): the generation this writer's `before` list was
+    # read at — the final commit refuses if another writer moved it.
+    before, gen0 = _cas_base(path)
     # the footer index enumerates exactly the live files, so the file
     # total is the manifest list's length — no counting job
     files_total = len(before)
+    # rows_written rides the write job as an observation — the staged
+    # table is never re-read (the previous shape re-scanned the full
+    # staged output just for this stat)
+    _obs = Observation()
+    if not before:
+        commit_store(
+            path,
+            [("upsert", updates.observe(_obs, F.count(F.lit(1)).alias("rows")))],
+            gen0,
+        )
+        return {
+            "files_total": 0,
+            "files_rewritten": 0,
+            "rows_written": int(_obs.get["rows"]),
+        }
     small = _small_table_rewrite_set(
         spark, path, updates, key, before, update_keys=update_keys
     )
@@ -926,15 +1132,6 @@ def selective_upsert(
             r["file"]
             for r in upsert_rewrite_set(ranges_df, updates, key).collect()
         )
-    # CAS base (r9): the generation this writer's `before` list was
-    # read at — the final commit refuses if another writer moved it.
-    # Plain directory tables are bootstrapped to generation 0 HERE
-    # (committing the current live set changes nothing for readers,
-    # and makes the later move-in invisible to the glob fallback).
-    _doc0 = _read_manifest_doc(path)
-    gen0 = (
-        _doc0["generation"] if _doc0 else write_table_manifest(path, before)
-    )
     # mergeSchema so an earlier evolved column counts as part of the
     # target schema (a plain read resolves one footer and could flag
     # it as "extra" on the next upsert). Driver-sized tables read the
@@ -988,56 +1185,26 @@ def selective_upsert(
         merged = updates
     else:
         merged = updates.select(*target_cols)
-    staging = path.rstrip("/") + f"__upsert_{_uuid.uuid4().hex[:8]}"
-    # rows_written rides the write job as an observation — the staged
-    # table is never re-read (the previous shape re-scanned the full
-    # staged output just for this stat)
-    from pyspark.sql import Observation
-
-    _obs = Observation()
-    merged.observe(_obs, F.count(F.lit(1)).alias("rows")).write.mode(
-        "overwrite"
-    ).parquet(staging)
-    rows_written = int(_obs.get["rows"])
-    # swap: (1) staged files move IN (invisible to manifest readers —
-    # not yet committed), (2) the manifest flips atomically to the new
-    # live set — THE commit point, (3) replaced files are deleted
-    # (post-commit cleanup; a crash before it leaves dead files the
-    # manifest no longer lists). Crash at any point = pre- or
-    # post-commit snapshot for manifest readers, never duplicates.
-    moved = []
-    for f in sorted(_os.listdir(staging)):
-        if f.endswith(".parquet"):
-            dst = _os.path.join(
-                path, f"upsert-{_uuid.uuid4().hex[:8]}-{len(moved)}.parquet"
-            )
-            _shutil.move(_os.path.join(staging, f), dst)
-            moved.append(dst)
+    # the commit moves the staged files in, flips the manifest (THE
+    # commit point) and only then deletes the replaced files — a crash
+    # at any point leaves manifest readers on the pre- or post-commit
+    # snapshot, never duplicates. keep_history=True leaves replaced
+    # files on disk so earlier generations stay readable
+    # (manifest_read(version=)); reclaim them later with
+    # vacuum_table(path, keep_generations=K)
     rewritten = set(rewrite)
-    try:
-        write_table_manifest(
-            path,
-            [f for f in before if f not in rewritten] + moved,
-            expect_generation=gen0,
-        )
-    except ConcurrentCommitError:
-        # lost the race: un-stage our files so the winner's live set
-        # stays exactly what it committed, then surface the conflict
-        for f in moved:
-            _os.remove(f)
-        _shutil.rmtree(staging, ignore_errors=True)
-        raise
-    if not keep_history:
-        # keep_history=True leaves replaced files on disk so earlier
-        # manifest generations stay readable (manifest_read(version=));
-        # reclaim them later with vacuum_table(path, keep_generations=K)
-        for f in rewrite:
-            _os.remove(f)
-    _shutil.rmtree(staging, ignore_errors=True)
+    commit_store(
+        path,
+        [("upsert", merged.observe(_obs, F.count(F.lit(1)).alias("rows")))],
+        gen0,
+        keep=[f for f in before if f not in rewritten],
+        replaced=rewrite,
+        keep_history=keep_history,
+    )
     return {
         "files_total": files_total,
         "files_rewritten": len(rewrite),
-        "rows_written": rows_written,
+        "rows_written": int(_obs.get["rows"]),
     }
 
 
@@ -1066,11 +1233,9 @@ def selective_delete(
 
     Returns {"files_total", "files_rewritten", "rows_deleted"}.
     """
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    before = live_files(path)
+    # CAS base (r9): same contract as selective_upsert — refuse the
+    # final flip if another writer committed since this read
+    before, gen0 = _cas_base(path)
     files_total = len(before)
     del_keys = keys.select(key).distinct()
     n_rows_by_file: dict[str, int] | None = None
@@ -1097,13 +1262,6 @@ def selective_delete(
         )
     if not rewrite:
         return {"files_total": files_total, "files_rewritten": 0, "rows_deleted": 0}
-    # CAS base (r9): same contract as selective_upsert — bootstrap
-    # plain tables to generation 0 up front, refuse the final flip if
-    # another writer committed since this read
-    _doc0 = _read_manifest_doc(path)
-    gen0 = (
-        _doc0["generation"] if _doc0 else write_table_manifest(path, before)
-    )
     # mergeSchema: the rewrite set can mix schemas after an
     # evolve_schema=True upsert (same hazard as selective_upsert)
     old = spark.read.option("mergeSchema", "true").parquet(*rewrite)
@@ -1118,33 +1276,16 @@ def selective_delete(
             .collect()[0][0]
         )
     n_kept = kept.count()
-    moved: list[str] = []
-    staging = path.rstrip("/") + f"__delete_{_uuid.uuid4().hex[:8]}"
-    if n_kept > 0:
-        kept.write.mode("overwrite").parquet(staging)
-        for f in sorted(_os.listdir(staging)):
-            if f.endswith(".parquet"):
-                dst = _os.path.join(
-                    path, f"delete-{_uuid.uuid4().hex[:8]}-{len(moved)}.parquet"
-                )
-                _shutil.move(_os.path.join(staging, f), dst)
-                moved.append(dst)
+    # a file whose every row is deleted simply leaves the manifest
     rewritten = set(rewrite)
-    try:
-        write_table_manifest(
-            path,
-            [f for f in before if f not in rewritten] + moved,
-            expect_generation=gen0,
-        )
-    except ConcurrentCommitError:
-        for f in moved:
-            _os.remove(f)
-        _shutil.rmtree(staging, ignore_errors=True)
-        raise
-    if not keep_history:
-        for f in rewrite:
-            _os.remove(f)
-    _shutil.rmtree(staging, ignore_errors=True)
+    commit_store(
+        path,
+        [("delete", kept)] if n_kept > 0 else [],
+        gen0,
+        keep=[f for f in before if f not in rewritten],
+        replaced=rewrite,
+        keep_history=keep_history,
+    )
     return {
         "files_total": files_total,
         "files_rewritten": len(rewrite),
@@ -1172,13 +1313,13 @@ def compact_table(
     file. Files ≥ target, and lone leftovers, are left byte-identical
     — compaction never rewrites what is already well-sized. Each
     group's rewrite is an independent bounded job (a scheduler can run
-    groups in parallel; here they run sequentially), staged OUTSIDE
-    the table directory, then: staged files move in, ONE manifest flip
-    commits every group atomically, replaced files are deleted
+    groups in parallel; here they run sequentially), then
+    `commit_store` moves the staged files in, ONE manifest flip
+    commits every group atomically, and replaced files are deleted
     post-commit (or kept when `keep_history=True`, readable via
     `manifest_read(version=...)` until `vacuum_table`). A crash
     anywhere leaves manifest readers on the exact pre- or post-commit
-    snapshot — the `selective_upsert` guarantee, inherited by reusing
+    snapshot — the `selective_upsert` guarantee, inherited by sharing
     its commit path.
 
     `sort_cols` switches the rewrite to a RANGE-CLUSTERED compaction
@@ -1199,18 +1340,12 @@ def compact_table(
     "bytes_compacted"}.
     """
     import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
 
     if target_bytes <= 0:
         raise ValueError(f"target_bytes must be > 0, got {target_bytes}")
-    before = live_files(path)
     # CAS base (r9): compaction races ingest at 100 TB — refuse the
     # flip if an upsert/delete committed since this read
-    _doc0 = _read_manifest_doc(path)
-    gen0 = (
-        _doc0["generation"] if _doc0 else write_table_manifest(path, before)
-    )
+    before, gen0 = _cas_base(path)
     sizes = {f: _os.path.getsize(f) for f in before}
     small = sorted(
         (f for f in before if sizes[f] < target_bytes), key=lambda f: sizes[f]
@@ -1238,11 +1373,8 @@ def compact_table(
             "groups_compacted": 0,
             "bytes_compacted": 0,
         }
-    staging = path.rstrip("/") + f"__compact_{_uuid.uuid4().hex[:8]}"
-    _os.makedirs(staging, exist_ok=True)
-    staged: list[str] = []
-    for i, g in enumerate(groups):
-        gdir = _os.path.join(staging, f"g{i}")
+    frames = []
+    for g in groups:
         # mergeSchema: after selective_upsert(..., evolve_schema=True)
         # files in one group can disagree on columns — a plain read
         # resolves ONE footer and would silently drop the evolved
@@ -1255,38 +1387,16 @@ def compact_table(
             )
         else:
             gdf = gread.coalesce(1)
-        gdf.write.mode("overwrite").parquet(gdir)
-        parts = [f for f in sorted(_os.listdir(gdir)) if f.endswith(".parquet")]
-        if not sort_cols:
-            assert len(parts) == 1, parts
-        for j, p in enumerate(parts):
-            src = _os.path.join(gdir, p)
-            dst = _os.path.join(
-                staging, f"compact-{_uuid.uuid4().hex[:8]}-{i}-{j}.parquet"
-            )
-            _shutil.move(src, dst)
-            staged.append(dst)
-    moved = []
-    for f in staged:
-        dst = _os.path.join(path, _os.path.basename(f))
-        _shutil.move(f, dst)
-        moved.append(dst)
+        frames.append(("compact", gdf))
     replaced = {f for g in groups for f in g}
-    try:
-        write_table_manifest(
-            path,
-            [f for f in before if f not in replaced] + moved,
-            expect_generation=gen0,
-        )
-    except ConcurrentCommitError:
-        for f in moved:
-            _os.remove(f)
-        _shutil.rmtree(staging, ignore_errors=True)
-        raise
-    if not keep_history:
-        for f in sorted(replaced):
-            _os.remove(f)
-    _shutil.rmtree(staging, ignore_errors=True)
+    moved = commit_store(
+        path,
+        frames,
+        gen0,
+        keep=[f for f in before if f not in replaced],
+        replaced=sorted(replaced),
+        keep_history=keep_history,
+    )
     return {
         "files_before": len(before),
         "files_after": len(before) - len(replaced) + len(moved),

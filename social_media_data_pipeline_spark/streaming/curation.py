@@ -47,8 +47,6 @@ is node-count-sized no matter how many historic pairs produced it.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (callers build predicates)
 
@@ -136,7 +134,7 @@ def curate_batch(
         return _counts()
     if n_gated == 0:
         return _counts(batch=n_batch)
-    if os.path.exists(table_path) and scale.live_files(table_path):
+    if scale.live_files(table_path):
         history = scale.manifest_read(spark, table_path)
     else:
         history = gated.limit(0)
@@ -160,10 +158,9 @@ def curate_batch(
     )
     n_out = int(_s_obs.get["m"])
     if n_out > 0:
-        if os.path.exists(table_path) and scale.live_files(table_path):
-            scale.selective_upsert(spark, table_path, survivors, id_col)
-        else:
-            survivors.write.mode("overwrite").parquet(table_path)
+        # the first commit creates generation 0 (a CAS, like every later
+        # upsert)
+        scale.selective_upsert(spark, table_path, survivors, id_col)
     n_labels_changed = 0
     if labels_path is not None and n_flagged > 0:
         from social_media_data_pipeline_spark.functions import graph
@@ -172,11 +169,10 @@ def curate_batch(
         pairs = flagged.select(
             F.col(id_col).alias("id_a"), F.col("dup_of").alias("id_b")
         )
-        have_store = os.path.exists(labels_path) and scale.live_files(
-            labels_path
-        )
         old_labels = (
-            scale.manifest_read(spark, labels_path) if have_store else None
+            scale.manifest_read(spark, labels_path)
+            if scale.live_files(labels_path)
+            else None
         )
         updated = graph.incremental_components(old_labels, pairs)
         # commit only rows whose label moved (plus brand-new nodes):
@@ -199,13 +195,7 @@ def curate_batch(
         release_pins(updated)
         n_labels_changed = int(_c_obs.get["m"])
         if n_labels_changed > 0:
-            if have_store:
-                scale.selective_upsert(spark, labels_path, changed, "node")
-            else:
-                # bootstrap mirrors the curated table: plain write,
-                # first upsert adopts it (live_files globs manifest-less
-                # directories)
-                changed.write.mode("overwrite").parquet(labels_path)
+            scale.selective_upsert(spark, labels_path, changed, "node")
     spectrum_info: dict = {}
     if (
         spectrum_path is not None

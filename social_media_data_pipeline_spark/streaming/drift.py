@@ -18,16 +18,16 @@ time). Each micro-batch:
 A batch's drift is judged against everything seen BEFORE it (the same
 "first batch has no baseline" contract as the batch operator), and the
 store update is idempotent per batch id when the caller wires
-checkpointing — the counts table commits through the same
-`write_table_manifest` flip as every other store.
+checkpointing — the counts table commits through `scale.fold_store`,
+the CAS retry-and-remerge path the spectrum store shares.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from social_media_data_pipeline_spark import scale
 
 
 def drift_batch(
@@ -43,8 +43,6 @@ def drift_batch(
     unknown, not zero), then merges the batch's counts into the store.
     Returns a MATERIALIZED (collected-to-local) DataFrame so callers
     read it after the store has moved on."""
-    from social_media_data_pipeline_spark import scale
-
     g = list(group_cols)
     bin_expr = (
         F.floor(F.col(value_col) / F.lit(bin_width)).cast("long").alias("bin")
@@ -55,7 +53,14 @@ def drift_batch(
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=True)
     )
-    base, base_gen = _read_baseline(spark, baseline_path, counts)
+    # the baseline is read STRICTLY through the manifest (read_store):
+    # before generation 0 lands, a racing monitor's renamed-in counts
+    # files already sit in the directory, and a glob would count them
+    files, base_gen, _ = scale.read_store(baseline_path)
+    stored = spark.read.parquet(*files) if files else None
+    base = (counts.limit(0) if stored is None else stored).withColumnRenamed(
+        "c", "b"
+    )
     joined = counts.join(base, [*g, "bin"], "full_outer").fillna(
         0, subset=["c", "b"]
     )
@@ -84,97 +89,18 @@ def drift_batch(
     # commutative monoid — the same mergeability the ANN fingerprint
     # and KMV/HLL sketches lean on). CAS + retry: two monitors sharing
     # one store both read generation N and both merge; without the
-    # expect_generation guard the second manifest flip would silently
-    # DROP the first batch's counts from the baseline forever. On a
-    # lost CAS the loser un-stages, re-reads the NEW live baseline and
-    # re-merges its (localCheckpoint-pinned) batch counts — counts are
-    # commutative, so retried merges land every batch exactly once.
-    for attempt in range(_MAX_COMMIT_RETRIES):
-        merged = (
-            base.select(*g, "bin", F.col("b").alias("c"))
-            .unionByName(counts)
-            .groupBy(*g, "bin")
+    # CAS the second manifest flip would silently DROP the first
+    # batch's counts from the baseline forever. fold_store re-merges
+    # the (localCheckpoint-pinned) batch counts against the NEW live
+    # baseline on a lost CAS — every batch lands exactly once.
+    scale.fold_store(
+        spark,
+        baseline_path,
+        "counts",
+        lambda prev: counts if prev is None else (
+            prev.unionByName(counts).groupBy(*g, "bin")
             .agg(F.sum("c").alias("c"))
-        )
-        try:
-            _commit_counts(spark, baseline_path, merged, base_gen)
-            return result
-        except scale.ConcurrentCommitError:
-            if attempt == _MAX_COMMIT_RETRIES - 1:
-                raise
-            base, base_gen = _read_baseline(spark, baseline_path, counts)
-    return result
-
-
-_MAX_COMMIT_RETRIES = 5
-
-
-def _read_baseline(
-    spark: SparkSession, baseline_path: str, counts: DataFrame
-):
-    """(baseline counts as column `b`, live generation) — generation is
-    the `EXPECT_ABSENT` sentinel when no manifest exists yet, so even
-    the FIRST commit is a CAS (two monitors racing to initialize the
-    store arbitrate on the generation-0 O_EXCL claim).
-
-    The store is read STRICTLY through the manifest — never
-    `live_files`' plain-directory fallback: before generation 0 lands,
-    a concurrent writer's just-renamed (uncommitted) count files sit in
-    the directory, and the glob fallback would count them as baseline —
-    the double-merge hazard the init-race test plants."""
-    from social_media_data_pipeline_spark import scale
-
-    files = (
-        scale.read_table_manifest(baseline_path)
-        if os.path.exists(baseline_path)
-        else None
+        ),
+        first=(stored, base_gen),
     )
-    if files:
-        base = spark.read.parquet(*files)
-        gen = scale._read_manifest_doc(baseline_path)["generation"]
-    else:
-        base = counts.limit(0).withColumnRenamed("c", "b")
-        gen = scale.EXPECT_ABSENT
-    base = base.withColumnRenamed("c", "b") if "c" in base.columns else base
-    return base, gen
-
-
-def _commit_counts(
-    spark: SparkSession,
-    path: str,
-    merged: DataFrame,
-    expect_generation: int | None,
-) -> None:
-    """The baseline store keys on (group…, bin) — rewrite the whole
-    (tiny, bins×groups-sized) table atomically: stage new files, flip
-    the manifest with a CAS against the generation the merge was
-    computed from (`lexical_index._commit` discipline). A lost CAS
-    un-stages this writer's files and raises `ConcurrentCommitError`
-    so the caller can re-merge against the new live set."""
-    import glob as _glob
-    import uuid as _uuid
-
-    from social_media_data_pipeline_spark import scale
-
-    tag = _uuid.uuid4().hex[:8]
-    staged = os.path.join(path, f"_staged-{tag}")
-    merged.coalesce(1).write.mode("overwrite").parquet(staged)
-    live = []
-    for i, f in enumerate(sorted(_glob.glob(os.path.join(staged, "*.parquet")))):
-        dst = os.path.join(path, f"counts-{tag}-{i}.parquet")
-        os.replace(f, dst)
-        live.append(dst)
-    import shutil
-
-    shutil.rmtree(staged)
-    try:
-        scale.write_table_manifest(
-            path, live, expect_generation=expect_generation
-        )
-    except scale.ConcurrentCommitError:
-        for f in live:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-        raise
+    return result

@@ -12,10 +12,10 @@ accumulated covariance is the signal (eigenvalue shifts = the
 embedding model or the corpus moved), and `pca.pca_components`-style
 driver eigh reads it at any time.
 
-Store layout/commit discipline: identical to `streaming/drift.py` —
-counts files under one manifest, CAS flip with `expect_generation`
-(EXPECT_ABSENT for generation 0) and retry-and-remerge on a lost
-race, baseline read STRICTLY through the manifest.
+Store layout/commit discipline: the drift baseline's —
+`scale.fold_store` rewrites the whole store as one `gram-` file under
+a CAS manifest flip (EXPECT_ABSENT for generation 0) and re-merges on
+a lost race; reads go STRICTLY through the manifest (`scale.read_store`).
 
 Overflow discipline: a single BATCH's Gram pass stays int64 (the
 covariance_micro per-partition headroom bound applies to each
@@ -30,27 +30,10 @@ column. `n` stays BIGINT (it counts rows, not products).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_MAX_COMMIT_RETRIES = 5
-
-
-def _read_partials(spark: SparkSession, store: str):
-    """(partials df | None, generation-or-EXPECT_ABSENT) — manifest-
-    strict read (the drift lesson: the glob fallback would count a
-    racing writer's uncommitted files)."""
-    from social_media_data_pipeline_spark import scale
-
-    files = (
-        scale.read_table_manifest(store) if os.path.exists(store) else None
-    )
-    if files:
-        doc = scale._read_manifest_doc(store)
-        return spark.read.parquet(*files), doc["generation"]
-    return None, scale.EXPECT_ABSENT
+from social_media_data_pipeline_spark import scale
 
 
 def spectrum_batch(
@@ -91,30 +74,22 @@ def fold_partials(
     `spectrum_batch`, exposed so callers that already computed (and
     inspected) the batch's partials fold the SAME frame they measured
     (`spectrum_drift_alarm`)."""
-    from social_media_data_pipeline_spark import scale
-
     # widen the batch's int64 partials to the store's DECIMAL(38,0)
     # BEFORE any fold: the store's lifetime sums outgrow int64 (see
     # module docstring), and sum(decimal(38,0)) stays decimal(38,0)
     batch_dec = batch_partials.withColumn(
         "sxy", F.col("sxy").cast("decimal(38,0)")
     )
-    base, gen = _read_partials(spark, store)
-    for attempt in range(_MAX_COMMIT_RETRIES):
-        merged = (
-            batch_dec
-            if base is None
-            else base.unionByName(batch_dec)
+    scale.fold_store(
+        spark,
+        store,
+        "gram",
+        lambda base: batch_dec if base is None else (
+            base.unionByName(batch_dec)
             .groupBy("i", "j")
             .agg(F.sum("sxy").alias("sxy"), F.sum("n").alias("n"))
-        )
-        try:
-            _commit(spark, store, merged, gen)
-            return
-        except scale.ConcurrentCommitError:
-            if attempt == _MAX_COMMIT_RETRIES - 1:
-                raise
-            base, gen = _read_partials(spark, store)
+        ),
+    )
 
 
 def _gram_partials(df: DataFrame, vec_col: str, d: int) -> DataFrame:
@@ -125,44 +100,14 @@ def _gram_partials(df: DataFrame, vec_col: str, d: int) -> DataFrame:
     return _pca.gram_partials(df, vec_col, d)
 
 
-def _commit(
-    spark: SparkSession, store: str, merged: DataFrame, expect_generation
-) -> None:
-    import glob as _glob
-    import shutil
-    import uuid as _uuid
-
-    from social_media_data_pipeline_spark import scale
-
-    tag = _uuid.uuid4().hex[:8]
-    staged = os.path.join(store, f"_staged-{tag}")
-    merged.coalesce(1).write.mode("overwrite").parquet(staged)
-    live = []
-    for i, f in enumerate(sorted(_glob.glob(os.path.join(staged, "*.parquet")))):
-        dst = os.path.join(store, f"gram-{tag}-{i}.parquet")
-        os.replace(f, dst)
-        live.append(dst)
-    shutil.rmtree(staged)
-    try:
-        scale.write_table_manifest(
-            store, live, expect_generation=expect_generation
-        )
-    except scale.ConcurrentCommitError:
-        for f in live:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-        raise
-
-
 def covariance_from_store(spark: SparkSession, store: str) -> DataFrame:
     """(i, j, cov) from the accumulated store — the SAME fixed-order
     double finalize as `covariance_micro`, so the streaming-folded
     result is bit-identical to a batch recompute over all data."""
-    base, _gen = _read_partials(spark, store)
-    if base is None:
+    files, _gen, _meta = scale.read_store(store)
+    if not files:
         raise ValueError(f"spectrum: no committed store at {store}")
+    base = spark.read.parquet(*files)
     n_total = base.filter((F.col("i") == 0) & (F.col("j") == -1)).select(
         F.col("n").alias("__n")
     )
@@ -252,11 +197,12 @@ def spectrum_drift_alarm(
         return {"drift": None, "alarm": False, "folded": 0}
     n_b, _mean_b, cov_b = pca.cov_from_gram_rows(batch_rows)
 
-    base, _gen = _read_partials(spark, store)
+    files, _gen, _meta = scale.read_store(store)
     drift = None
     alarm = False
-    if base is not None:
-        hist_rows = base.collect()  # bounded store: d(d+1)/2 + d + 1
+    if files:
+        # bounded store: d(d+1)/2 + d + 1 rows
+        hist_rows = spark.read.parquet(*files).collect()
         _n_h, _mean_h, cov_h = pca.cov_from_gram_rows(hist_rows)
         import numpy as np
 

@@ -21,3 +21,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say out loud what the fast gate skipped: pytest.ini's default
+    `-m "not slow"` deselects the @slow suites without a word."""
+    if config.option.markexpr.strip() != "not slow":
+        return
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow")
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f'{len(slow)} @slow tests deselected by -m "not slow"; '
+            'full lane: python -m pytest tests/ -q -m "slow or not slow"'
+        )

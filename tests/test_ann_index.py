@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from social_media_data_pipeline_spark import scale
 from social_media_data_pipeline_spark.functions import ann_index, kmeans
 
 
@@ -38,12 +39,11 @@ class TestIvfIndexLifecycle:
             {"k": 4, "iters": 2, "id_col": "vec_id", "vec_col": "embedding"},
         )
         assert os.path.exists(os.path.join(path, "_manifest.json"))
-        # second call must be a cache hit (no retrain): the meta file's
-        # mtime is the cheapest train-detector
-        meta = os.path.join(path, ann_index._META)
-        t0 = os.path.getmtime(meta)
+        # second call must be a cache hit (no retrain): an unchanged
+        # manifest generation is the cheapest train-detector
+        g0 = scale.read_store(path)[1]
         c2 = ann_index.ivf_centroids_for(emb, tag, k=4, iters=2)
-        assert os.path.getmtime(meta) == t0
+        assert scale.read_store(path)[1] == g0
         # cache path is bit-identical to a fresh in-process train
         fresh = kmeans.kmeans_centroids(emb, k=4, iters=2)
         as_rows = lambda df: sorted(  # noqa: E731
@@ -173,6 +173,7 @@ class TestTrainCommitSafety:
         ann_index.ivf_centroids_for(emb, tag, k=4, iters=2)
         path = ann_index.ivf_index_path(tag, params)
         live0 = sorted(scale.read_table_manifest(path))
+        meta0 = ann_index._load_meta(path)
         # simulate a writer that lands between this trainer's manifest
         # read and its commit: steal the CAS by bumping the pointer
         # from inside the fingerprint scan (which train_ivf_index runs
@@ -206,6 +207,9 @@ class TestTrainCommitSafety:
         assert sorted(scale.read_table_manifest(path)) == live0
         for f in live0:
             assert os.path.exists(os.path.join(path, os.path.basename(f)))
+        # the loser's params/fingerprint never went live either: the
+        # meta is committed with its files, not ahead of the flip
+        assert ann_index._load_meta(path) == meta0
 
 
 class TestPqCodebookLifecycle:
@@ -225,12 +229,11 @@ class TestPqCodebookLifecycle:
         }
         path = ann_index.pq_index_path(tag, params)
         assert os.path.exists(os.path.join(path, "_manifest.json"))
-        meta = os.path.join(path, ann_index._META)
-        t0 = os.path.getmtime(meta)
+        g0 = scale.read_store(path)[1]
         cb2 = ann_index.pq_residual_codebook_for(
             emb, tag, ivf_k=4, ivf_iters=2, m=2, ksub=4, iters=2
         )
-        assert os.path.getmtime(meta) == t0, "second call must cache-hit"
+        assert scale.read_store(path)[1] == g0, "second call must cache-hit"
         # bit-identical to a fresh in-process train on the same
         # residuals (float lists compare exactly: micro-int/1e6 doubles
         # round-trip parquet bit-for-bit)
@@ -289,10 +292,9 @@ class TestPqCodesLifecycle:
         codes1 = ann_index.pq_codes_for(emb, tag, **kw)
         params = {**kw, "id_col": "vec_id", "vec_col": "embedding"}
         path = ann_index.pq_codes_path(tag, params)
-        meta = os.path.join(path, ann_index._META)
-        t0 = os.path.getmtime(meta)
+        g0 = scale.read_store(path)[1]
         codes2 = ann_index.pq_codes_for(emb, tag, **kw)
-        assert os.path.getmtime(meta) == t0, "second call must cache-hit"
+        assert scale.read_store(path)[1] == g0, "second call must cache-hit"
         # identical to an inline encode with the same artifacts
         cents = ann_index.ivf_centroids_for(emb, tag, k=4, iters=2)
         cb = ann_index.pq_residual_codebook_for(emb, tag, **kw)
@@ -387,12 +389,10 @@ class TestPqCodesAppend:
         # (count, bit_xor) merge == a fresh scan of the grown corpus
         assert meta["fingerprint"] == ann_index.corpus_fingerprint(full)
         # and a validating pq_codes_for read against the grown corpus
-        # cache-hits (no re-encode): meta mtime unchanged
-        t0 = os.path.getmtime(os.path.join(path, ann_index._META))
+        # cache-hits (no re-encode): manifest generation unchanged
+        g0 = scale.read_store(path)[1]
         got = ann_index.pq_codes_for(full, tag, **kw)
-        assert os.path.getmtime(
-            os.path.join(path, ann_index._META)
-        ) == t0
+        assert scale.read_store(path)[1] == g0
         assert got.count() == 64
 
     def test_append_without_base_refused(self, spark):
@@ -417,10 +417,9 @@ class TestOpqRotationLifecycle:
             tag, {"m": 4, "id_col": "vec_id", "vec_col": "embedding"}
         )
         assert os.path.exists(os.path.join(path, "_manifest.json"))
-        meta = os.path.join(path, ann_index._META)
-        t0 = os.path.getmtime(meta)
+        g0 = scale.read_store(path)[1]
         m2, r2 = ann_index.opq_rotation_for(emb, tag, m=4)
-        assert os.path.getmtime(meta) == t0  # cache hit, no retrain
+        assert scale.read_store(path)[1] == g0  # cache hit, no retrain
         fresh_mean, fresh_r = pca.opq_rotation(emb, m=4)
         # persisted doubles round-trip parquet bit-exactly
         assert np.array_equal(m1, fresh_mean) and np.array_equal(m2, fresh_mean)
@@ -440,15 +439,11 @@ class TestOpqRotationLifecycle:
         path = ann_index.opq_index_path(
             tag, {"m": 4, "id_col": "vec_id", "vec_col": "embedding"}
         )
-        meta = os.path.join(path, ann_index._META)
-        t0 = os.path.getmtime(meta)
+        g0 = scale.read_store(path)[1]
         _, r2 = ann_index.opq_rotation_for(changed, tag, m=4)
-        assert os.path.getmtime(meta) != t0  # fingerprint miss retrained
+        assert scale.read_store(path)[1] != g0  # fingerprint miss retrained
         # scaling is isotropic so the basis may persist, but the meta
         # must now carry the NEW fingerprint
-        import json as _json
-
-        with open(meta) as fh:
-            fp = _json.load(fh)["fingerprint"]
+        fp = ann_index._load_meta(path)["fingerprint"]
         assert fp == ann_index.corpus_fingerprint(changed)
         assert r2.shape == r1.shape

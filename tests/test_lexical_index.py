@@ -287,5 +287,13 @@ class TestCommitSafety:
         # the superseded generation-0 dfreq file is an orphan → deleted
         assert n_parquet_after < n_parquet_before
         assert stats["dropped_files"] >= 1
+        # and so is the superseded generation's meta: only the live one
+        # (listed in the manifest) survives
+        metas = [
+            f for f in os.listdir(path)
+            if f.endswith(".json") and not f.startswith("_manifest")
+        ]
+        assert len(metas) == 1
+        assert os.path.join(path, metas[0]) in scale.read_table_manifest(path)
         after = lx.bm25_search_indexed(spark, path, TERMS, topn=10).collect()
         assert after == before

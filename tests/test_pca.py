@@ -301,12 +301,13 @@ class TestStreamingSpectrum:
         sum raises no error)."""
         import decimal
 
+        from social_media_data_pipeline_spark import scale
         from social_media_data_pipeline_spark.streaming import spectrum
 
         store = str(tmp_path / "gram")
         df = _vec_df(spark, data)
         spectrum.spectrum_batch(spark, df, store)
-        base, _ = spectrum._read_partials(spark, store)
+        base = spark.read.parquet(*scale.read_store(store)[0])
         assert dict(base.dtypes)["sxy"] == "decimal(38,0)"
         first = {
             (r["i"], r["j"]): int(r["sxy"]) for r in base.collect()
@@ -323,16 +324,9 @@ class TestStreamingSpectrum:
         import shutil
 
         shutil.rmtree(store)
-        spectrum._commit(
-            spark,
-            store,
-            big,
-            __import__(
-                "social_media_data_pipeline_spark.scale", fromlist=["scale"]
-            ).EXPECT_ABSENT,
-        )
+        scale.commit_store(store, [("gram", big)], scale.EXPECT_ABSENT)
         spectrum.spectrum_batch(spark, df, store)
-        merged, _ = spectrum._read_partials(spark, store)
+        merged = spark.read.parquet(*scale.read_store(store)[0])
         got = {(r["i"], r["j"]): r["sxy"] for r in merged.collect()}
         for key, v in first.items():
             want = v * 2**20 + v  # exact Python int arithmetic

@@ -1231,6 +1231,45 @@ class TestManifestConcurrency:
         snap = self._snap(spark, path)
         assert snap[1] == -101 and snap[2] == -202
 
+    def test_upsert_creates_generation_zero_racing_creator_loses(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """An upsert on an absent path creates generation 0 with a CAS:
+        a second creator that also read "absent" loses loudly at its
+        flip (the winner created the store in between), un-stages, and
+        the winner's rows stay intact."""
+        import os
+
+        path = str(tmp_path / "t")
+        ua = spark.createDataFrame([(1, -101), (2, -102)], "k long, v long")
+        ub = spark.createDataFrame([(3, -303)], "k long, v long")
+        real_commit = scale.write_table_manifest
+        seen = []
+
+        def interleave(p, files, expect_generation=None):
+            seen.append(expect_generation)
+            if len(seen) == 1:
+                # the loser read "absent"; the winner creates the store
+                # before the loser's generation-0 flip
+                monkeypatch.setattr(scale, "write_table_manifest", real_commit)
+                stats = scale.selective_upsert(spark, p, ua, "k")
+                assert stats["files_total"] == 0
+                assert stats["rows_written"] == 2
+            return real_commit(p, files, expect_generation)
+
+        monkeypatch.setattr(scale, "write_table_manifest", interleave)
+        with pytest.raises(scale.ConcurrentCommitError):
+            scale.selective_upsert(spark, path, ub, "k")
+        monkeypatch.setattr(scale, "write_table_manifest", real_commit)
+        assert seen == [scale.EXPECT_ABSENT]  # creation is a CAS
+        assert scale.manifest_versions(path) == [0]
+        assert self._snap(spark, path) == {1: -101, 2: -102}
+        # the loser un-staged: only the winner's files are on disk
+        on_disk = {f for f in os.listdir(path) if f.endswith(".parquet")}
+        assert on_disk == {
+            os.path.basename(f) for f in scale.read_table_manifest(path)
+        }
+
     def test_vacuum_grace_protects_inflight_movein(self, spark, tmp_path):
         """ADVICE r9: an unreferenced file younger than the grace (an
         in-flight writer's move-in before its manifest flip) survives

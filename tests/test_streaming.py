@@ -588,6 +588,7 @@ class TestStreamingCurationFlagship:
 
         table = str(tmp_path / "curated")
         store = str(tmp_path / "bands")
+        labels = str(tmp_path / "labels")
         src = str(tmp_path / "crawl")
 
         d_good1 = self._doc(self.GOOD, "northern")
@@ -624,10 +625,17 @@ class TestStreamingCurationFlagship:
                 os.utime(f, (now - 60 + i * 20, now - 60 + i * 20))
 
         stats: list[dict] = []
+        gens: list[tuple] = []
 
         def step(batch_df, batch_id):
             stats.append(
-                curation.curate_batch(spark, batch_df, table, store)
+                curation.curate_batch(
+                    spark, batch_df, table, store, labels_path=labels
+                )
+            )
+            # (curated table, label store) manifest generations
+            gens.append(
+                (scale.read_store(table)[1], scale.read_store(labels)[1])
             )
 
         stream = (
@@ -648,11 +656,19 @@ class TestStreamingCurationFlagship:
         # COMMITTED corpus and commits only the fresh doc
         assert stats == [
             {"batch": 3, "quality_pass": 2, "dup_flagged": 0,
-             "committed": 2},
+             "committed": 2, "labels_changed": 0},
             {"batch": 0, "quality_pass": 0, "dup_flagged": 0,
-             "committed": 0},
+             "committed": 0, "labels_changed": 0},
             {"batch": 3, "quality_pass": 2, "dup_flagged": 1,
-             "committed": 1},
+             "committed": 1, "labels_changed": 2},
+        ]
+        # each store's FIRST commit creates a generation-0 manifest (a
+        # CAS through selective_upsert, not a plain directory write):
+        # the table at batch 1, the label store at batch 3's first pair
+        assert gens == [
+            (0, scale.EXPECT_ABSENT),
+            (0, scale.EXPECT_ABSENT),
+            (1, 0),
         ]
 
         # final table: exactly the 3 unique quality docs
