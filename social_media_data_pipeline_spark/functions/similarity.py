@@ -152,26 +152,36 @@ def cosine_near_dup_pairs(
     )
 
 
-def ivf_assign_multiprobe(
+def _ivf_top_probes(
     vectors: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probes: int = 2,
+    id_col: str,
+    vec_col: str,
+    probes: int,
 ) -> DataFrame:
-    """Multi-probe IVF assignment: each vector → its top-`probes`
-    max-cosine cells (probes=1 degenerates to `ivf_assign`).
+    """The IVF ranking core of `ivf_assign` and `ivf_assign_multiprobe`:
+    (id_col, vec_col, v_norm, __probe) with one row per vector and
+    probe, `__probe` = struct(c_cos, centroid_id) of its top-`probes`
+    cells by (desc round(cos, 6), asc centroid id).
 
-    SHUFFLE-FREE: the K centroids collapse to ONE broadcast row holding
-    an array of (centroid_id, c_vec, c_norm) structs; each corpus row
-    scores all K map-side (`transform` dot), ranks them with an
-    `array_sort` comparator (desc cos, asc id — same tie-break the
-    previous window formulation used, so oracles are unchanged), and
-    explodes its top `probes`. The earlier shape shuffled n·K scored
-    rows — each still carrying the full vector — into a per-vector
-    row_number window; at n·K = 100 TB-scale that shuffle dwarfed the
-    arithmetic, and any caller joining the assignment against itself
-    re-paid it per join side.
+    The K centroids collapse to ONE broadcast row holding an array of
+    (centroid_id, c_vec, c_norm) structs; each vector scores all K
+    map-side in a `transform` and ranks them with an `array_sort`
+    comparator. The explode of the slice makes the Generate node
+    evaluate the score/sort ONCE per row — a plain struct-field
+    extraction would be inlined by CollapseProject and re-evaluate
+    the K-way sort per extracted field — and it handles the
+    empty-centroid edge for free: slice([], 1, probes) yields nothing
+    (no centroids => no assignments).
+
+    Preconditions (the shape is per input ROW, not per id):
+    - `id_col` must be unique in `vectors`: a duplicated id is assigned
+      once per row, possibly to different cells (the old per-id
+      max-struct aggregate collapsed them to one).
+    - NaN scores (a NaN element in a vector or centroid) follow Spark's
+      NaN ordering: NaN ranks above every finite score, as the old
+      max-struct did, and NaN scores tie with each other and fall
+      through to the lower centroid id.
     """
     c_row = centroids.select(
         F.col(id_col).alias("centroid_id"),
@@ -207,20 +217,40 @@ def ivf_assign_multiprobe(
         )
 
     top = F.slice(F.array_sort(F.transform(F.col("__cents"), _score), _rank), 1, probes)
-    return (
-        with_norm.crossJoin(F.broadcast(c_row))
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("v_norm"),
-            F.explode(top).alias("__probe"),
-        )
-        .select(
-            id_col,
-            vec_col,
-            "v_norm",
-            F.col("__probe.centroid_id").cast("int").alias("cluster"),
-        )
+    return with_norm.crossJoin(F.broadcast(c_row)).select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.col("v_norm"),
+        F.explode(top).alias("__probe"),
+    )
+
+
+def ivf_assign_multiprobe(
+    vectors: DataFrame,
+    centroids: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    probes: int = 2,
+) -> DataFrame:
+    """Multi-probe IVF assignment: each vector → its top-`probes`
+    max-cosine cells (probes=1 degenerates to `ivf_assign`).
+
+    SHUFFLE-FREE (`_ivf_top_probes`, which states the unique-id and
+    NaN preconditions): each corpus row scores all K broadcast
+    centroids map-side (`transform` dot), ranks them with an
+    `array_sort` comparator (desc cos, asc id — same tie-break the
+    previous window formulation used, so oracles are unchanged), and
+    explodes its top `probes`. The earlier shape shuffled n·K scored
+    rows — each still carrying the full vector — into a per-vector
+    row_number window; at n·K = 100 TB-scale that shuffle dwarfed the
+    arithmetic, and any caller joining the assignment against itself
+    re-paid it per join side.
+    """
+    return _ivf_top_probes(vectors, centroids, id_col, vec_col, probes).select(
+        id_col,
+        vec_col,
+        "v_norm",
+        F.col("__probe.centroid_id").cast("int").alias("cluster"),
     )
 
 
@@ -352,9 +382,9 @@ def ivf_assign(
 ) -> DataFrame:
     """IVF cell assignment: each vector → its max-cosine centroid.
 
-    MAP-SIDE (r13, the `ivf_assign_multiprobe` shape at probes=1): the
-    K centroids collapse to ONE broadcast row holding an array of
-    (centroid_id, c_vec, c_norm) structs; each corpus row scores all K
+    MAP-SIDE (r13, the `ivf_assign_multiprobe` shape at probes=1 —
+    both share `_ivf_top_probes`, which states the unique-id and NaN
+    preconditions): each corpus row scores all K broadcast centroids
     in a `transform` and takes the (desc cos, asc id) head of an
     `array_sort`. The previous shape cross-joined n·K rows — each
     still carrying the full vector and its norm — into a per-vector
@@ -365,60 +395,12 @@ def ivf_assign(
     expressions (round(cos, 6); max cos, then min centroid id), so
     every downstream oracle is bit-stable — asserted by the
     assignment-parity test."""
-    c_row = centroids.select(
-        F.col(id_col).alias("centroid_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-    ).agg(
-        F.collect_list(F.struct("centroid_id", "c_vec", "c_norm")).alias("__cents")
-    )
-    with_norm = vectors.select(
-        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("v_norm")
-    )
-
-    def _score(ct):
-        denom = F.col("v_norm") * ct["c_norm"]
-        cos = F.when(denom > 0, dot(F.col(vec_col), ct["c_vec"]) / denom).otherwise(
-            F.lit(0.0)
-        )
-        return F.struct(
-            F.round(cos, 6).alias("c_cos"), ct["centroid_id"].alias("centroid_id")
-        )
-
-    def _rank(x, y):
-        return (
-            F.when(x["c_cos"] > y["c_cos"], F.lit(-1))
-            .when(x["c_cos"] < y["c_cos"], F.lit(1))
-            .otherwise(
-                F.when(x["centroid_id"] < y["centroid_id"], F.lit(-1))
-                .when(x["centroid_id"] > y["centroid_id"], F.lit(1))
-                .otherwise(F.lit(0))
-            )
-        )
-
-    # explode of the 1-element slice (the multiprobe idiom): the
-    # Generate node evaluates the score/sort ONCE per row — a plain
-    # struct-field extraction would be inlined by CollapseProject and
-    # re-evaluate the K-way sort per extracted field. The explode also
-    # handles the empty-centroid edge for free: slice([], 1, 1) yields
-    # nothing, keeping the old inner-join semantics (no centroids =>
-    # no assignments).
-    top1 = F.slice(F.array_sort(F.transform(F.col("__cents"), _score), _rank), 1, 1)
-    return (
-        with_norm.crossJoin(F.broadcast(c_row))
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("v_norm"),
-            F.explode(top1).alias("__best"),
-        )
-        .select(
-            id_col,
-            vec_col,
-            "v_norm",
-            F.col("__best.centroid_id").cast("int").alias("cluster"),
-            F.col("__best.c_cos").alias("c_cos"),
-        )
+    return _ivf_top_probes(vectors, centroids, id_col, vec_col, 1).select(
+        id_col,
+        vec_col,
+        "v_norm",
+        F.col("__probe.centroid_id").cast("int").alias("cluster"),
+        F.col("__probe.c_cos").alias("c_cos"),
     )
 
 

@@ -561,8 +561,8 @@ def hamming_blocked_pairs(
     bits: int = 64,
 ) -> DataFrame:
     """Generic pigeonhole hamming near-pair join over a (doc, fp)
-    fingerprint table — the blocking core shared by text simhash and
-    image dhash. Same guarantee as `simhash_blocked_pairs`: recall
+    fingerprint table — the blocking core behind text simhash, for any
+    64-bit fingerprint. Same guarantee as `simhash_blocked_pairs`: recall
     exactly 1.0 at hamming <= tau, equi-join only, never an n² nested
     loop. Returns (id_a, id_b, hamming) with id_a < id_b."""
     if n_blocks is None:
@@ -580,7 +580,7 @@ def hamming_blocked_pairs(
         hi = bits if i == n_blocks - 1 else lo + width
         mask = F.lit((1 << (hi - lo)) - 1).cast("long")
         # arithmetic shiftright then mask is sign-safe for full 64-bit
-        # fingerprints (dhash uses bit 63; the mask cuts the sign fill)
+        # fingerprints (bit 63 may be set; the mask cuts the sign fill)
         block_exprs.append(F.shiftright(F.col("fp"), lo).bitwiseAND(mask))
     blocks = fp.select(
         "doc", "fp", F.posexplode(F.array(*block_exprs)).alias("block_idx", "block_bits")

@@ -8,9 +8,10 @@ hold up at 1000 executors (SURVEY.md §7.1 M8 notes):
   (posts by year/month — P4, D3, A1 all prune on it).
 - `write_bucketed`: co-located join layout; repeated joins on the same
   key (comments ⋈ posts on owner_id) stop shuffling entirely.
-- `salted_join`: explicit skew-breaker for power-law keys (one celebrity
-  owner_id = one straggler partition) — AQE's skew splitting handles
-  sort-merge joins, salting also covers aggregations.
+- `operators.joins.salted_join` (not here): explicit skew-breaker for
+  power-law keys (one celebrity owner_id = one straggler partition) —
+  AQE's skew splitting handles sort-merge joins, salting also covers
+  aggregations.
 - `key_skew_profile`: measure before salting; salt only what's skewed.
 """
 
@@ -56,7 +57,7 @@ def key_skew_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:
     `operators.aggregates.key_skew_report` (r11), which folds the
     totals into a broadcast instead of a separate count() job and adds
     cum_share / skew_ratio / the per-key salt_factor that
-    `salted_join` consumes."""
+    `operators.joins.salted_join` consumes."""
     total = df.count()
     return (
         df.groupBy(key)
@@ -65,32 +66,6 @@ def key_skew_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:
         .orderBy(F.desc("n"), F.asc(key))
         .limit(top)
     )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join — thin alias for the canonical
-    `operators.joins.salted_join` (which adds hybrid hot-key mode,
-    `how` validation, and pmod salting — `abs(hash) %` maps
-    Long.MIN_VALUE to a NEGATIVE bucket, the hazard the old inline
-    version here carried). Kept for the original round-1 signature;
-    new code should import from `operators.joins`.
-    """
-    from .operators.joins import salted_join as _sj
-
-    return _sj(big, small, key, n_salts=salt_buckets, how=how)
-
-
-def coalesce_small_files(spark: SparkSession, path: str, target_files: int) -> None:
-    """Compact a stage output directory (small-file problem kills 100 TB
-    scans: driver-side listing + per-file open cost)."""
-    df = spark.read.parquet(path)
-    df.repartition(target_files).write.mode("overwrite").parquet(path + "__compacted")
 
 
 def zorder_key(cols: Sequence, bits: int = 16) -> F.Column:
@@ -190,8 +165,8 @@ def file_skipping_index(spark: SparkSession, path: str, cols: Sequence[str]) -> 
 # also keeps a numbered generation (`_manifest-<n>.json`) for time
 # travel until `vacuum_table` drops it. Every store in the package —
 # the tables `selective_upsert`/`selective_delete`/`compact_table`
-# mutate, the curation and IVM state tables, the drift and spectrum
-# monoid stores, the ANN artifacts and the lexical index — writes
+# mutate, the curation and IVM state tables, the spectrum monoid
+# store, the ANN artifacts and the lexical index — writes
 # through ONE path, `commit_store`, and reads its CAS base through
 # `read_store` (the dedup band store keeps its own stamp-and-rename
 # layout).
@@ -238,7 +213,7 @@ def write_table_manifest(
     re-reading the table and redoing the rewrite against the new live
     set). The only in-package caller is `commit_store`, so every
     in-package mutator — `selective_upsert`, `selective_delete`,
-    `compact_table`, `fold_store` (drift, spectrum), the ANN artifacts
+    `compact_table`, `fold_store` (spectrum), the ANN artifacts
     and the lexical index — passes it. Pass the `EXPECT_ABSENT`
     sentinel when the writer read NO manifest and expects to CREATE
     generation 0 — the O_EXCL claim then arbitrates two writers racing
@@ -346,7 +321,7 @@ def read_store(path: str) -> tuple[list[str], object, dict | None]:
     None) — never `live_files`' plain-directory fallback: a racing
     creator's renamed-in, uncommitted files already sit in the
     directory, and a glob would count them (the double-merge hazard
-    the drift init-race test plants). `meta` is the JSON document a
+    a racing creator plants). `meta` is the JSON document a
     `commit_store(meta=...)` bound to this generation, or None. The
     generation is the CAS base to hand back to `commit_store`."""
     import json as _json
@@ -455,9 +430,9 @@ def fold_store(
     first: tuple | None = None,
 ) -> None:
     """Retry-and-remerge commit for a store whose rows form a
-    commutative monoid (the drift baseline counts, the spectrum Gram
-    partials): `merge(base)` folds the caller's PINNED batch into the
-    committed table `base` (None before generation 0), and the merged
+    commutative monoid (the spectrum Gram partials): `merge(base)`
+    folds the caller's PINNED batch into the committed table `base`
+    (None before generation 0), and the merged
     table replaces the whole (small) store as one file. Two folders
     that read the same generation both merge; the CAS lets only one
     flip, and the loser re-reads the NEW live table and re-merges —

@@ -1,13 +1,15 @@
 """Binary / multimodal columns (S8/S9 + the multimodal LLM-pipeline
-extension): images, audio, video as opaque binary columns with typed
+extension): images and video as opaque binary columns with typed
 metadata, processed by Arrow-batched UDFs.
 
 Reference: jpegs in folders keyed `{post_id}_{shortcode}.jpg`
 (`InstagramImageScraper.py:107`), scanned with `os.listdir`
 (`ImageLabeler.py:129-131`). Engine: `binaryFile` scan → BinaryType
-column; decode/feature steps are mapInPandas with REAL plumbing (schema,
-batching, partition control) and STUBBED codecs (no image/audio libs in
-this container — swap the codec fn, keep the operator).
+column; decode/feature steps are mapInPandas over dependency-free
+codecs (ppm/bmp/png here; jpeg, gif, webp, tiff and avi in sibling
+modules). Lossy webp and inter-frame video stay documented
+NotImplementedError boundaries (`decode_image_stub`,
+`sample_video_frames_stub`) — swap the codec fn, keep the operator.
 """
 
 from __future__ import annotations
@@ -130,9 +132,7 @@ def image_metadata(df: DataFrame, content_col: str = "content") -> DataFrame:
 #
 # PPM(P6), BMP(24bpp BI_RGB) and PNG(8-bit RGB/RGBA, non-interlaced, all
 # five scanline filters) decode to real pixel tensors; PPM encodes back.
-# JPEG entropy decode genuinely needs a codec library and remains a
-# documented NotImplementedError boundary (`decode_image_stub`), as does
-# video (`sample_video_frames_stub`).
+# The entropy-coded formats dispatch to their own modules below.
 # ---------------------------------------------------------------------------
 
 

@@ -2,9 +2,9 @@
 `functions/pca.covariance_micro`.
 
 The integer Gram partials (i, j, sxy, n) are a commutative monoid —
-exactly the property that made the drift baseline and the ANN
-fingerprint incremental — so a stream can fold each micro-batch's
-partials into a manifest-committed store and the accumulated
+exactly the property that made the ANN fingerprint incremental — so a
+stream can fold each micro-batch's partials into a manifest-committed
+store and the accumulated
 covariance is BIT-IDENTICAL to a batch recompute over everything ever
 seen (no approximation, no order dependence: integer sums). This is
 the embedding-drift monitoring loop at ingest: the spectrum of the
@@ -12,10 +12,10 @@ accumulated covariance is the signal (eigenvalue shifts = the
 embedding model or the corpus moved), and `pca.pca_components`-style
 driver eigh reads it at any time.
 
-Store layout/commit discipline: the drift baseline's —
-`scale.fold_store` rewrites the whole store as one `gram-` file under
-a CAS manifest flip (EXPECT_ABSENT for generation 0) and re-merges on
-a lost race; reads go STRICTLY through the manifest (`scale.read_store`).
+Store layout/commit discipline: `scale.fold_store` rewrites the whole
+store as one `gram-` file under a CAS manifest flip (EXPECT_ABSENT for
+generation 0) and re-merges on a lost race; reads go STRICTLY through
+the manifest (`scale.read_store`).
 
 Overflow discipline: a single BATCH's Gram pass stays int64 (the
 covariance_micro per-partition headroom bound applies to each

@@ -221,7 +221,7 @@ class TestSubdocProperties:
 class TestHammingBlockingProperties:
     """The generic pigeonhole join must equal the brute-force O(n²)
     pair scan for ANY fingerprint multiset and any tau — this is the
-    recall-1.0 guarantee the image/audio near-dup paths inherit."""
+    recall-1.0 guarantee the simhash near-dup path inherits."""
 
     @settings(max_examples=8, deadline=None,
               suppress_health_check=[HealthCheck.function_scoped_fixture,

@@ -36,22 +36,6 @@ class TestScale:
         # only one of three partition dirs is read
         assert "partitions read: 1" in plan.lower() or "PartitionFilters: [isnotnull(year" in plan
 
-    def test_salted_join_matches_plain_join(self, spark):
-        big = spark.createDataFrame(
-            [(i % 3, f"row{i}") for i in range(300)], "k int, payload string"
-        )
-        small = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], "k int, dim string")
-        plain = big.join(small, "k").select("k", "payload", "dim")
-        salted = scale.salted_join(big, small, "k", salt_buckets=8).select("k", "payload", "dim")
-        assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-    def test_salted_left_join_keeps_unmatched(self, spark):
-        big = spark.createDataFrame([(1, "x"), (9, "y")], "k int, payload string")
-        small = spark.createDataFrame([(1, "a")], "k int, dim string")
-        out = scale.salted_join(big, small, "k", salt_buckets=4, how="left")
-        rows = {r.k: r.dim for r in out.collect()}
-        assert rows == {1: "a", 9: None}
-
     def test_bucketed_join_skips_exchange(self, spark, tmp_path):
         import uuid
 
@@ -99,8 +83,8 @@ class TestScale:
         assert top.k == 1 and top.n == 90 and abs(top.share - 0.9) < 1e-9
 
     def test_aqe_splits_skewed_join_partition(self, spark):
-        """The 100 TB skew story has two layers: `salted_join` for
-        explicit salting, and AQE's runtime skew-join splitting for
+        """The 100 TB skew story has two layers:
+        `operators.joins.salted_join` for explicit salting, and AQE's runtime skew-join splitting for
         sort-merge joins. This pins the latter: a power-law key under
         toy-sized skew thresholds must produce SortMergeJoin(skew=true)
         in the executed plan."""
@@ -1268,6 +1252,105 @@ class TestManifestConcurrency:
         on_disk = {f for f in os.listdir(path) if f.endswith(".parquet")}
         assert on_disk == {
             os.path.basename(f) for f in scale.read_table_manifest(path)
+        }
+
+    def _fold(self, spark, store, pairs, first=None, seen=None):
+        """Fold one batch of (key, n) pairs into a sum-monoid store
+        through `scale.fold_store`; `seen` records every base the
+        merge was handed."""
+        batch = spark.createDataFrame(pairs, "key string, n long")
+
+        def merge(prev):
+            if seen is not None:
+                seen.append(
+                    None if prev is None
+                    else {r["key"]: r["n"] for r in prev.collect()}
+                )
+            if prev is None:
+                return batch
+            return (
+                prev.unionByName(batch).groupBy("key")
+                .agg(F.sum("n").alias("n"))
+            )
+
+        scale.fold_store(spark, store, "counts", merge, first=first)
+
+    def _counts(self, spark, store):
+        return {
+            r["key"]: r["n"]
+            for r in scale.manifest_read(spark, store).collect()
+        }
+
+    def test_two_monitors_interleaved_no_batch_lost(self, spark, tmp_path):
+        """Two folders sharing one monoid store — folder C commits
+        between folder B's base read and its manifest flip. B's first
+        commit must LOSE the CAS and its retry must re-merge against
+        the new live set, so the final store carries A+B+C exactly (a
+        last-writer-wins flip would silently drop C's counts forever)."""
+        store = str(tmp_path / "base")
+        # batch A seeds the store
+        self._fold(spark, store, [("x", 3), ("y", 1)])
+        real_write = scale.write_table_manifest
+        done = [False]
+
+        def stolen_write(p, files, expect_generation=None):
+            if p == store and not done[0]:
+                done[0] = True
+                # concurrent folder C lands a full real cycle in the
+                # tightest window — after B read the base, before
+                # B's flip
+                self._fold(spark, store, [("z", 2)])
+            return real_write(p, files, expect_generation=expect_generation)
+
+        # B reads its base first, the way a caller hands it in `first`
+        files, gen, _ = scale.read_store(store)
+        seen = []
+        scale.write_table_manifest = stolen_write
+        try:
+            self._fold(
+                spark, store, [("x", 1), ("w", 1)],
+                first=(spark.read.parquet(*files), gen), seen=seen,
+            )
+        finally:
+            scale.write_table_manifest = real_write
+        # B merged against the base it READ (batch A only), lost the
+        # CAS, then re-merged against A+C
+        assert seen == [{"x": 3, "y": 1}, {"x": 3, "y": 1, "z": 2}]
+        # the final store carries A+B+C exactly — nothing lost
+        assert self._counts(spark, store) == {
+            "x": 4,  # A:3 + B:1
+            "y": 1,  # A
+            "z": 2,  # C
+            "w": 1,  # B
+        }
+
+    def test_store_initialization_race_is_cas_too(self, spark, tmp_path):
+        """Two folders racing to CREATE the store: the loser's
+        generation-0 claim must fail (EXPECT_ABSENT sentinel) and its
+        retry must merge into the winner's store — both batches
+        survive even on the very first commit."""
+        store = str(tmp_path / "fresh")
+        real_write = scale.write_table_manifest
+        done = [False]
+
+        def stolen_write(p, files, expect_generation=None):
+            if p == store and not done[0]:
+                done[0] = True
+                self._fold(spark, store, [("y", 1)])
+            return real_write(p, files, expect_generation=expect_generation)
+
+        seen = []
+        scale.write_table_manifest = stolen_write
+        try:
+            self._fold(spark, store, [("x", 2)], seen=seen)
+        finally:
+            scale.write_table_manifest = real_write
+        # B read an ABSENT store, then re-merged into C's generation 0
+        assert seen == [None, {"y": 1}]
+        assert scale.manifest_versions(store) == [0, 1]
+        assert self._counts(spark, store) == {
+            "x": 2,  # B
+            "y": 1,  # C
         }
 
     def test_vacuum_grace_protects_inflight_movein(self, spark, tmp_path):

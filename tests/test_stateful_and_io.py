@@ -1,92 +1,15 @@
-"""Tests: stateful streaming operators, grouped UDAF, CSV adapter IO,
-observable filter metrics."""
+"""Tests: CSV adapter IO, observable filter metrics, JSON/CSV
+quarantine reads."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from social_media_data_pipeline_spark import io as eio
 from social_media_data_pipeline_spark.operators import filters
-from social_media_data_pipeline_spark.operators.grouped_udaf import (
-    engagement_concentration,
-)
-from social_media_data_pipeline_spark.streaming import stateful
-
-EV_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
-
-
-class TestStateful:
-    def test_running_user_totals_accumulates_across_batches(self, spark, tmp_path):
-        src = str(tmp_path / "src")
-        sink = str(tmp_path / "sink")
-        ck = str(tmp_path / "ck")
-        t0 = dt.datetime(2024, 1, 1, 10)
-
-        def run_query():
-            # foreachBatch sink: checkpoint-recoverable (memory sink isn't),
-            # so engine state survives query restarts
-            stream = spark.readStream.schema(EV_SCHEMA).parquet(src)
-            out = stateful.running_user_totals(stream)
-            q = (
-                out.writeStream.foreachBatch(
-                    lambda df, epoch: df.write.mode("append").parquet(sink)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        batch1 = [(1, t0, 10, "c", 1.0), (2, t0, 10, "c", 2.0), (3, t0, 20, "v", 5.0)]
-        spark.createDataFrame(batch1, EV_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-        run_query()
-        latest = {
-            r.user_id: r
-            for r in spark.read.parquet(sink).orderBy("n_events").collect()
-        }
-        assert latest[10].n_events == 2 and latest[10].total_value == 3.0
-        assert latest[20].n_events == 1 and latest[20].total_value == 5.0
-
-        # second batch arrives; restart from the same checkpoint —
-        # engine-managed state carries the previous totals forward
-        batch2 = [(4, t0, 10, "c", 4.0)]
-        spark.createDataFrame(batch2, EV_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-        run_query()
-        rows = spark.read.parquet(sink).filter("user_id = 10").collect()
-        assert max(r.n_events for r in rows) == 3
-        assert max(r.total_value for r in rows) == 7.0
-
-    def test_attempt_budget_state(self, spark, tmp_path):
-        src = str(tmp_path / "attempts")
-        rows = [("a", False), ("a", True), ("b", False)]
-        spark.createDataFrame(rows, "item_id string, ok boolean").coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema("item_id string, ok boolean").parquet(src)
-        out = stateful.attempt_budget_state(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("attempts")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = {r.item_id: r for r in spark.sql("select * from attempts").collect()}
-        assert got["a"].attempts == 2 and got["a"].succeeded is True
-        assert got["b"].attempts == 1 and got["b"].succeeded is False
-
-
-class TestGroupedUdaf:
-    def test_gini_uniform_vs_concentrated(self, spark):
-        rows = [("u", 10.0)] * 4 + [("c", 0.0), ("c", 0.0), ("c", 0.0), ("c", 100.0)]
-        df = spark.createDataFrame(rows, "g string, v double")
-        out = {r.g: r.gini for r in engagement_concentration(df, "g", "v").collect()}
-        assert out["u"] == 0.0
-        assert out["c"] > 0.7
 
 
 class TestCsvAdapter:
@@ -145,56 +68,6 @@ class TestObserve:
             df, lambda d: d.filter(F.col("x") < 3), "xfilter"
         )
         assert out.count() == 3  # transform applied; metrics ride along
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark 4 StatefulProcessor path — skipped where the TWS Python
-    runner's protobuf dependency is absent (container boundary; the
-    applyInPandasWithState equivalent above is always exercised)."""
-    import pytest as _pytest
-
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-    except ImportError:
-        _pytest.skip("protobuf not installed: TWS python runner unavailable")
-    from social_media_data_pipeline_spark.streaming.stateful import (
-        running_user_totals_tws,
-    )
-
-    src = str(tmp_path / "tws_src")
-    spark.createDataFrame(
-        [(1, 10, 1.5), (2, 10, 2.0), (3, 11, 3.0)],
-        "event_id long, user_id long, value double",
-    ).write.mode("overwrite").parquet(src)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema(
-            "event_id long, user_id long, value double"
-        ).parquet(src)
-        q = (
-            running_user_totals_tws(stream)
-            .writeStream.format("memory")
-            .queryName("tws_totals")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        rows = {
-            r.user_id: (r.n_events, r.total_value)
-            for r in spark.sql("select * from tws_totals").collect()
-        }
-        assert rows == {10: (2, 3.5), 11: (1, 3.0)}
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 class TestJsonQuarantine:

@@ -964,179 +964,3 @@ class TestStreamingAnnIngest:
         # and the merged fingerprint validates the grown corpus
         meta = ann_index._load_meta(ann_index.pq_codes_path(tag, params))
         assert meta["fingerprint"] == ann_index.corpus_fingerprint(full)
-
-
-class TestStreamingDrift:
-    """r10: incremental drift monitoring — per-batch L1 vs the
-    manifest-committed baseline histogram must equal the BATCH
-    operator's per-day rows when batches are days."""
-
-    def test_three_batches_equal_batch_operator(self, spark, tmp_path):
-        import datetime as _dt
-        import glob
-        import os
-        import time as _time
-
-        from social_media_data_pipeline_spark.operators.aggregates import (
-            histogram_drift,
-        )
-        from social_media_data_pipeline_spark.streaming import drift
-
-        store = str(tmp_path / "baseline")
-        src = str(tmp_path / "ev")
-        days = {
-            "b1": [("a", 1, v) for v in (1, 2, 3, 11)],
-            "b2": [("a", 2, v) for v in (1, 1, 25, 25)],
-            "b3": [("a", 3, v) for v in (1, 11, 25, 40)],
-        }
-        schema = "event_type string, ts timestamp, value double"
-        for name, rows in days.items():
-            data = [
-                (et, _dt.datetime(2024, 1, d, 9, 0), float(v))
-                for et, d, v in rows
-            ]
-            spark.createDataFrame(data, schema).coalesce(1).write.parquet(
-                src + f"/{name}"
-            )
-        now = _time.time()
-        for i, b in enumerate(("b1", "b2", "b3")):
-            for f in glob.glob(src + f"/{b}/*"):
-                os.utime(f, (now - 60 + i * 20, now - 60 + i * 20))
-
-        got: list[tuple] = []
-
-        def step(batch_df, batch_id):
-            res = drift.drift_batch(
-                spark, batch_df, store, "value", 10.0,
-                group_cols=("event_type",),
-            )
-            got.extend(
-                (r["event_type"], r["n_day"], r["n_base"], r["l1_drift"])
-                for r in res.collect()
-            )
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/b*")
-        )
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-        all_rows = [
-            (et, _dt.datetime(2024, 1, d, 9, 0), float(v))
-            for rows in days.values()
-            for et, d, v in rows
-        ]
-        want = [
-            (r["event_type"], r["n_day"], r["n_base"], r["l1_drift"])
-            for r in histogram_drift(
-                spark.createDataFrame(all_rows, schema),
-                "ts", "value", 10.0, group_cols=("event_type",),
-            ).orderBy("day").collect()
-        ]
-        assert got == want and len(got) == 2
-
-    def _batch(self, spark, values):
-        return spark.createDataFrame(
-            [("a", float(v)) for v in values], "event_type string, value double"
-        )
-
-    def _baseline_counts(self, spark, store):
-        from social_media_data_pipeline_spark import scale
-
-        return {
-            (r["event_type"], r["bin"]): r["c"]
-            for r in scale.manifest_read(spark, store).collect()
-        }
-
-    def test_two_monitors_interleaved_no_batch_lost(self, spark, tmp_path):
-        """r10-verdict #2: two monitors sharing one baseline store —
-        monitor C commits between monitor B's baseline read and its
-        manifest flip. B's first commit must LOSE the CAS and its retry
-        must re-merge against the new live set, so the final baseline
-        carries A+B+C exactly (the old last-writer-wins flip silently
-        dropped C's counts forever)."""
-        from social_media_data_pipeline_spark import scale
-        from social_media_data_pipeline_spark.streaming import drift
-
-        store = str(tmp_path / "base")
-        # batch A seeds the store (values → bins at width 10)
-        drift.drift_batch(
-            spark, self._batch(spark, [1, 2, 11]), store, "value", 10.0,
-            group_cols=("event_type",),
-        )
-        real_write = scale.write_table_manifest
-        done = [False]
-
-        def stolen_write(p, files, expect_generation=None):
-            if p == store and not done[0]:
-                done[0] = True
-                # concurrent monitor C lands a full real cycle in the
-                # tightest window — after B read the baseline, before
-                # B's flip
-                drift.drift_batch(
-                    spark, self._batch(spark, [21, 22]), store, "value",
-                    10.0, group_cols=("event_type",),
-                )
-            return real_write(p, files, expect_generation=expect_generation)
-
-        scale.write_table_manifest = stolen_write
-        try:
-            res = drift.drift_batch(
-                spark, self._batch(spark, [1, 31]), store, "value", 10.0,
-                group_cols=("event_type",),
-            )
-        finally:
-            scale.write_table_manifest = real_write
-        # B's drift was judged against the baseline it READ (batch A
-        # only — n_base 3), regardless of C's concurrent commit
-        row = res.collect()[0]
-        assert (row["n_day"], row["n_base"]) == (2, 3)
-        # the final baseline carries A+B+C exactly — nothing lost
-        assert self._baseline_counts(spark, store) == {
-            ("a", 0): 3,  # A:1,2 + B:1
-            ("a", 1): 1,  # A:11
-            ("a", 2): 2,  # C:21,22
-            ("a", 3): 1,  # B:31
-        }
-
-    def test_store_initialization_race_is_cas_too(self, spark, tmp_path):
-        """Two monitors racing to CREATE the store: the loser's
-        generation-0 claim must fail (EXPECT_ABSENT sentinel) and its
-        retry must merge into the winner's baseline — both batches
-        survive even on the very first commit."""
-        from social_media_data_pipeline_spark import scale
-        from social_media_data_pipeline_spark.streaming import drift
-
-        store = str(tmp_path / "fresh")
-        real_write = scale.write_table_manifest
-        done = [False]
-
-        def stolen_write(p, files, expect_generation=None):
-            if p == store and not done[0]:
-                done[0] = True
-                drift.drift_batch(
-                    spark, self._batch(spark, [11]), store, "value", 10.0,
-                    group_cols=("event_type",),
-                )
-            return real_write(p, files, expect_generation=expect_generation)
-
-        scale.write_table_manifest = stolen_write
-        try:
-            res = drift.drift_batch(
-                spark, self._batch(spark, [1, 2]), store, "value", 10.0,
-                group_cols=("event_type",),
-            )
-        finally:
-            scale.write_table_manifest = real_write
-        # B read an ABSENT baseline → no drift row (unknown, not zero)
-        assert res.collect() == []
-        assert self._baseline_counts(spark, store) == {
-            ("a", 0): 2,  # B:1,2
-            ("a", 1): 1,  # C:11
-        }
