@@ -465,8 +465,8 @@ def incremental_dedup(
 
     `hist_bands` injects an already-materialized history band table
     (`band_store_read` over the persisted store — MUST have been built
-    with the same num_hashes/bands/shingle_k, which `band_store_append`
-    stamps and `band_store_read` verifies); when omitted the bands are
+    with the same num_hashes/bands/shingle_k, which the store's meta
+    binds and `band_store_read` verifies); when omitted the bands are
     recomputed from `history`, the small-corpus path. Either way
     `history` itself is still needed for the exact-Jaccard text verify
     of CANDIDATE docs (a semi-joined, id-pruned read at scale).
@@ -564,11 +564,17 @@ def incremental_dedup(
 # OWN signatures, joins them against the store, and appends its
 # survivors. The lifecycle below manages that store:
 #   append  — survivors only (flagged duplicates excluded HERE, not by
-#             caller convention), layout-stamped, sorted by band
+#             caller convention), sorted by band
 #   read    — exact semi-join pruning to the (band_idx, band_hash) keys
 #             a probe batch carries
 #   compact — drop bands of docs later deduped/retired + coalesce the
-#             per-append files (staged rewrite, swap documented)
+#             per-append files into one
+# The store commits like every other manifest store: each append and
+# each compaction is one `scale.commit_store` CAS flip, and the manifest
+# binds a meta JSON holding the signature params and the band schema
+# DDL. Reads name their files from the manifest and take the schema from
+# the meta, never from footer inference, so zero files read as an empty
+# frame, and a crash before a flip leaves the previous generation live.
 # Layout: FLAT parquet — (doc, band_idx, band_hash) files directly under
 # the store root, one per write task, each sorted within the file by
 # (band_idx, band_hash) so row-group min/max stats cluster by band. Not
@@ -579,24 +585,119 @@ def incremental_dedup(
 # the batch's own band table (bands × batch rows), so a broadcast
 # left-semi join keeps exactly the store rows the dedup join can match;
 # the scan itself still reads the whole store.
-# Stores stamped with `buckets` are the old hive layout: append refuses
-# them (a flat file beside band_idx= directories breaks partition
-# discovery) and band_store_compact migrates them.
 
-_BAND_STORE_META = "_band_store_meta.json"
 _BAND_COLS = ("doc", "band_idx", "band_hash")
+# every probe scans the whole store, so compaction writes it as one file
+_COMPACT_FILES = 1
 
 
-def _band_store_params_path(store_path: str) -> str:
+def _band_store_state(store_path: str) -> tuple[list[str], object, dict | None]:
+    """`scale.read_store` of a band store: (live files, CAS generation,
+    meta). A directory with no manifest that holds entries
+    `commit_store` never writes (a stamp JSON, part files, band_idx=
+    directories) is a store written before manifest commits; reading
+    it as absent would drop its history, so it is refused with the
+    rebuild."""
     import os
 
-    return os.path.join(store_path, _BAND_STORE_META)
+    from social_media_data_pipeline_spark import scale
+
+    files, gen, meta = scale.read_store(store_path)
+    if gen is scale.EXPECT_ABSENT and os.path.isdir(store_path):
+        # a racing creator's staged files, meta and claimed generation
+        # are commit_store's own: that store is absent until it flips
+        foreign = sorted(
+            e for e in os.listdir(store_path)
+            if not e.startswith(("_staged-", "_meta-", "_manifest"))
+            and not scale._COMMITTED_NAME.search(e)
+        )
+        if foreign:
+            raise ValueError(
+                f"band store {store_path} holds {foreign[:3]} but no "
+                "manifest: a store written before manifest commits. "
+                "Rebuild it into an empty path with band_store_append("
+                "sketches.minhash_band_table(<kept corpus>), store, "
+                "params=...)"
+            )
+    return files, gen, meta
 
 
-def _write_band_files(df: DataFrame, path: str, mode: str) -> None:
-    """The flat layout: no partitionBy, rows sorted by band inside each
-    write task's single file."""
-    df.sortWithinPartitions("band_idx", "band_hash").write.mode(mode).parquet(path)
+def _band_frame(
+    spark: "SparkSession",
+    store_path: str,
+    state: tuple,
+    probe_bands: DataFrame | None = None,
+    params: dict | None = None,
+) -> DataFrame:
+    """The store's rows at `state` (a `_band_store_state` read), schema
+    from the meta; `params` must match the meta's signature params."""
+    files, _gen, meta = state
+    if meta is None:
+        raise FileNotFoundError(f"no band store at {store_path}")
+    mism = {
+        k: v for k, v in (params or {}).items() if meta["params"].get(k) != v
+    }
+    if mism:
+        raise ValueError(
+            f"band store {store_path} was built with {meta['params']}, "
+            f"caller expects {mism} — mixed signature parameters"
+        )
+    if files:
+        df = spark.read.schema(meta["schema"]).parquet(*files)
+    else:
+        df = spark.createDataFrame([], meta["schema"])
+    if probe_bands is not None:
+        # no distinct() on the probe: a broadcast semi join's build
+        # side already ignores duplicate keys
+        df = df.join(
+            F.broadcast(probe_bands.select("band_idx", "band_hash")),
+            ["band_idx", "band_hash"],
+            "left_semi",
+        ).select(*_BAND_COLS)
+    return df
+
+
+def _append_at(
+    bands: DataFrame,
+    store_path: str,
+    base: tuple,
+    flagged: DataFrame | None,
+    params: dict | None,
+) -> None:
+    """`band_store_append` committed against `base`, the
+    `_band_store_state` a caller read earlier: the flip is a CAS on
+    that generation, so an appender that raced another since the read
+    raises `ConcurrentCommitError` instead of landing beside it."""
+    from social_media_data_pipeline_spark import scale
+
+    files, gen, have = base
+    if flagged is not None:
+        bands = bands.join(
+            flagged.select(F.col(flagged.columns[0]).alias("doc")),
+            "doc",
+            "left_anti",
+        )
+    out = bands.select(*_BAND_COLS)
+    meta = {
+        "params": dict(params or {}),
+        "schema": ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in out.schema.fields
+        ),
+    }
+    if have is not None and have != meta:
+        raise ValueError(
+            f"band_store_append: store {store_path} was built with {have}, "
+            f"got {meta} — mixed signature parameters never match and "
+            "mixed id types corrupt the store; recompute with the store's "
+            "parameters or rebuild"
+        )
+    scale.commit_store(
+        store_path,
+        [("bands", out.sortWithinPartitions("band_idx", "band_hash"))],
+        gen,
+        keep=files,
+        meta=meta,
+    )
 
 
 def band_store_append(
@@ -611,71 +712,17 @@ def band_store_append(
     found — appending them would make the store grow with junk and
     every future batch pay collision candidates against it). Writes
     the flat layout: one file per write task, sorted by
-    (band_idx, band_hash).
+    (band_idx, band_hash), committed by one `scale.commit_store` CAS
+    flip — a racing appender raises `ConcurrentCommitError`.
 
-    `params` (num_hashes/bands/shingle_k) is stamped into a meta file on
-    first append and verified on every later append/read: joining bands
-    built with different signature parameters silently matches nothing,
-    so a mismatch raises instead. A store whose stamp carries `buckets`
-    has the old partitioned layout and is refused until
-    `band_store_compact` rewrites it flat.
-
-    Crash/empty-batch safety (r9): the meta stamp — which includes the
-    band schema DDL — is written BEFORE the first data write, so a
-    crash between the two leaves a store that later reads resolve as
-    EMPTY (schema comes from the stamp, never footer inference), and a
-    zero-row batch (a routine event in continuous streams: empty part
-    files, all-duplicate batches) skips the data write entirely instead
-    of creating a footerless parquet directory that poisons every
-    later `spark.read.parquet`.
+    `params` (num_hashes/bands/shingle_k) and the band schema DDL are
+    the meta the manifest binds on the first append, verified on every
+    later append/read: joining bands built with different signature
+    parameters silently matches nothing, so a mismatch raises instead.
+    A zero-row batch (routine in continuous streams) commits like any
+    other: reads take their schema from the meta, never from footers.
     """
-    import json
-    import os
-
-    if flagged is not None:
-        bands = bands.join(
-            flagged.select(F.col(flagged.columns[0]).alias("doc")),
-            "doc",
-            "left_anti",
-        )
-    out = bands.select(*_BAND_COLS)
-    schema_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in out.schema.fields
-    )
-    meta = {**(params or {}), "schema": schema_ddl}
-    mp = _band_store_params_path(store_path)
-    if os.path.exists(mp):
-        have = json.load(open(mp))
-        if "buckets" in have:
-            raise ValueError(
-                f"band_store_append: store {store_path} has the old "
-                "partitioned (band_idx, band_bucket) layout — a flat "
-                "append beside its directories breaks partition "
-                "discovery; migrate it once with band_store_compact"
-            )
-        if {k: v for k, v in have.items() if k != "schema"} != {
-            k: v for k, v in meta.items() if k != "schema"
-        }:
-            raise ValueError(
-                f"band_store_append: store {store_path} was built with "
-                f"{have}, got {meta} — mixed signature parameters never "
-                "match; recompute with the store's parameters or rebuild"
-            )
-        if have.get("schema", schema_ddl) != schema_ddl:
-            raise ValueError(
-                f"band_store_append: store {store_path} stamped schema "
-                f"{have['schema']!r}, batch writes {schema_ddl!r} — "
-                "mixed id types corrupt the store"
-            )
-    else:
-        # meta BEFORE data: a crash after this point leaves a store
-        # that reads as empty (schema from the stamp) instead of one
-        # that accepts any later params / dies on schema inference
-        os.makedirs(store_path, exist_ok=True)
-        with open(mp, "w") as f:
-            json.dump(meta, f)
-    if not out.isEmpty():
-        _write_band_files(out, store_path, "append")
+    _append_at(bands, store_path, _band_store_state(store_path), flagged, params)
 
 
 def band_store_read(
@@ -684,140 +731,71 @@ def band_store_read(
     probe_bands: DataFrame | None = None,
     params: dict | None = None,
 ) -> DataFrame:
-    """Read the store back as (doc, band_idx, band_hash). With
-    `probe_bands` (the NEW batch's band table) the rows are pruned by a
-    broadcast left-semi join on (band_idx, band_hash): exactly the
+    """Read the store's live files back as (doc, band_idx, band_hash).
+    With `probe_bands` (the NEW batch's band table) the rows are pruned
+    by a broadcast left-semi join on (band_idx, band_hash): exactly the
     store rows the probe can join survive. The parquet scan under it
-    still reads the whole store. `params`
-    re-verifies the signature stamp.
+    still reads the whole store. `params` re-verifies the signature
+    params bound in the meta.
 
-    The read takes its schema from the meta stamp, never from parquet
-    footer inference: a store holding only the stamp (zero-row appends,
-    a crash before the first data write) resolves to an EMPTY frame
-    instead of UNABLE_TO_INFER_SCHEMA. Parquet data WITHOUT a stamp is
-    refused — silently assuming default params would match nothing.
-    Old partitioned stores read through partition discovery.
+    The schema comes from the meta, never from parquet footer
+    inference: a store whose appends were all empty resolves to an
+    EMPTY frame instead of UNABLE_TO_INFER_SCHEMA. A path with no
+    manifest raises FileNotFoundError.
     """
-    import glob
-    import json
-    import os
-
-    mp = _band_store_params_path(store_path)
-    if not os.path.exists(mp):
-        if glob.glob(os.path.join(store_path, "**", "*.parquet"),
-                     recursive=True):
-            raise ValueError(
-                f"band_store_read: {store_path} has parquet data but no "
-                f"{_BAND_STORE_META} stamp — refusing to guess signature "
-                "params; restore the stamp or rebuild the store"
-            )
-        old = store_path.rstrip("/") + ".old"
-        hint = (
-            f"; a compact crashed mid-swap — restore with "
-            f"os.rename({old!r}, {store_path!r})"
-            if os.path.exists(old)
-            else ""
-        )
-        raise FileNotFoundError(
-            f"band_store_read: no band store at {store_path}{hint}"
-        )
-    meta = json.load(open(mp))
-    if params:
-        mism = {k: v for k, v in params.items() if meta.get(k) != v}
-        if mism:
-            raise ValueError(
-                f"band_store_read: store {store_path} stamped {meta}, "
-                f"caller expects {mism} — mixed signature parameters"
-            )
-    reader = spark.read
-    if "schema" in meta:
-        reader = reader.schema(meta["schema"])
-    df = reader.parquet(store_path).select(*_BAND_COLS)
-    if probe_bands is not None:
-        # no distinct() on the probe: a broadcast semi join's build
-        # side already ignores duplicate keys
-        df = df.join(
-            F.broadcast(probe_bands.select("band_idx", "band_hash")),
-            ["band_idx", "band_hash"],
-            "left_semi",
-        ).select(*_BAND_COLS)
-    return df
+    return _band_frame(
+        spark, store_path, _band_store_state(store_path), probe_bands, params
+    )
 
 
 def band_store_compact(
     spark: "SparkSession",
     store_path: str,
     drop_docs: DataFrame | None = None,
-    files_per_partition: int = 1,
 ) -> dict:
     """Rewrite the store (a) WITHOUT bands of `drop_docs` — documents
     since deduped away or retired from the kept corpus, whose bands
     otherwise feed every future batch useless candidates — and (b) as
-    `files_per_partition` flat files sorted by (band_idx, band_hash),
-    coalescing the per-append files. Reads either layout (old
-    partitioned stores through partition discovery) and always writes
-    the flat one, so it is also the migration for stores stamped with
-    `buckets`; the rewritten stamp drops that key.
+    one flat file sorted by (band_idx, band_hash), coalescing the
+    per-append files. One `scale.commit_store` flip replaces every live
+    file and re-binds the meta: a crash before the flip leaves the
+    previous generation live, and an append that landed since the read
+    makes the compaction raise `ConcurrentCommitError` instead of
+    dropping it. Returns before/after row and file counts so callers
+    can alert on runaway growth."""
+    from pyspark.sql import Observation
 
-    Staged rewrite: the new store is fully written to `<path>.compact`
-    BEFORE the old directory is swapped out, so a crash before the swap
-    leaves the old store untouched; the swap itself is two renames
-    (at 100 TB this is a metastore/manifest commit — the same boundary
-    documented on `selective_upsert`). Crash recovery windows:
-      * before `os.rename(store_path, old)` — old store intact, delete
-        `<path>.compact` and re-run;
-      * BETWEEN the two renames — the store path is briefly ABSENT and
-        the complete pre-compact store sits at `<path>.old`: restore
-        with `os.rename(old, store_path)` (band_store_read raises with
-        exactly this instruction when it finds `.old` and no store).
-    Single compactor per store assumed, like `vacuum_table`.
-    Returns before/after row and file counts so callers can alert on
-    runaway growth."""
-    import glob
-    import json
-    import os
-    import shutil
+    from social_media_data_pipeline_spark import scale
 
-    staged = store_path.rstrip("/") + ".compact"
-    old = store_path.rstrip("/") + ".old"
-    meta = json.load(open(_band_store_params_path(store_path)))
-    reader = spark.read
-    if "schema" in meta:
-        reader = reader.schema(meta["schema"])
-    cur = reader.parquet(store_path).select(*_BAND_COLS)
-    # the stamp describes the flat layout: no bucket count, and (for
-    # old or pre-r9 stores) the schema of the three band columns only
-    meta.pop("buckets", None)
-    meta["schema"] = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in cur.schema.fields
+    files, gen, meta = state = _band_store_state(store_path)
+    # both row counts ride the rewrite job: no separate count jobs
+    n_before, n_after = Observation(), Observation()
+    keep = _band_frame(spark, store_path, state).observe(
+        n_before, F.count(F.lit(1)).alias("n")
     )
-    n_before = cur.count()
-    f_before = len(glob.glob(os.path.join(store_path, "**", "*.parquet"),
-                             recursive=True))
-    keep = cur
     if drop_docs is not None:
-        keep = cur.join(
+        keep = keep.join(
             drop_docs.select(F.col(drop_docs.columns[0]).alias("doc")),
             "doc",
             "left_anti",
         )
-    if os.path.exists(staged):
-        shutil.rmtree(staged)
-    _write_band_files(keep.repartition(files_per_partition), staged, "overwrite")
-    with open(_band_store_params_path(staged), "w") as f:
-        json.dump(meta, f)
-    n_after = spark.read.schema(meta["schema"]).parquet(staged).count()
-    f_after = len(glob.glob(os.path.join(staged, "*.parquet")))
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(store_path, old)
-    os.rename(staged, store_path)
-    shutil.rmtree(old)
+    new = scale.commit_store(
+        store_path,
+        [(
+            "bands",
+            keep.observe(n_after, F.count(F.lit(1)).alias("n"))
+            .repartition(_COMPACT_FILES)
+            .sortWithinPartitions("band_idx", "band_hash"),
+        )],
+        gen,
+        meta=meta,
+        replaced=files,
+    )
     return {
-        "rows_before": n_before,
-        "rows_after": n_after,
-        "files_before": f_before,
-        "files_after": f_after,
+        "rows_before": int(n_before.get["n"]),
+        "rows_after": int(n_after.get["n"]),
+        "files_before": len(files),
+        "files_after": len(new),
     }
 
 
@@ -838,10 +816,12 @@ def incremental_dedup_against_store(
     band keys the batch carries, flag near-duplicates
     (`incremental_dedup` semantics), then append the survivors' bands — the complete continuous-crawl step,
     so the append-excludes-flagged rule lives here instead of in every
-    caller. Returns the flagged (id_col, dup_of, jaccard) DataFrame
-    (materialized: the append already consumed it)."""
-    import os
-
+    caller. The append is a CAS on the generation the probe read: a
+    batch that raced another appender raises `ConcurrentCommitError`
+    (its duplicates against the winner's batch were never checked)
+    before its caller commits anything downstream. Returns the flagged
+    (id_col, dup_of, jaccard) DataFrame (materialized: the append
+    already consumed it)."""
     from social_media_data_pipeline_spark.functions import sketches
 
     spark = new_docs.sparkSession
@@ -853,14 +833,10 @@ def incremental_dedup_against_store(
     new_bands = sketches.minhash_band_table(
         new_docs, id_col, text_col, num_hashes, bands, shingle_k
     ).localCheckpoint(eager=True)
-    # "store exists" = the meta stamp exists (written before any data,
-    # so a stamp-only store reads as an empty frame — correct for a
-    # first batch); bare parquet without a stamp is refused by
-    # band_store_read rather than silently assuming default params
-    if os.path.exists(_band_store_params_path(store_path)):
-        hist_bands = band_store_read(
-            spark, store_path, probe_bands=new_bands, params=params
-        )
+    base = _band_store_state(store_path)
+    # "store exists" = a generation is committed (its meta bound), even
+    # if every append so far was empty — reads as an empty frame
+    if base[2] is not None:
         flagged = incremental_dedup(
             new_docs,
             history,
@@ -870,7 +846,7 @@ def incremental_dedup_against_store(
             num_hashes,
             bands,
             shingle_k,
-            hist_bands=hist_bands,
+            hist_bands=_band_frame(spark, store_path, base, new_bands, params),
         ).localCheckpoint(eager=True)
     elif not history.isEmpty():
         # no store yet but a non-empty history corpus was passed:
@@ -896,12 +872,7 @@ def incremental_dedup_against_store(
                 "jaccard double",
         )
     if append_survivors:
-        band_store_append(
-            new_bands,
-            store_path,
-            flagged=flagged.select(id_col),
-            params=params,
-        )
+        _append_at(new_bands, store_path, base, flagged.select(id_col), params)
     return flagged
 
 

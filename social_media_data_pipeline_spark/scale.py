@@ -166,10 +166,9 @@ def file_skipping_index(spark: SparkSession, path: str, cols: Sequence[str]) -> 
 # travel until `vacuum_table` drops it. Every store in the package —
 # the tables `selective_upsert`/`selective_delete`/`compact_table`
 # mutate, the curation and IVM state tables, the spectrum monoid
-# store, the ANN artifacts and the lexical index — writes
-# through ONE path, `commit_store`, and reads its CAS base through
-# `read_store` (the dedup band store keeps its own stamp-and-rename
-# layout).
+# store, the ANN artifacts, the lexical index and the dedup band
+# store — writes through ONE path, `commit_store`, and reads its CAS
+# base through `read_store`.
 
 _MANIFEST = "_manifest.json"
 
@@ -213,8 +212,8 @@ def write_table_manifest(
     re-reading the table and redoing the rewrite against the new live
     set). The only in-package caller is `commit_store`, so every
     in-package mutator — `selective_upsert`, `selective_delete`,
-    `compact_table`, `fold_store` (spectrum), the ANN artifacts
-    and the lexical index — passes it. Pass the `EXPECT_ABSENT`
+    `compact_table`, `fold_store` (spectrum), the ANN artifacts,
+    the lexical index and the dedup band store — passes it. Pass the `EXPECT_ABSENT`
     sentinel when the writer read NO manifest and expects to CREATE
     generation 0 — the O_EXCL claim then arbitrates two writers racing
     to initialize the same store. Without `expect_generation` the
@@ -1003,19 +1002,23 @@ def _small_table_rewrite_set(
     )
 
 
-def _cas_base(path: str) -> tuple[list[str], object]:
-    """(live files, CAS generation) for a copy-on-write mutation, from
-    ONE manifest read. A plain directory table is bootstrapped to
-    generation 0 here — committing its current live set changes
-    nothing for readers, and makes the later move-in invisible to the
-    glob fallback. Nothing at `path` yields ([], EXPECT_ABSENT)."""
-    files, gen, _ = read_store(path)
+def _cas_base(path: str) -> tuple[list[str], object, dict | None]:
+    """(live files, CAS generation, meta) for a copy-on-write
+    mutation, from ONE manifest read. The mutation commits `meta` back
+    with its new files: a commit without it would unbind the store's
+    meta (ANN params, lexical index stats, band-store params) and the
+    next `vacuum_table` would delete the orphaned JSON. A plain
+    directory table is bootstrapped to generation 0 here — committing
+    its current live set changes nothing for readers, and makes the
+    later move-in invisible to the glob fallback. Nothing at `path`
+    yields ([], EXPECT_ABSENT, None)."""
+    files, gen, meta = read_store(path)
     if gen is EXPECT_ABSENT:
         files = live_files(path)
         if files:
             commit_store(path, [], EXPECT_ABSENT, keep=files)
             gen = 0
-    return files, gen
+    return files, gen, meta
 
 
 def selective_upsert(
@@ -1064,7 +1067,7 @@ def selective_upsert(
 
     # CAS base (r9): the generation this writer's `before` list was
     # read at — the final commit refuses if another writer moved it.
-    before, gen0 = _cas_base(path)
+    before, gen0, meta = _cas_base(path)
     # the footer index enumerates exactly the live files, so the file
     # total is the manifest list's length — no counting job
     files_total = len(before)
@@ -1077,6 +1080,7 @@ def selective_upsert(
             path,
             [("upsert", updates.observe(_obs, F.count(F.lit(1)).alias("rows")))],
             gen0,
+            meta=meta,
         )
         return {
             "files_total": 0,
@@ -1173,6 +1177,7 @@ def selective_upsert(
         [("upsert", merged.observe(_obs, F.count(F.lit(1)).alias("rows")))],
         gen0,
         keep=[f for f in before if f not in rewritten],
+        meta=meta,
         replaced=rewrite,
         keep_history=keep_history,
     )
@@ -1210,7 +1215,7 @@ def selective_delete(
     """
     # CAS base (r9): same contract as selective_upsert — refuse the
     # final flip if another writer committed since this read
-    before, gen0 = _cas_base(path)
+    before, gen0, meta = _cas_base(path)
     files_total = len(before)
     del_keys = keys.select(key).distinct()
     n_rows_by_file: dict[str, int] | None = None
@@ -1258,6 +1263,7 @@ def selective_delete(
         [("delete", kept)] if n_kept > 0 else [],
         gen0,
         keep=[f for f in before if f not in rewritten],
+        meta=meta,
         replaced=rewrite,
         keep_history=keep_history,
     )
@@ -1320,7 +1326,7 @@ def compact_table(
         raise ValueError(f"target_bytes must be > 0, got {target_bytes}")
     # CAS base (r9): compaction races ingest at 100 TB — refuse the
     # flip if an upsert/delete committed since this read
-    before, gen0 = _cas_base(path)
+    before, gen0, meta = _cas_base(path)
     sizes = {f: _os.path.getsize(f) for f in before}
     small = sorted(
         (f for f in before if sizes[f] < target_bytes), key=lambda f: sizes[f]
@@ -1369,6 +1375,7 @@ def compact_table(
         frames,
         gen0,
         keep=[f for f in before if f not in replaced],
+        meta=meta,
         replaced=sorted(replaced),
         keep_history=keep_history,
     )

@@ -32,6 +32,9 @@ History contract: the dedup history IS the curated table (what the
 pipeline has kept so far), read through its manifest — so duplicates
 are flagged against committed survivors only, and a crashed batch
 re-runs idempotently (same upsert keys, same band-store append set).
+A batch whose band-store append raced another appender raises
+`ConcurrentCommitError` before anything is upserted (its duplicates
+against the racing batch were never checked); re-run it.
 
 Cluster maintenance (r10): pass `labels_path` and the near-dup PAIRS
 each batch finds also maintain a standing (node, component) label

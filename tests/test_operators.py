@@ -527,43 +527,63 @@ class TestBandStoreLifecycle:
             n += t.num_rows
         assert n == 40 * 4
 
-    def test_old_partitioned_store_refused_then_migrated_by_compact(self, spark, tmp_path):
-        """A store in the old partitionBy(band_idx, band_bucket) layout
-        (stamp carries `buckets`) refuses appends with the migration in
-        the message; band_store_compact rewrites it flat with rows and
-        probe results preserved, after which appends work again."""
+    def test_legacy_store_refused_with_rebuild(self, spark, tmp_path):
+        """Directories written before manifest commits — the r14 flat
+        layout (stamp JSON beside mode("append") part files), the r8
+        partitionBy(band_idx, band_bucket) layout, a stamp alone — are
+        refused by every entry point, naming the rebuild, and left
+        untouched."""
         import json
         import os
 
         from social_media_data_pipeline_spark.functions import sketches
         from social_media_data_pipeline_spark.operators import dedup as ddp
 
-        store = str(tmp_path / "bands")
         bands = self._forty_doc_bands(spark)
-        old = bands.withColumn("band_bucket", F.pmod(F.crc32(F.col("band_hash")), F.lit(64)))
-        old.write.partitionBy("band_idx", "band_bucket").parquet(store)
-        schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in old.schema.fields)
-        with open(os.path.join(store, "_band_store_meta.json"), "w") as f:
-            json.dump({"buckets": 64, **self.P16, "schema": schema}, f)
-        probe = sketches.minhash_band_table(
-            self._docs(spark, [(100, "document number 7 with body 49")]), "doc_id", "text")
-        rows_before = self._rows(ddp.band_store_read(spark, store))
-        hits_before = self._rows(ddp.band_store_read(spark, store, probe_bands=probe))
-        assert len(rows_before) == 160 and hits_before
+        flat = str(tmp_path / "flat")
+        bands.write.parquet(flat)
+        parted = str(tmp_path / "parted")
+        bands.withColumn(
+            "band_bucket", F.pmod(F.crc32(F.col("band_hash")), F.lit(64))
+        ).write.partitionBy("band_idx", "band_bucket").parquet(parted)
+        stamp_only = str(tmp_path / "stamp_only")
+        os.makedirs(stamp_only)
+        for store, extra in ((flat, {}), (parted, {"buckets": 64}), (stamp_only, {})):
+            with open(os.path.join(store, "_band_store_meta.json"), "w") as f:
+                json.dump({**extra, **self.P16}, f)
+        probe_docs = self._docs(spark, [(100, "document number 7 with body 49")])
+        probe = sketches.minhash_band_table(probe_docs, "doc_id", "text")
+        rebuild = r"band_store_append\(sketches\.minhash_band_table"
+        for store in (flat, parted, stamp_only):
+            listing = sorted(os.listdir(store))
+            with pytest.raises(ValueError, match=rebuild):
+                ddp.band_store_read(spark, store)
+            with pytest.raises(ValueError, match=rebuild):
+                ddp.band_store_append(probe, store, params=self.P16)
+            with pytest.raises(ValueError, match=rebuild):
+                ddp.band_store_compact(spark, store)
+            with pytest.raises(ValueError, match=rebuild):
+                ddp.incremental_dedup_against_store(
+                    probe_docs, probe_docs.limit(0), store, "doc_id", "text")
+            assert sorted(os.listdir(store)) == listing
 
-        with pytest.raises(ValueError, match="band_store_compact"):
-            ddp.band_store_append(probe, store, params=self.P16)
+    def test_data_without_meta_stamp_refused(self, spark, tmp_path):
+        """Parquet band data with neither a stamp nor a manifest must be
+        refused, not read as an absent store or with silently-assumed
+        params and schema."""
+        import os
 
-        stats = ddp.band_store_compact(spark, store)
-        assert stats["rows_before"] == stats["rows_after"] == 160
-        assert stats["files_after"] == 1
-        assert not [d for d in os.listdir(store) if os.path.isdir(os.path.join(store, d))]
-        meta = json.load(open(os.path.join(store, "_band_store_meta.json")))
-        assert "buckets" not in meta and "band_bucket" not in meta["schema"]
-        assert self._rows(ddp.band_store_read(spark, store)) == rows_before
-        assert self._rows(ddp.band_store_read(spark, store, probe_bands=probe)) == hits_before
-        ddp.band_store_append(probe, store, params=self.P16)
-        assert len(self._rows(ddp.band_store_read(spark, store))) == 164
+        from social_media_data_pipeline_spark.operators import dedup as ddp
+
+        store = str(tmp_path / "bands")
+        self._forty_doc_bands(spark).write.parquet(store)
+        listing = sorted(os.listdir(store))
+        rebuild = r"no manifest.*band_store_append\(sketches\.minhash_band_table"
+        with pytest.raises(ValueError, match=rebuild):
+            ddp.band_store_read(spark, store)
+        with pytest.raises(ValueError, match=rebuild):
+            ddp.band_store_read(spark, store, params=self.P16)
+        assert sorted(os.listdir(store)) == listing
 
     def test_param_stamp_refuses_mixed_signatures(self, spark, tmp_path):
         import pytest
@@ -582,39 +602,114 @@ class TestBandStoreLifecycle:
             ddp.band_store_read(spark, store, params={"num_hashes": 32, "bands": 8, "shingle_k": 3})
 
     def test_compact_crash_before_swap_leaves_store_intact(self, spark, tmp_path, monkeypatch):
-        import os
-
+        """A compaction whose manifest flip fails leaves the store on
+        its previous generation: same generation, same rows."""
+        from social_media_data_pipeline_spark import scale
         from social_media_data_pipeline_spark.functions import sketches
         from social_media_data_pipeline_spark.operators import dedup as ddp
 
         store = str(tmp_path / "bands")
         docs = self._docs(spark, [(1, "hello world text"), (2, "other text body")])
         bands = sketches.minhash_band_table(docs, "doc_id", "text")
-        ddp.band_store_append(bands, store, params={"num_hashes": 16, "bands": 4, "shingle_k": 3})
-        before = sorted((r["doc"], r["band_idx"], r["band_hash"])
-                        for r in ddp.band_store_read(spark, store).collect())
-        real_rename = os.rename
+        ddp.band_store_append(bands, store, params=self.P16)
+        ddp.band_store_append(self._forty_doc_bands(spark), store, params=self.P16)
+        gen_before = scale.read_store(store)[1]
+        before = self._rows(ddp.band_store_read(spark, store))
 
-        def boom(src, dst):
-            raise OSError("simulated crash at swap")
+        def boom(path, files, expect_generation=None):
+            raise OSError("simulated crash at the manifest flip")
 
-        monkeypatch.setattr(os, "rename", boom)
-        import pytest
-
+        monkeypatch.setattr(scale, "write_table_manifest", boom)
         with pytest.raises(OSError, match="simulated crash"):
             ddp.band_store_compact(spark, store)
-        monkeypatch.setattr(os, "rename", real_rename)
-        after = sorted((r["doc"], r["band_idx"], r["band_hash"])
-                       for r in ddp.band_store_read(spark, store).collect())
-        assert after == before  # staged-rewrite: old store untouched
+        monkeypatch.undo()
+        assert scale.read_store(store)[1] == gen_before == 1
+        assert self._rows(ddp.band_store_read(spark, store)) == before
+
+    def test_racing_appender_loses_loudly(self, spark, tmp_path, monkeypatch):
+        """Two appenders read the same generation; the winner's append
+        lands inside the loser's read-to-commit window. The loser
+        raises ConcurrentCommitError and leaves no file behind; the
+        live rows are the base plus the winner's."""
+        import os
+
+        from social_media_data_pipeline_spark import scale
+        from social_media_data_pipeline_spark.functions import sketches
+        from social_media_data_pipeline_spark.operators import dedup as ddp
+
+        store = str(tmp_path / "bands")
+        base = sketches.minhash_band_table(
+            self._docs(spark, [(1, self.BASE)]), "doc_id", "text")
+        winner = sketches.minhash_band_table(
+            self._docs(spark, [(2, "the winning batch body text")]), "doc_id", "text")
+        loser = sketches.minhash_band_table(
+            self._docs(spark, [(3, "the losing batch body text")]), "doc_id", "text")
+        ddp.band_store_append(base, store, params=self.P16)
+        expected = self._rows(base.unionByName(winner))
+        real_commit = scale.write_table_manifest
+        fired = {"winner": False}
+
+        def interleave(p, files, expect_generation=None):
+            # on the loser's CAS commit, the winner's whole append runs
+            # first — the lost-update interleaving
+            if not fired["winner"]:
+                fired["winner"] = True
+                monkeypatch.setattr(scale, "write_table_manifest", real_commit)
+                ddp.band_store_append(winner, store, params=self.P16)
+                monkeypatch.setattr(scale, "write_table_manifest", interleave)
+            return real_commit(p, files, expect_generation)
+
+        monkeypatch.setattr(scale, "write_table_manifest", interleave)
+        before = set(os.listdir(store))
+        with pytest.raises(scale.ConcurrentCommitError):
+            ddp.band_store_append(loser, store, params=self.P16)
+        monkeypatch.undo()
+        assert self._rows(ddp.band_store_read(spark, store)) == expected
+        live = {os.path.basename(f) for f in scale.read_table_manifest(store)}
+        new = {
+            f for f in set(os.listdir(store)) - before - live
+            if not f.startswith("_manifest")
+        }
+        assert new == set()  # the loser un-staged its files and meta
+
+    def test_store_moved_between_probe_and_append_raises(self, spark, tmp_path, monkeypatch):
+        """incremental_dedup_against_store appends against the
+        generation its probe read saw: a batch appended in between
+        was never probed, so the append raises instead of landing
+        beside it with the cross-batch duplicates unflagged."""
+        from social_media_data_pipeline_spark import scale
+        from social_media_data_pipeline_spark.functions import sketches
+        from social_media_data_pipeline_spark.operators import dedup as ddp
+
+        store = str(tmp_path / "bands")
+        b1 = self._docs(spark, [(1, self.BASE)])
+        ddp.incremental_dedup_against_store(b1, b1.limit(0), store, "doc_id", "text")
+        racer = self._docs(spark, [(5, "a racing batch with other text")])
+        batch = self._docs(spark, [(10, "a racing batch with other text")])
+        real_dedup = ddp.incremental_dedup
+
+        def dedup_then_race(*args, **kwargs):
+            out = real_dedup(*args, **kwargs)
+            ddp.band_store_append(
+                sketches.minhash_band_table(racer, "doc_id", "text"), store,
+                params=self.P16)
+            return out
+
+        monkeypatch.setattr(ddp, "incremental_dedup", dedup_then_race)
+        with pytest.raises(scale.ConcurrentCommitError):
+            ddp.incremental_dedup_against_store(batch, b1, store, "doc_id", "text")
+        monkeypatch.undo()
+        stored = {r["doc"] for r in ddp.band_store_read(spark, store).collect()}
+        assert stored == {1, 5}
 
     def test_empty_first_batch_does_not_poison_store(self, spark, tmp_path):
         """r9 regression (r8 verdict #1): an EMPTY first micro-batch —
         routine in continuous streams (empty part files, all-duplicate
         batches) — must not leave a store that every later read dies
-        on. The zero-row append stamps meta (schema included) and skips
-        the data write; reads resolve from the stamp, never footer
-        inference; the next real cycle works normally."""
+        on. The zero-row append commits generation 0 with the meta
+        (params and schema) bound; reads take the schema from the meta,
+        never footer inference; the next real cycle works normally."""
+        from social_media_data_pipeline_spark import scale
         from social_media_data_pipeline_spark.operators import dedup as ddp
 
         store = str(tmp_path / "bands")
@@ -623,9 +718,12 @@ class TestBandStoreLifecycle:
             empty, empty, store, "doc_id", "text"
         )
         assert f0.count() == 0
-        import os
-
-        assert os.path.exists(os.path.join(store, "_band_store_meta.json"))
+        _files, gen, meta = scale.read_store(store)
+        assert gen == 0
+        assert meta == {
+            "params": self.P16,
+            "schema": "doc bigint, band_idx int, band_hash string",
+        }
         # the r8 bug: this read raised UNABLE_TO_INFER_SCHEMA forever
         got = ddp.band_store_read(spark, store)
         assert got.count() == 0
@@ -640,23 +738,6 @@ class TestBandStoreLifecycle:
             b2, b1, store, "doc_id", "text"
         ).collect()
         assert {r["doc_id"] for r in flagged} == {10}
-
-    def test_data_without_meta_stamp_refused(self, spark, tmp_path):
-        """Parquet data with no meta stamp must be refused, not read
-        with silently-assumed default params (wrong bucket pruning)."""
-        from social_media_data_pipeline_spark.operators import dedup as ddp
-        from social_media_data_pipeline_spark.functions import sketches
-        import pytest
-
-        store = str(tmp_path / "bands")
-        docs = self._docs(spark, [(1, self.BASE)])
-        bands = sketches.minhash_band_table(docs, "doc_id", "text")
-        ddp.band_store_append(bands, store)
-        import os
-
-        os.remove(os.path.join(store, "_band_store_meta.json"))
-        with pytest.raises(ValueError, match="no _band_store_meta"):
-            ddp.band_store_read(spark, store)
 
     def test_absent_store_nonempty_history_bootstraps(self, spark, tmp_path):
         """r9 (ADVICE): store absent + non-empty history must fall back
@@ -674,26 +755,6 @@ class TestBandStoreLifecycle:
         # corpus's own bands (owner's ingest path) are not
         stored = {r["doc"] for r in ddp.band_store_read(spark, store).collect()}
         assert stored == {11}
-
-    def test_mid_swap_crash_recovery_hint(self, spark, tmp_path):
-        """A compact crash between the two swap renames leaves the
-        store absent with the full pre-compact copy at <path>.old —
-        the read error must say exactly how to restore."""
-        from social_media_data_pipeline_spark.operators import dedup as ddp
-        from social_media_data_pipeline_spark.functions import sketches
-        import os
-        import pytest
-
-        store = str(tmp_path / "bands")
-        docs = self._docs(spark, [(1, self.BASE)])
-        ddp.band_store_append(
-            sketches.minhash_band_table(docs, "doc_id", "text"), store
-        )
-        os.rename(store, store + ".old")  # the mid-swap crash state
-        with pytest.raises(FileNotFoundError, match="os.rename"):
-            ddp.band_store_read(spark, store)
-        os.rename(store + ".old", store)  # the documented recovery
-        assert ddp.band_store_read(spark, store).count() > 0
 
 
 class TestDuplicateWindowFraction:

@@ -652,6 +652,31 @@ class TestManifestCommit:
         scale.selective_upsert(spark, path, updates, "k")
         assert dict(self._snapshot(spark, path)) == post
 
+    def test_mutators_keep_bound_meta(self, spark, tmp_path):
+        """compact_table, selective_upsert and selective_delete commit
+        the store's bound meta back with their files: it survives each
+        mutation and the vacuum after it."""
+        path = str(tmp_path / "t")
+        meta = {"params": {"k": 4}, "schema": "k bigint, v bigint"}
+        rows = spark.range(64).selectExpr("id AS k", "id * 2 AS v")
+        scale.commit_store(
+            path,
+            [("a", rows.filter("k < 32").coalesce(1)),
+             ("b", rows.filter("k >= 32").coalesce(1))],
+            scale.EXPECT_ABSENT,
+            meta=meta,
+        )
+        assert scale.compact_table(spark, path)["groups_compacted"] == 1
+        assert scale.read_store(path)[2] == meta
+        updates = spark.createDataFrame([(3, -1), (70, -2)], "k long, v long")
+        scale.selective_upsert(spark, path, updates, "k")
+        assert scale.read_store(path)[2] == meta
+        keys = spark.createDataFrame([(5,)], "k long")
+        assert scale.selective_delete(spark, path, keys, "k")["rows_deleted"] == 1
+        scale.vacuum_table(path, grace_seconds=0)
+        assert scale.read_store(path)[2] == meta
+        assert len(self._snapshot(spark, path)) == 64
+
 
 class TestManifestTimeTravel:
     """r8: manifest generations — every commit is preserved as a

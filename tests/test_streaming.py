@@ -348,6 +348,7 @@ class TestStreamingIncrementalDedup:
         bands to the store. Batch 2's duplicate of a batch-1 document
         must be flagged; batch-1 (empty-store) docs must pass."""
         from social_media_data_pipeline_spark.functions import sketches
+        from social_media_data_pipeline_spark.operators import dedup as ddp
 
         src = str(tmp_path / "docs_stream")
         store = str(tmp_path / "band_store")
@@ -383,8 +384,6 @@ class TestStreamingIncrementalDedup:
         def dedup_batch(batch_df, batch_id):
             # r8: the band-store lifecycle owns the whole cycle —
             # pruned read, flag, survivors-only append
-            from social_media_data_pipeline_spark.operators import dedup as ddp
-
             history = (
                 spark.createDataFrame(kept, "doc_id long, text string")
                 if kept
@@ -411,7 +410,7 @@ class TestStreamingIncrementalDedup:
         # doc 10 (batch 2) duplicates doc 1 (batch 1); nothing else flagged
         assert flagged == {10: 1}
         # the store holds bands for the three survivors only
-        stored = {r["doc"] for r in spark.read.parquet(store).select("doc").distinct().collect()}
+        stored = {r["doc"] for r in ddp.band_store_read(spark, store).collect()}
         assert stored == {1, 2, 11}
 
 

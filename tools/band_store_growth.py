@@ -20,7 +20,6 @@ SPARK_GRAFT_SF_DIR, default sf0.1)
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -34,6 +33,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from social_media_data_pipeline_spark import io as eio  # noqa: E402
+from social_media_data_pipeline_spark import scale  # noqa: E402
 from social_media_data_pipeline_spark.operators import dedup as ddp  # noqa: E402
 from social_media_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -69,10 +69,8 @@ def main() -> None:
         total_flagged += n_flagged
         survivors = batch.join(flagged.select("doc_id"), "doc_id", "left_anti")
         history.unionByName(survivors).write.mode("overwrite").parquet(kept_path)
-        store_rows = spark.read.parquet(store).count()
-        store_files = len(
-            glob.glob(os.path.join(store, "**", "*.parquet"), recursive=True)
-        )
+        store_rows = ddp.band_store_read(spark, store).count()
+        store_files = len(scale.read_store(store)[0])
         rows.append(
             {
                 "batch": i,
