@@ -31,25 +31,6 @@ def _get_model(factory: Callable[[], Any]) -> Any:
     return _MODEL_CACHE[key]
 
 
-LANG_STRUCT = T.StructType(
-    [T.StructField("lang", T.StringType()), T.StructField("score", T.DoubleType())]
-)
-
-
-def detect_language_udf(detector_factory: Callable[[], Any]):
-    """F1: text → struct(lang, score); vectorized over Arrow batches.
-    swifter's multicore apply (`Translator.py:88`) ≙ exactly this,
-    distributed."""
-
-    @F.pandas_udf(LANG_STRUCT)
-    def _detect(texts: pd.Series) -> pd.DataFrame:
-        model = _get_model(detector_factory)
-        pairs = [model.detect(t) for t in texts]
-        return pd.DataFrame(pairs, columns=["lang", "score"])
-
-    return _detect
-
-
 PREDICTIONS_TYPE = T.ArrayType(
     T.StructType(
         [T.StructField("category", T.StringType()), T.StructField("confidence", T.DoubleType())]

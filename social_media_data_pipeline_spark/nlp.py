@@ -6,9 +6,10 @@ language, with 'empty' passthrough (`:125-139`), `<error>` sentinel on
 bad payloads, and CSV checkpoint every 100 rows (`:141-144`).
 
 Engine semantics:
-- detection: Arrow-batched pandas_udf (ml.inference.detect_language_udf);
-- the conditional is a JVM-side `when/otherwise` (E15) — only rows that
-  NEED translation reach the Python translator;
+- one Arrow-batched pandas_udf over the text column only: each row is
+  detected once, and the translator is called only for rows that are
+  not passthrough (E15), so already-target-language rows never reach
+  the translation API;
 - restartability: the reference's row-level checkpointing is replaced by
   idempotent re-run over a keyed output table — pair with
   streaming.incremental.merge_new_rows for checkpoint-every-batch.
@@ -24,68 +25,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from social_media_data_pipeline_spark.ml.inference import _get_model, detect_language_udf
+from social_media_data_pipeline_spark.ml.inference import _get_model
 
-
-def detect_language_columns(
-    df: DataFrame, target_column: str, detector_factory: Callable[[], Any]
-) -> DataFrame:
-    """Adds lang_og / lang_score (`Translator.py:88-93` column contract).
-    NA→"" normalization first (`Translator.py:85`, P12)."""
-    normalized = F.coalesce(F.col(target_column).cast("string"), F.lit(""))
-    detected = detect_language_udf(detector_factory)(normalized)
-    return (
-        df.withColumn("__lang", detected)
-        .withColumn("lang_og", F.col("__lang.lang"))
-        .withColumn("lang_score", F.col("__lang.score"))
-        .drop("__lang")
-    )
-
-
-def translate_column(
-    df: DataFrame,
-    target_column: str,
-    target_language: str,
-    translator_factory: Callable[[], Any],
-    min_score: float = 0.9,
-) -> DataFrame:
-    """Conditional translation (`Translator.py:96-145`): passthrough when
-    already target-language with score > min_score or 'empty'; translate
-    otherwise; '<error>' sentinel on translator failure.
-
-    The when/otherwise guard keeps already-translated rows JVM-side;
-    only the otherwise branch crosses into the Python translator.
-    """
-    out_col = f"{target_column}_{target_language}"
-
-    @F.pandas_udf(T.StringType())
-    def _translate(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        model = _get_model(translator_factory)
-
-        def one(t):
-            if t is None:
-                return None
-            try:
-                return model.translate(t)
-            except Exception:
-                return "<error>"  # `Translator.py:133-136`
-
-        for batch in texts:
-            yield batch.map(one)
-
-    text = F.coalesce(F.col(target_column).cast("string"), F.lit(""))
-    passthrough = (
-        ((F.col("lang_og") == F.lit(target_language)) & (F.col("lang_score") > F.lit(min_score)))
-        | (F.col("lang_og") == F.lit("empty"))
-    )
-    # NB: a `when(passthrough, text).otherwise(udf(text))` would NOT skip
-    # the UDF for passthrough rows — Spark extracts Python UDFs into a
-    # separate ArrowEvalPython node that runs on EVERY row before the
-    # CASE picks. Branch-union keeps passthrough rows JVM-only, which is
-    # the whole point at translation-API cost.
-    keep = df.filter(passthrough).withColumn(out_col, text)
-    translate = df.filter(~passthrough).withColumn(out_col, _translate(text))
-    return keep.unionByName(translate)
+_DETECT_TRANSLATE = T.StructType(
+    [
+        T.StructField("lang", T.StringType()),
+        T.StructField("score", T.DoubleType()),
+        T.StructField("translated", T.StringType()),
+    ]
+)
 
 
 def translate_table(
@@ -96,9 +44,48 @@ def translate_table(
     translator_factory: Callable[[], Any],
     min_score: float = 0.9,
 ) -> DataFrame:
-    """Full Translator stage (`Translator.py:52-65`): detect then
-    conditionally translate."""
-    detected = detect_language_columns(df, target_column, detector_factory)
-    return translate_column(
-        detected, target_column, target_language, translator_factory, min_score
+    """Full Translator stage (`Translator.py:52-145`): adds lang_og /
+    lang_score (`:88-93` column contract) and `<target_column>_<lang>`.
+    NA→"" normalization first (`:85`, P12). A row passes through
+    untranslated when it is 'empty' or already the target language with
+    score > min_score; otherwise it is translated, with the '<error>'
+    sentinel on translator failure (`:133-136`).
+
+    Detection and the conditional translation run in ONE Python pass
+    per row. A `when(passthrough, text).otherwise(udf(text))` would not
+    skip the translator (Spark evaluates an extracted Python UDF on
+    every row before the CASE picks), and splitting the rows into keep
+    and translate branches re-runs the detect UDF once per branch."""
+    out_col = f"{target_column}_{target_language}"
+
+    @F.pandas_udf(_DETECT_TRANSLATE)
+    def _detect_translate(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        detector = _get_model(detector_factory)
+
+        def one(t: str) -> tuple[str, float, str]:
+            lang, score = detector.detect(t)
+            if lang == "empty" or (lang == target_language and score > min_score):
+                return lang, score, t
+            translator = _get_model(translator_factory)
+            try:
+                return lang, score, translator.translate(t)
+            except Exception:
+                return lang, score, "<error>"
+
+        for batch in texts:
+            yield pd.DataFrame(
+                [one(t) for t in batch], columns=["lang", "score", "translated"]
+            )
+
+    normalized = F.coalesce(F.col(target_column).cast("string"), F.lit(""))
+    return (
+        df.withColumn("__lang", _detect_translate(normalized))
+        .withColumns(
+            {
+                "lang_og": F.col("__lang.lang"),
+                "lang_score": F.col("__lang.score"),
+                out_col: F.col("__lang.translated"),
+            }
+        )
+        .drop("__lang")
     )

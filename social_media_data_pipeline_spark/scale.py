@@ -162,8 +162,10 @@ def file_skipping_index(spark: SparkSession, path: str, cols: Sequence[str]) -> 
 # `pruned_read*`, `manifest_read`, `read_store`) sees exactly the
 # pre-commit or the post-commit snapshot, never a mix. At 100 TB this
 # file IS the transaction log entry; like Delta/Iceberg, every commit
-# also keeps a numbered generation (`_manifest-<n>.json`) for time
-# travel until `vacuum_table` drops it. Every store in the package —
+# also writes a numbered generation (`_manifest-<n>.json`), kept for
+# time travel until `vacuum_table` drops it when the commit that
+# supersedes it runs with `keep_history` (otherwise that commit deletes
+# it with the files it replaced). Every store in the package —
 # the tables `selective_upsert`/`selective_delete`/`compact_table`
 # mutate, the curation and IVM state tables, the spectrum monoid
 # store, the ANN artifacts, the lexical index and the dedup band
@@ -260,6 +262,19 @@ def write_table_manifest(
             ) from None
         with _os.fdopen(fd, "w") as fh:
             _json.dump(doc, fh)
+        # re-check after the claim: `commit_store` deletes superseded
+        # generation files, so a writer stalled between the pointer
+        # check and the claim could otherwise claim a freed name of a
+        # generation the pointer has already passed
+        now = _read_manifest_doc(path)
+        now_gen = now["generation"] if now else None
+        if now_gen != expected:
+            _os.remove(hist)
+            raise ConcurrentCommitError(
+                f"write_table_manifest: {path} moved to generation "
+                f"{now_gen} while this writer claimed generation {gen}; "
+                "re-read and retry"
+            )
     else:
         tmp = hist + ".tmp"
         with open(tmp, "w") as fh:
@@ -328,16 +343,26 @@ def read_store(path: str) -> tuple[list[str], object, dict | None]:
 
     # ONE document read: files and generation must come from the same
     # commit, or a flip in between would hand back a stale CAS base
-    doc = _read_manifest_doc(path)
-    if doc is None:
-        return [], EXPECT_ABSENT, None
-    files = [_os.path.join(path, n) for n in doc["files"]]
-    meta = None
-    for f in files:
-        if f.endswith(".json"):
-            with open(f) as fh:
-                meta = _json.load(fh)
-    return _data_files(files), doc["generation"], meta
+    while True:
+        doc = _read_manifest_doc(path)
+        if doc is None:
+            return [], EXPECT_ABSENT, None
+        files = [_os.path.join(path, n) for n in doc["files"]]
+        meta = None
+        try:
+            for f in files:
+                if f.endswith(".json"):
+                    with open(f) as fh:
+                        meta = _json.load(fh)
+        except FileNotFoundError:
+            # a commit flipped past this generation and dropped its
+            # meta (`commit_store`); a missing meta of the LIVE
+            # generation is damage, not a race
+            now = _read_manifest_doc(path)
+            if now is None or now["generation"] == doc["generation"]:
+                raise
+            continue
+        return _data_files(files), doc["generation"], meta
 
 
 def commit_store(
@@ -367,9 +392,11 @@ def commit_store(
     before it leaves the previous generation fully live (the moved-in
     files stay unreferenced until `vacuum_table`). A lost CAS
     un-stages this writer's files and re-raises
-    `ConcurrentCommitError`. After a won flip the `replaced` files are
-    deleted unless `keep_history` — then earlier generations stay
-    readable via `manifest_read(version=...)` until `vacuum_table`.
+    `ConcurrentCommitError`. After a won flip the `replaced` files, the
+    previous generation file and the meta it bound are deleted
+    (`_drop_generation`) unless `keep_history` — then earlier
+    generations stay readable via `manifest_read(version=...)` until
+    `vacuum_table`.
     Returns the new data files."""
     import json as _json
     import os as _os
@@ -415,7 +442,39 @@ def commit_store(
     if not keep_history:
         for f in replaced:
             _os.remove(f)
+        _drop_generation(path, gen - 1, [*keep, *staged], replaced)
     return new
+
+
+def _drop_generation(
+    path: str, gen: int, live: Sequence[str], replaced: Sequence[str]
+) -> None:
+    """Delete superseded generation `gen`'s file, and the meta JSON it
+    bound that the new live set does not list. The meta stays when the
+    new commit leaves some of `gen`'s data files on disk unreferenced
+    (neither live nor `replaced`: the ANN retrain keeps them for
+    readers pinned to that snapshot), so `vacuum_table` reclaims it
+    with them. Without this an append-only store keeps one generation
+    file and one meta per commit, and a stream never vacuums. Safe
+    against racing writers: the CAS arbitrates on the pointer and on
+    the claim of the NEXT generation file, which `write_table_manifest`
+    re-checks against the pointer."""
+    import json as _json
+    import os as _os
+
+    hist = _os.path.join(path, f"_manifest-{gen}.json")
+    try:
+        with open(hist) as fh:
+            listed = _json.load(fh)["files"]
+    except FileNotFoundError:  # generation 0's predecessor, or vacuumed
+        return
+    live = {_os.path.basename(f) for f in live}
+    gone = live | {_os.path.basename(f) for f in replaced}
+    if all(n in gone for n in _data_files(listed)):
+        for n in listed:
+            if n.startswith("_meta-") and n not in live:
+                _os.remove(_os.path.join(path, n))
+    _os.remove(hist)
 
 
 _MAX_COMMIT_RETRIES = 5

@@ -677,6 +677,103 @@ class TestManifestCommit:
         assert scale.read_store(path)[2] == meta
         assert len(self._snapshot(spark, path)) == 64
 
+    def test_commit_drops_superseded_generation_files(self, spark, tmp_path):
+        """A commit without keep_history deletes the previous generation
+        file and the meta it bound: a store appended to every batch
+        holds one generation and one meta, not one per batch."""
+        import os
+
+        from social_media_data_pipeline_spark.functions import sketches
+        from social_media_data_pipeline_spark.operators import dedup as ddp
+
+        def generation_files(path):
+            names = os.listdir(path)
+            return (
+                sorted(n for n in names if n.startswith("_manifest-")),
+                sorted(n for n in names if n.startswith("_meta-")),
+            )
+
+        store = str(tmp_path / "bands")
+        params = {"num_hashes": 16, "bands": 4, "shingle_k": 3}
+        for b in range(3):
+            docs = spark.createDataFrame(
+                [(b * 10 + i, f"batch {b} document {i} body") for i in range(4)],
+                "doc_id long, text string",
+            )
+            ddp.band_store_append(
+                sketches.minhash_band_table(docs, "doc_id", "text"), store, params=params
+            )
+        manifests, metas = generation_files(store)
+        assert manifests == ["_manifest-2.json"]
+        assert len(metas) == 1 and metas[0].startswith("_meta-g2-")
+        _, gen, meta = scale.read_store(store)
+        assert gen == 2 and meta["params"] == params
+        assert ddp.band_store_read(spark, store).select("doc").distinct().count() == 12
+
+        kept = str(tmp_path / "kept")
+        rows = spark.range(8).selectExpr("id AS k", "id AS v")
+        gen = scale.EXPECT_ABSENT
+        for g in range(3):
+            scale.commit_store(
+                kept, [("p", rows.coalesce(1))], gen, meta={"g": g}, keep_history=True
+            )
+            gen = scale.read_store(kept)[1]
+        assert generation_files(kept)[0] == [f"_manifest-{g}.json" for g in range(3)]
+        assert len(generation_files(kept)[1]) == 3
+
+    def test_claim_rechecks_pointer(self, tmp_path, monkeypatch):
+        """A writer that passed the pointer check at a generation the
+        store has since left must not re-claim that generation's freed
+        file name and flip the pointer back."""
+        import os
+
+        path = str(tmp_path / "t")
+        os.makedirs(path)
+        gen = scale.EXPECT_ABSENT
+        for _ in range(3):
+            gen = scale.write_table_manifest(path, [], expect_generation=gen)
+        os.remove(os.path.join(path, "_manifest-1.json"))  # superseded, dropped
+        real = scale._read_manifest_doc
+        stale = [{"files": [], "generation": 0}]
+
+        def stalled(p, version=None):
+            # the writer's pointer check saw generation 0
+            return stale.pop() if stale else real(p, version)
+
+        monkeypatch.setattr(scale, "_read_manifest_doc", stalled)
+        with pytest.raises(scale.ConcurrentCommitError, match="moved to generation 2"):
+            scale.write_table_manifest(path, ["x.parquet"], expect_generation=0)
+        monkeypatch.undo()
+        assert scale.read_store(path)[1] == 2
+        assert not os.path.exists(os.path.join(path, "_manifest-1.json"))
+
+    def test_read_store_rereads_when_meta_dropped_under_it(self, tmp_path, monkeypatch):
+        """A reader that read the pointer just before a commit dropped
+        that generation's meta re-reads the new generation; a missing
+        meta of the live generation still raises."""
+        import json
+        import os
+
+        path = str(tmp_path / "t")
+        os.makedirs(path)
+        for g in range(2):
+            with open(os.path.join(path, f"_meta-g{g}.json"), "w") as fh:
+                json.dump({"g": g}, fh)
+        scale.write_table_manifest(path, ["_meta-g0.json"], scale.EXPECT_ABSENT)
+        real = scale._read_manifest_doc
+        stale = [real(path)]
+        scale.write_table_manifest(path, ["_meta-g1.json"], 0)
+        os.remove(os.path.join(path, "_meta-g0.json"))
+        monkeypatch.setattr(
+            scale, "_read_manifest_doc",
+            lambda p, version=None: stale.pop() if stale else real(p, version),
+        )
+        assert scale.read_store(path)[1:] == (1, {"g": 1})
+        monkeypatch.undo()
+        os.remove(os.path.join(path, "_meta-g1.json"))
+        with pytest.raises(FileNotFoundError):
+            scale.read_store(path)
+
 
 class TestManifestTimeTravel:
     """r8: manifest generations — every commit is preserved as a
@@ -1372,7 +1469,9 @@ class TestManifestConcurrency:
             scale.write_table_manifest = real_write
         # B read an ABSENT store, then re-merged into C's generation 0
         assert seen == [None, {"y": 1}]
-        assert scale.manifest_versions(store) == [0, 1]
+        # generation 1 is live, and its commit dropped generation 0's file
+        assert scale.read_store(store)[1] == 1
+        assert scale.manifest_versions(store) == [1]
         assert self._counts(spark, store) == {
             "x": 2,  # B
             "y": 1,  # C

@@ -550,9 +550,11 @@ class TestNlp:
         assert rows[4].caption_en == ""
 
     def test_passthrough_rows_never_reach_translator(self, spark, tmp_path):
-        """The branch-union plan keeps already-target-language rows out of
-        the Python translator entirely (a when/otherwise would evaluate
-        the UDF on every row — Spark hoists Python UDFs above CASE)."""
+        """Already-target-language rows never reach the translator: the
+        one detect-and-translate pass checks passthrough per row before
+        it calls the translator (a when/otherwise over a translate UDF
+        would evaluate it on every row — Spark hoists Python UDFs above
+        CASE)."""
         marker = str(tmp_path / "calls.log")
 
         class CountingTranslator:
@@ -575,6 +577,33 @@ class TestNlp:
 
         calls = open(marker).read().count("call") if os.path.exists(marker) else 0
         assert calls == 1  # only the Spanish row crossed into Python
+
+    def test_detector_runs_once_per_input_row(self, spark, tmp_path):
+        """Detection and translation share one Python pass: each input
+        row is detected exactly once, however many rows translate."""
+        marker = str(tmp_path / "detects.log")
+
+        class CountingDetector(models.HeuristicLangDetector):
+            def detect(self, text):
+                with open(marker, "a") as f:
+                    f.write("call\n")
+                return super().detect(text)
+
+        texts = [
+            "the cat is in the house and it is that big for a house",
+            "el gato es grande y la casa es una maravilla por que es",
+            "",
+            None,
+            "le chat est dans la maison et il est grand pour une maison",
+        ]
+        df = spark.createDataFrame(list(enumerate(texts)), "id long, caption string")
+        out = nlp.translate_table(
+            df.repartition(3), "caption", "en", CountingDetector, models.StubTranslator
+        )
+        rows = {r.id: r for r in out.collect()}
+        assert sorted(rows) == list(range(len(texts)))
+        assert rows[1].caption_en.startswith("[en] ") and rows[3].lang_og == "empty"
+        assert open(marker).read().count("call") == len(texts)
 
     def test_translate_error_sentinel(self, spark):
         df = spark.createDataFrame([(1, "x " * 3000)], "id long, caption string")
