@@ -2933,8 +2933,8 @@ def q_docs_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_docs_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE encoding composed with training: replay the 20 trained
-    merges over every document map-side (`functions/bpe.py:bpe_encode`)
-    and report per-doc word/BPE-token counts — compression the merges
+    merges over every document (`functions/bpe.py:bpe_encode_corpus`,
+    a broadcast join against the trained vocabulary) and report per-doc word/BPE-token counts — compression the merges
     bought. Oracle joins exploded tokens to the trained vocabulary's
     final symbol arrays (every corpus word is in-vocab by
     construction)."""

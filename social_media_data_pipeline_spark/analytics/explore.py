@@ -1,6 +1,8 @@
-"""Exploratory analysis (SURVEY.md §2.6, M2): the full
-`analyze_instagram_dataset` surface (`Exploration/ExploratoryAnalysis.py:54-110`)
-as a dict of result DataFrames instead of files/plots.
+"""Exploratory analysis (SURVEY.md §2.6, M2): the aggregates the
+exploratory stage reports from `analyze_instagram_dataset`
+(`Exploration/ExploratoryAnalysis.py:54-110`), as DataFrames instead of
+files/plots. The other A-operators (histogram, describe, profile,
+correlation) live in `operators/aggregates.py`.
 
 Everything is a single lazy plan per aggregate; the reference
 materializes the whole frame then loops pandas groupbys.
@@ -9,9 +11,8 @@ materializes the whole frame then loops pandas groupbys.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from social_media_data_pipeline_spark.operators import aggregates, filters
+from social_media_data_pipeline_spark.operators import aggregates
 
 
 def posts_per_period(df: DataFrame, ts_col: str = "timestamp") -> dict[str, DataFrame]:
@@ -27,65 +28,3 @@ def posts_per_period(df: DataFrame, ts_col: str = "timestamp") -> dict[str, Data
 def hashtag_frequency(df: DataFrame, col: str = "hashtags") -> DataFrame:
     """A3 (`ExploratoryAnalysis.py:88-89`)."""
     return aggregates.value_counts(df, col, out_value="hashtag", out_count="count")
-
-
-def engagement_histograms(df: DataFrame, cols=("likes", "comment_count"), bin_width=100.0):
-    """A4 (`ExploratoryAnalysis.py:92-99`)."""
-    return {c: aggregates.histogram(df, c, bin_width) for c in cols}
-
-
-def numeric_summary(df: DataFrame) -> DataFrame:
-    """A5 describe over the numeric columns (`ExploratoryAnalysis.py:31`)."""
-    numeric = filters.select_numeric_columns(df)
-    return aggregates.describe_numeric(numeric, numeric.columns)
-
-
-def profile(df: DataFrame, distinct_cap: int = 20) -> DataFrame:
-    """A6 `summarize` (`ExploratoryAnalysis.py:33-44`) for every column."""
-    from functools import reduce
-
-    parts = [aggregates.profile_column(df, c, distinct_cap) for c in df.columns]
-    return reduce(DataFrame.unionByName, parts)
-
-
-def correlation(df: DataFrame) -> DataFrame:
-    """A7 over numeric columns (`plotting.py:14-21`)."""
-    numeric = filters.select_numeric_columns(df)
-    return aggregates.correlation_matrix(numeric, numeric.columns)
-
-
-def category_share_over_time(
-    df: DataFrame, ts_col: str, category: str, freq: str = "M", value_col: str | None = None
-) -> DataFrame:
-    """A2+A9 (catplot shapes, `plotting.py:224-241,291-316`): per-period
-    per-category counts (or sums) with within-period share."""
-    how = "count" if value_col is None else "sum"
-    agg = aggregates.group_by_time(
-        df,
-        ts_col,
-        freq,
-        value_col or ts_col,
-        how=how,
-        extra_groups=(category,),
-        bucket_name="period",
-        out_name="value",
-    )
-    return aggregates.relative_to_group(agg, ["period"], "value", "share")
-
-
-def analyze_dataset(df: DataFrame, ts_col: str = "timestamp") -> dict[str, DataFrame]:
-    """The full `analyze_instagram_dataset` bundle
-    (`ExploratoryAnalysis.py:54-110`), lazily declared."""
-    out: dict[str, DataFrame] = {}
-    out["summary"] = numeric_summary(df)
-    out["profile"] = profile(df)
-    for freq, agg in posts_per_period(df, ts_col).items():
-        out[f"posts_per_{freq}"] = agg
-    if "hashtags" in df.columns:
-        out["hashtag_frequency"] = hashtag_frequency(df)
-    for c, h in engagement_histograms(
-        df, [c for c in ("likes", "comment_count") if c in df.columns]
-    ).items():
-        out[f"hist_{c}"] = h
-    out["correlation"] = correlation(df)
-    return out

@@ -177,8 +177,8 @@ def category_timeseries_chart(
 
 def correlation_heatmap(corr_df: DataFrame, col_a="col_x", col_b="col_y", value_col="corr") -> str:
     """`plot_correlation` parity (`plotting.py:14-26`): square text
-    heatmap over the pairwise-correlation frame (`explore.correlation`
-    output: one row per column pair)."""
+    heatmap over the pairwise-correlation frame
+    (`aggregates.correlation_matrix` output: one row per column pair)."""
     rows, _ = _collect_capped(corr_df, [col_a, col_b], 10_000)
     names = sorted({str(r[col_a]) for r in rows} | {str(r[col_b]) for r in rows})
     grid = {(str(r[col_a]), str(r[col_b])): float(r[value_col]) for r in rows}

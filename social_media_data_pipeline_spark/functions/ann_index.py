@@ -85,14 +85,6 @@ def ivf_index_path(corpus_tag: str, params: dict) -> str:
     return os.path.join(artifacts_root(), "ann_ivf", key)
 
 
-def _load_meta(path: str) -> dict | None:
-    """The live generation's meta (params + fingerprint), resolved
-    through the manifest: the CAS flip commits it together with the
-    files, so a writer that lost the race or crashed can never leave
-    its params live over files it never committed."""
-    return scale.read_store(path)[2]
-
-
 def train_ivf_index(
     emb: DataFrame,
     path: str,
@@ -384,97 +376,6 @@ def pq_codes_for(
         meta={"params": params, "fingerprint": fp},
     )
     return scale.manifest_read(emb.sparkSession, path)
-
-
-def pq_codes_append(
-    new_vecs: DataFrame,
-    corpus_tag: str,
-    ivf_k: int | None = None,
-    ivf_iters: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Incremental index maintenance (r10): encode a batch of NEW
-    vectors with the FROZEN centroids + codebook and APPEND the codes
-    to the persisted index — the standard IVF-PQ ingest path (Jégou
-    2011 deployments absorb inserts without retraining until recall
-    drift triggers a rebuild; retraining per batch would also
-    invalidate every previously stored code). The ANN mirror of the
-    band-store/incremental-CC economics: per-batch cost ∝ the batch.
-
-    The stored fingerprint merges INCREMENTALLY: (n, h) is a
-    (count, bit_xor(xxhash64)) pair — a commutative monoid — so
-    fp(corpus ∪ batch) = (n_old + n_batch, h_old XOR h_batch) with ONE
-    scan of the BATCH, and a later `pq_codes_for` validating read
-    against the grown corpus still cache-hits. The trainer artifacts
-    keep their original stamp on purpose — they really were trained on
-    the pre-append corpus; loading them here uses `trust_cache=True`
-    (frozen-model contract), and when to retrain/re-encode is rebuild
-    policy, not this function's job.
-
-    Commit: batch codes land in new uniquely-named files; the manifest
-    flips to old live set + new files via CAS (a concurrent writer
-    loses loudly and un-stages). Returns the full post-append codes
-    table. Raises if no base index exists — append needs a base
-    (`pq_codes_for` builds it).
-    """
-    from social_media_data_pipeline_spark.functions import pq
-
-    params = {
-        "ivf_k": ivf_k, "ivf_iters": ivf_iters,
-        "m": m, "ksub": ksub, "iters": iters,
-        "id_col": id_col, "vec_col": vec_col,
-    }
-    path = pq_codes_path(corpus_tag, params)
-    live, gen, meta = scale.read_store(path)
-    if meta is None or meta.get("params") != params or not live:
-        raise ValueError(
-            f"pq_codes_append: no committed codes artifact for "
-            f"{corpus_tag!r} with these params under {path} — build the "
-            "base index with pq_codes_for first"
-        )
-    spark = new_vecs.sparkSession
-    centroids = ivf_centroids_for(
-        new_vecs, corpus_tag, k=ivf_k, iters=ivf_iters,
-        id_col=id_col, vec_col=vec_col, trust_cache=True,
-    )
-    codebook = pq_residual_codebook_for(
-        new_vecs, corpus_tag, ivf_k=ivf_k, ivf_iters=ivf_iters,
-        m=m, ksub=ksub, iters=iters,
-        id_col=id_col, vec_col=vec_col, trust_cache=True,
-    )
-    batch_codes = pq.pq_encode(
-        pq.residual_table(new_vecs, centroids, id_col, vec_col),
-        codebook, id_col, "__resid", keep_cols=["cluster"],
-    )
-    batch_fp = corpus_fingerprint(new_vecs, id_col, vec_col)
-    old_fp = meta["fingerprint"]
-    merged_fp = {
-        "n": old_fp["n"] + batch_fp["n"],
-        "h": old_fp["h"] ^ batch_fp["h"],
-    }
-    scale.commit_store(
-        path, [("codes", batch_codes.coalesce(1))], gen, keep=live,
-        meta={"params": params, "fingerprint": merged_fp},
-    )
-    return scale.manifest_read(spark, path)
-
-
-# --------------------------------------------------------------------------
-# persisted OPQ rotation (r12): the third trained artifact
-# --------------------------------------------------------------------------
-# The OPQ rotation (Ge 2013 eigenvalue allocation over the corpus
-# eigenbasis) is trained from ONE exact integer Gram pass
-# (`pca.gram_partials`) + a driver-side eigh — d×d doubles, a few KiB —
-# and every encode/search applies it as a broadcast matmul. Like the
-# centroid and codebook artifacts it is trained once per (corpus,
-# params) and invalidated by the corpus fingerprint: re-ingesting the
-# embedding table retrains the rotation, which in turn invalidates the
-# PQ artifacts trained downstream of it (their corpus_tag should
-# embed the rotation artifact's path or generation).
 
 
 def opq_index_path(corpus_tag: str, params: dict) -> str:

@@ -440,22 +440,6 @@ def bpe_train_batched(
     )
 
 
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
-    """Apply a trained merge list to a corpus: per word, replay merges
-    in rank order (the standard greedy encoder). Map-side only — the
-    merge list is a plan literal (broadcast-by-construction)."""
-    toks = F.filter(tokenize(text_col), lambda w: F.length(w) > 0)
-    word_syms = F.transform(toks, lambda w: F.split(w, ""))
-    for left, right in merges:
-        word_syms = F.transform(word_syms, lambda s: _apply_merge(s, left, right))
-    return df.withColumn(out_col, F.flatten(word_syms))
-
-
 def bpe_vocab(
     df: DataFrame, merges: list[tuple[str, str]], text_col: str = "text"
 ) -> DataFrame:
@@ -463,9 +447,7 @@ def bpe_vocab(
     the merges replay over the VOCABULARY (once per distinct word), not
     the token stream. Encoding a corpus is then a broadcast join of
     tokens against this table, which is how a production encoder
-    amortizes at 100 TB: fold work ∝ vocab, corpus work ∝ one join.
-    (`bpe_encode` replays merges per token — same result, the right
-    tool only for out-of-vocab streams.)"""
+    amortizes at 100 TB: fold work ∝ vocab, corpus work ∝ one join."""
     words = (
         df.select(F.explode(tokenize(text_col)).alias("w"))
         .filter(F.length("w") > 0)
@@ -487,12 +469,11 @@ def bpe_encode_corpus(
     """Corpus encoding via the vocabulary join — the DEFAULT encoder
     for bulk corpora: the merge fold runs once per DISTINCT word
     (`bpe_vocab`), and the token stream broadcast-joins against that
-    table (measured ~4× faster than `bpe_encode`'s per-token replay at
-    sf0.1; the gap widens with corpus/vocab ratio, i.e. with scale).
-    Returns (id_col, n_words, out_col) with tokens reassembled in
-    document order; documents with no tokens are absent (inner join
-    semantics — `bpe_encode` is the keep-every-row map alternative and
-    the right tool for OOV streams, where a word may miss the vocab).
+    table (measured ~4× faster than a per-token merge replay at sf0.1;
+    the gap widens with corpus/vocab ratio, i.e. with scale). Returns
+    (id_col, n_words, out_col) with tokens reassembled in document
+    order; documents with no tokens are absent (inner join semantics).
+    The vocabulary is built from `df` itself, so every word is in it.
     """
     vocab = bpe_vocab(df, merges, text_col)
     toks = df.select(
@@ -580,7 +561,7 @@ def build_oracle_sql(num_merges: int) -> str:
 
 
 def build_encode_oracle_sql(num_merges: int) -> str:
-    """Generated DuckDB oracle for `bpe_encode` composed with
+    """Generated DuckDB oracle for `bpe_encode_corpus` composed with
     `bpe_train`: every corpus word appears in the trained vocabulary,
     so encoding a document is a lookup of each word's FINAL symbol
     array in w{num_merges} — the same CTE chain as the training oracle,

@@ -18,9 +18,8 @@ per-document lengths flip atomically:
                                         denormalized so a search never
                                         touches the lengths table
     dfreq-*     (t, df)               — vocab-sized
-    lengths-*   (doc_id, dl)          — doc-count-sized; used by the
-                                        append dup-guard and kept as
-                                        the source of truth for stats
+    lengths-*   (doc_id, dl)          — doc-count-sized; kept as the
+                                        source of truth for stats
 
 Corpus-level stats (N docs, total token count) and the corpus
 fingerprint live in the per-commit meta JSON `commit_store` writes
@@ -39,17 +38,6 @@ expression tree as the full-cycle `retrieval.bm25_score`
 (`bm25_term_score_expr`), which is why the differential oracle can
 REPLAY the full computation in SQL and still hash-match the persisted
 path.
-
-Incremental maintenance (`bm25_index_append`) absorbs a batch of NEW
-documents at batch-proportional cost: batch postings/lengths land as
-appended files, the vocab-sized dfreq table is merge-rewritten (it is
-sublinear in the corpus — the ONLY rewritten piece), stats and the
-(count, bit_xor) fingerprint merge incrementally, and the root
-manifest CAS-flips. Unlike the frozen-model ANN append
-(`ann_index.pq_codes_append`), a BM25 append changes OLD documents'
-scores too (df and avgdl move) — that is correct Okapi semantics, and
-it falls out for free because df/avgdl are resolved at search time,
-never baked into the postings.
 
 At 100 TB: postings are the corpus-sized piece — the build
 range-buckets them by term across `postings_buckets` files written IN
@@ -200,9 +188,9 @@ def bm25_index_for(
 ) -> str:
     """Get-or-build: return the committed index path for (corpus,
     params), building it on the first call or whenever the corpus
-    fingerprint no longer matches (the table was regenerated or grew
-    outside `bm25_index_append`). `trust_cache=True` skips the
-    fingerprint scan for callers that own their invalidation."""
+    fingerprint no longer matches (the table was regenerated or
+    grew). `trust_cache=True` skips the fingerprint scan for callers
+    that own their invalidation."""
     params = {"id_col": id_col, "text_col": text_col}
     path = lex_index_path(corpus_tag, params)
     meta = load_index_meta(path)
@@ -260,92 +248,3 @@ def bm25_search_indexed(
     )
     scored = per_term.groupBy(id_col).agg(F.round(F.sum("s"), 6).alias("bm25"))
     return ranked_desc_topn(scored, "bm25", id_col, topn)
-
-
-def bm25_index_append(
-    new_docs: DataFrame,
-    corpus_tag: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    postings_buckets: int = 4,
-) -> None:
-    """Absorb a batch of NEW documents at batch-proportional cost:
-    batch postings and lengths APPEND as new files; the vocab-sized
-    dfreq table is the only rewrite (old ∪ batch, df summed — vocab is
-    sublinear in the corpus, so the rewrite does not grow with it);
-    stats and the (count, bit_xor) fingerprint merge incrementally
-    with ONE scan of the batch; the root manifest CAS-flips (a
-    concurrent writer loses loudly and un-stages).
-
-    Duplicate doc ids are refused loudly BEFORE any file lands —
-    appending an already-indexed document would double its postings
-    silently (the snm_pairs/negative_pairs refusal convention; the
-    check joins the batch against the doc-count-sized lengths table,
-    never the postings). Raises when no base index exists —
-    `bm25_index_for` builds the base.
-
-    Search-visible effect: new docs rank immediately, and OLD
-    documents' scores move too (df and avgdl shift) — correct Okapi
-    semantics, free here because df/avgdl resolve at search time
-    instead of being baked into postings (contrast
-    `ann_index.pq_codes_append`, where the frozen-model contract is
-    the point)."""
-    params = {"id_col": id_col, "text_col": text_col}
-    path = lex_index_path(corpus_tag, params)
-    live, gen, meta = scale.read_store(path)
-    if meta is None or meta.get("params") != params:
-        raise ValueError(
-            f"bm25_index_append: no committed index for {corpus_tag!r} "
-            f"with these params under {path} — build the base with "
-            "bm25_index_for first"
-        )
-    spark = new_docs.sparkSession
-    old_lengths = _read_part(spark, path, live, "lengths", _LENGTHS_SCHEMA)
-    dup = (
-        new_docs.select(F.col(id_col).alias("doc_id"))
-        .join(old_lengths, "doc_id", "left_semi")
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            f"bm25_index_append: doc_id {dup[0]['doc_id']} is already "
-            "indexed — appends must carry only NEW documents (a re-append "
-            "would silently double its postings); use a full rebuild via "
-            "build_bm25_index for corrections"
-        )
-    b_postings, b_dfreq, b_lengths, b_stats = _corpus_tables(
-        new_docs, id_col, text_col
-    )
-    old_dfreq = _read_part(spark, path, live, "dfreq", _DFREQ_SCHEMA)
-    merged_dfreq = (
-        old_dfreq.unionByName(b_dfreq)
-        .groupBy("t")
-        .agg(F.sum("df").alias("df"))
-    )
-    batch_fp = _doc_fingerprint(new_docs, id_col, text_col)
-    old_fp, old_stats = meta["fingerprint"], meta["stats"]
-    # batch postings and lengths append beside the live ones; only the
-    # superseded dfreq file leaves the live set (vacuum_table reclaims
-    # it — a search may still be reading it)
-    scale.commit_store(
-        path,
-        [
-            ("postings", _postings_layout(b_postings, postings_buckets)),
-            ("lengths", b_lengths.coalesce(1)),
-            ("dfreq", merged_dfreq.coalesce(1)),
-        ],
-        gen,
-        keep=[f for f in live if not os.path.basename(f).startswith("dfreq-")],
-        meta={
-            "params": params,
-            "fingerprint": {
-                "n": old_fp["n"] + batch_fp["n"],
-                "h": old_fp["h"] ^ batch_fp["h"],
-            },
-            "stats": {
-                "n": old_stats["n"] + b_stats["n"],
-                "dl_sum": old_stats["dl_sum"] + b_stats["dl_sum"],
-            },
-        },
-    )

@@ -42,19 +42,13 @@ def quantize_vector(vec_col: str | Column, scale: Column) -> Column:
     )
 
 
-def dequantize_vector(q_col: str | Column, scale: Column) -> Column:
-    """array<tinyint> → array<float> reconstruction (x̂ = q·scale)."""
-    c = F.col(q_col) if isinstance(q_col, str) else q_col
-    return F.transform(c, lambda q: (q.cast("double") * scale).cast("float"))
-
-
 def quantize_embeddings(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """(id, q_embedding array<tinyint>, scale double) — the stored form.
 
-    Write this instead of the float column and reconstruct on read with
-    `dequantize_vector`; reconstruction error is ≤ scale/2 per
+    Write this instead of the float column and reconstruct on read as
+    x̂ = q·scale; reconstruction error is ≤ scale/2 per
     dimension, which preserves cosine top-k ordering for all but
     hairline-close pairs (re-rank candidates against the float column
     when exactness matters — the candidates are tiny by then).

@@ -29,29 +29,6 @@ def _hash_str(col: Column, salt: Column | str, fast: bool) -> Column:
     return F.md5(F.concat_ws("|", salt_c, col))
 
 
-def _salted_hash_fn(salt: str, fast: bool):
-    """Single-param lambda factory (two-param lambdas get the array index
-    as arg 2 from PySpark's higher-order-function binding)."""
-
-    def f(s: Column) -> Column:
-        return _hash_str(s, salt, fast)
-
-    return f
-
-
-def minhash_signature(
-    text_col: str | Column, num_hashes: int = 16, shingle_k: int = 3, fast: bool = False
-) -> Column:
-    """MinHash signature: array of `num_hashes` minima over the doc's
-    shingle set under salted hashes. array<string> (md5 hex minima)."""
-    sh = shingles(text_col, shingle_k)
-    mins = [
-        F.array_min(F.transform(sh, _salted_hash_fn(str(i), fast)))
-        for i in range(num_hashes)
-    ]
-    return F.array(*mins)
-
-
 def minhash_signatures_table(
     docs: DataFrame,
     id_col: str,
@@ -455,40 +432,6 @@ def ngram_containment_pairs(
     )
 
 
-def simhash64(text_col: str | Column, fast: bool = False) -> Column:
-    """60-bit SimHash of the token set (md5-derived per-token hashes so
-    the oracle can replay; 60 bits keeps the value inside a signed int64
-    across engines).
-
-    Per token: h = first 15 hex chars of md5(token) as int. Per bit b:
-    +1 if set else -1, summed over tokens; fingerprint bit b = (sum > 0).
-    """
-    toks = F.array_distinct(F.split(normalize_text(text_col), " "))
-    # fast path: xxhash64 is already a long — mask to 60 bits natively;
-    # the md5 path must round-trip hex→decimal for oracle replay
-    tok_hash = F.transform(
-        toks,
-        lambda t: (
-            F.xxhash64(t).bitwiseAND(F.lit((1 << 60) - 1).cast("long"))
-            if fast
-            else F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-        ),
-    )
-    def _vote_fn(bit: int):
-        mask = F.lit(1 << bit).cast("long")
-
-        def f(acc: Column, h: Column) -> Column:
-            return acc + F.when(h.bitwiseAND(mask) != 0, 1).otherwise(-1)
-
-        return f
-
-    bit_votes = [F.aggregate(tok_hash, F.lit(0), _vote_fn(b)) for b in range(60)]
-    fp = F.lit(0).cast("long")
-    for b, vote in enumerate(bit_votes):
-        fp = fp + F.when(vote > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-    return fp
-
-
 def hamming_distance64(a: Column, b: Column) -> Column:
     """Hamming distance between two int64 SimHash fingerprints."""
     return F.bit_count(a.bitwiseXOR(b))
@@ -607,19 +550,24 @@ def hamming_blocked_pairs(
 def simhash_table(
     docs: DataFrame, id_col: str, text_col: str, fast: bool = False
 ) -> DataFrame:
-    """(doc, simhash) via explode → groupBy with 60 conditional sums.
+    """(doc, simhash): 60-bit SimHash of each doc's token set via
+    explode → groupBy with 60 conditional sums (md5-derived per-token
+    hashes so the oracle can replay; 60 bits keeps the value inside a
+    signed int64 across engines). Per token: h = first 15 hex chars of
+    md5(token) as int; per bit b: +1 if set else -1, summed over
+    tokens; fingerprint bit b = (sum > 0).
 
-    Same fingerprint as `simhash64`, different plan shape: the column-
-    expression form evaluates the token-hash array once per bit aggregate
-    (60×) — measured 22 s at sf0.1 vs ~1 s for this one-pass explode
-    (the same Catalyst no-CSE-across-lambdas trap as MinHash signatures).
+    Plan shape: a column-expression form evaluates the token-hash array
+    once per bit aggregate (60×) — measured 22 s at sf0.1 vs ~1 s for
+    this one-pass explode (the same Catalyst no-CSE-across-lambdas trap
+    as MinHash signatures).
     """
     toks = F.array_distinct(F.split(normalize_text(text_col), " "))
     exploded = spread_small_input(docs, key=id_col).select(
         F.col(id_col).alias("doc"), F.explode(toks).alias("t")
     )
-    # same per-token hash as simhash64 (fast: native 60-bit-masked
-    # xxhash64 long, no hex round-trip; md5: oracle-replayable)
+    # per-token hash (fast: native 60-bit-masked xxhash64 long, no hex
+    # round-trip; md5: oracle-replayable)
     h = (
         F.xxhash64(F.col("t")).bitwiseAND(F.lit((1 << 60) - 1).cast("long"))
         if fast
@@ -883,8 +831,8 @@ def cms_build(
     item feeds a map-side-combinable sum — the shuffle carries at most
     depth×width partials per map partition no matter the stream size,
     and two sketches built on different data MERGE by adding cell
-    counts (`cms_merge`), which is what makes this the streaming /
-    cross-shard frequency structure the exact `value_counts` can't be.
+    counts (union + sum per (d, col)), which is what makes this the
+    streaming / cross-shard frequency structure the exact `value_counts` can't be.
     Estimates overestimate only: est(x) ≥ true(x), with
     ε ≈ e/width · N at δ ≈ e^−depth (standard CMS bounds).
     """
@@ -898,13 +846,6 @@ def cms_build(
         w.alias("__w"),
     )
     return cells.groupBy("d", "col").agg(F.sum("__w").alias("cnt"))
-
-
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two same-shape sketches by cell-wise addition."""
-    return (
-        a.unionByName(b).groupBy("d", "col").agg(F.sum("cnt").alias("cnt"))
-    )
 
 
 def cms_estimate(

@@ -60,13 +60,6 @@ def _isin_fn(values: list[str]):
     return f
 
 
-def stopword_ratio(text_col: str | Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of `lang`."""
-    toks = tokenize(text_col)
-    hits = F.size(F.filter(toks, _isin_fn(STOPWORDS[lang])))
-    return (hits / F.greatest(F.size(toks), F.lit(1))).cast("double")
-
-
 def punct_ratio(text_col: str | Column) -> Column:
     """Fraction of characters that are non-alphanumeric, non-space."""
     c = F.coalesce(F.col(text_col) if isinstance(text_col, str) else text_col, F.lit(""))

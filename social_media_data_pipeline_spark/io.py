@@ -13,20 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def _ensure_session_confs(spark: SparkSession) -> None:
     """Pin the SQL confs correctness depends on, even on a session not
     built by `session.get_spark` (the driver harness constructs its own):
@@ -248,12 +234,6 @@ def release_pins(df: DataFrame) -> None:
             cm.uncacheQuery(jspark, e.plan(), False, False)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every harness table as a temp view for spark.sql parity."""
-    for name in TESTDATA_TABLES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def write_stage_output(
     df: DataFrame,
     path: str,
@@ -327,90 +307,3 @@ def stage_output_exists(spark: SparkSession, path: str) -> bool:
         return True
     except Exception:
         return False
-
-
-def read_json_with_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    quarantine_path: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Fault-tolerant JSONL ingestion: parse against `schema` in
-    PERMISSIVE mode, split the scan into (valid_rows, corrupt_rows).
-    A malformed line never kills the job — it lands in the quarantine
-    frame (and, when `quarantine_path` is given, a parquet sink) with
-    its raw text for replay after the producer is fixed. This is the
-    ingest contract a 100 TB crawl feed needs: at that scale SOME
-    shard always carries truncated or junk lines, and failing the job
-    (FAILFAST) or silently nulling fields (plain PERMISSIVE) both lose
-    data.
-
-    Returns (valid, corrupt): `valid` has exactly the schema's
-    columns; `corrupt` is (raw string). Counting either side is the
-    caller's observability hook (`filters.apply_filter_observed`
-    composes). The parsed scan is CACHED before the split — Spark
-    refuses corrupt-record-only queries against a raw JSON scan
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN), and at
-    scale you want one parse feeding both sides anyway; at 100 TB
-    swap the cache for a write of the parsed frame and split from
-    storage (same two selects).
-    """
-    if isinstance(schema, str):
-        schema = T._parse_datatype_string(schema)
-    fields = [f for f in schema.fields if f.name != "_corrupt_record"]
-    full = T.StructType(
-        fields + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    df = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-        .cache()
-    )
-    corrupt = (
-        df.filter(F.col("_corrupt_record").isNotNull())
-        .select(F.col("_corrupt_record").alias("raw"))
-    )
-    valid = df.filter(F.col("_corrupt_record").isNull()).select(
-        *[f.name for f in fields]
-    )
-    if quarantine_path:
-        corrupt.write.mode("append").parquet(quarantine_path)
-    return valid, corrupt
-
-
-def read_csv_with_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    quarantine_path: str | None = None,
-    header: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """CSV twin of `read_json_with_quarantine` — same PERMISSIVE split
-    contract: (valid, corrupt) where corrupt rows keep the raw line
-    for replay. Same cache note applies."""
-    if isinstance(schema, str):
-        schema = T._parse_datatype_string(schema)
-    fields = [f for f in schema.fields if f.name != "_corrupt_record"]
-    full = T.StructType(
-        fields + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    df = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("header", str(header).lower())
-        .csv(path)
-        .cache()
-    )
-    corrupt = (
-        df.filter(F.col("_corrupt_record").isNotNull())
-        .select(F.col("_corrupt_record").alias("raw"))
-    )
-    valid = df.filter(F.col("_corrupt_record").isNull()).select(
-        *[f.name for f in fields]
-    )
-    if quarantine_path:
-        corrupt.write.mode("append").parquet(quarantine_path)
-    return valid, corrupt

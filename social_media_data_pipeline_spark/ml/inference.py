@@ -89,7 +89,8 @@ def label_images(
     image_col: str = "image",
 ) -> DataFrame:
     """Full F3 stage: bytes → predictions + top-1 category
-    (`ImageLabeler.py:129-167` output shape, schemas.IMAGE_LABELS)."""
+    (`ImageLabeler.py:129-167` output shape: image, predictions
+    array<struct<category, confidence>>, category)."""
     udf = scene_label_udf(labeler_factory)
     return images.select(
         F.col(image_col).alias("image"),

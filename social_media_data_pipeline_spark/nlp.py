@@ -11,8 +11,7 @@ Engine semantics:
   not passthrough (E15), so already-target-language rows never reach
   the translation API;
 - restartability: the reference's row-level checkpointing is replaced by
-  idempotent re-run over a keyed output table — pair with
-  streaming.incremental.merge_new_rows for checkpoint-every-batch.
+  idempotent re-run over a keyed output table.
 """
 
 from __future__ import annotations

@@ -1,15 +1,12 @@
 """Deduplication operators (SURVEY.md §2.3 D1/D2 + LLM-pipeline near-dup).
 
-Exact dedup comes in two flavors:
-
-- `dedup_arbitrary` — Spark's `dropDuplicates`: ONE row per key, any row.
-  Cheapest (hash-aggregate, map-side partial) — use when the survivor
-  doesn't matter.
-- `dedup_first_wins` — deterministic survivor via a window. The reference's
-  `drop_duplicates` keeps the first row in FILE order
-  (`Preprocessor.py:161-167`, `InstagramFeedScraper.py:220`); file order is
-  meaningless on a distributed engine, so the engine requires an explicit
-  `order_by` tie-break — same contract, deterministic everywhere.
+Exact keyed dedup is `dedup_first_wins`: a deterministic survivor via a
+window. The reference's `drop_duplicates` keeps the first row in FILE
+order (`Preprocessor.py:161-167`, `InstagramFeedScraper.py:220`); file
+order is meaningless on a distributed engine, so the engine requires an
+explicit `order_by` tie-break — same contract, deterministic everywhere.
+When the survivor does not matter, Spark's own `dropDuplicates` is the
+cheaper form (hash-aggregate, map-side partial).
 
 Scale note (100 TB): all variants are single-shuffle on the dedup key.
 For heavily-skewed keys enable AQE skew handling (on by default in
@@ -24,11 +21,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def dedup_arbitrary(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """D1/D2 when survivor choice is free: `dropDuplicates(keys)`."""
-    return df.dropDuplicates(list(keys))
 
 
 def dedup_first_wins(
@@ -657,20 +649,36 @@ def _band_frame(
     return df
 
 
-def _append_at(
+def band_store_append(
     bands: DataFrame,
     store_path: str,
-    base: tuple,
-    flagged: DataFrame | None,
-    params: dict | None,
+    flagged: DataFrame | None = None,
+    params: dict | None = None,
+    base: tuple | None = None,
 ) -> None:
-    """`band_store_append` committed against `base`, the
-    `_band_store_state` a caller read earlier: the flip is a CAS on
-    that generation, so an appender that raced another since the read
-    raises `ConcurrentCommitError` instead of landing beside it."""
+    """Append a batch's band table (`sketches.minhash_band_table`
+    output: doc, band_idx, band_hash) to the persisted store, EXCLUDING
+    docs listed in `flagged` (the duplicates `incremental_dedup` just
+    found — appending them would make the store grow with junk and
+    every future batch pay collision candidates against it). Writes
+    the flat layout: one file per write task, sorted by
+    (band_idx, band_hash), committed by one `scale.commit_store` CAS
+    flip — a racing appender raises `ConcurrentCommitError`.
+
+    `params` (num_hashes/bands/shingle_k) and the band schema DDL are
+    the meta the manifest binds on the first append, verified on every
+    later append/read: joining bands built with different signature
+    parameters silently matches nothing, so a mismatch raises instead.
+    A zero-row batch (routine in continuous streams) commits like any
+    other: reads take their schema from the meta, never from footers.
+
+    `base` is the `_band_store_state` the caller read earlier (read
+    here when None); the CAS is against that generation, so an append
+    that raced another since the read fails instead of landing beside
+    it."""
     from social_media_data_pipeline_spark import scale
 
-    files, gen, have = base
+    files, gen, have = base or _band_store_state(store_path)
     if flagged is not None:
         bands = bands.join(
             flagged.select(F.col(flagged.columns[0]).alias("doc")),
@@ -698,31 +706,6 @@ def _append_at(
         keep=files,
         meta=meta,
     )
-
-
-def band_store_append(
-    bands: DataFrame,
-    store_path: str,
-    flagged: DataFrame | None = None,
-    params: dict | None = None,
-) -> None:
-    """Append a batch's band table (`sketches.minhash_band_table`
-    output: doc, band_idx, band_hash) to the persisted store, EXCLUDING
-    docs listed in `flagged` (the duplicates `incremental_dedup` just
-    found — appending them would make the store grow with junk and
-    every future batch pay collision candidates against it). Writes
-    the flat layout: one file per write task, sorted by
-    (band_idx, band_hash), committed by one `scale.commit_store` CAS
-    flip — a racing appender raises `ConcurrentCommitError`.
-
-    `params` (num_hashes/bands/shingle_k) and the band schema DDL are
-    the meta the manifest binds on the first append, verified on every
-    later append/read: joining bands built with different signature
-    parameters silently matches nothing, so a mismatch raises instead.
-    A zero-row batch (routine in continuous streams) commits like any
-    other: reads take their schema from the meta, never from footers.
-    """
-    _append_at(bands, store_path, _band_store_state(store_path), flagged, params)
 
 
 def band_store_read(
@@ -872,7 +855,9 @@ def incremental_dedup_against_store(
                 "jaccard double",
         )
     if append_survivors:
-        _append_at(new_bands, store_path, base, flagged.select(id_col), params)
+        band_store_append(
+            new_bands, store_path, flagged.select(id_col), params, base=base
+        )
     return flagged
 
 
@@ -1020,11 +1005,10 @@ def _snm_bucket_prefix(
     max_prefix_len: int,
     key_col,
 ) -> tuple[int, list]:
-    """Heavy-hitter probe for the SNM bucketing (r10, the
-    `salted_join_auto` mirror): the per-bucket count aggregate
-    `snm_pairs` needs anyway doubles as the skew detector. While the
-    largest bucket holds more than `hot_share` of all rows, DOUBLE the
-    key-prefix length (longer order-preserving prefix → finer buckets
+    """Heavy-hitter probe for the SNM bucketing (r10): the per-bucket
+    count aggregate `snm_pairs` needs anyway doubles as the skew
+    detector. While the largest bucket holds more than `hot_share` of
+    all rows, DOUBLE the key-prefix length (longer order-preserving prefix → finer buckets
     → the rank window re-localizes) and re-probe — one extra bounded
     aggregate per raise. Stops when balanced, at `max_prefix_len`, or
     when raising stopped shrinking the hot bucket (an EXACT-key mass:
@@ -1043,11 +1027,11 @@ def _snm_bucket_prefix(
         # NULL keys have no place in a sort order: they would land in a
         # NULL bucket whose Python-side offset sort throws an obscure
         # TypeError (None vs str) — refuse loudly instead (the
-        # null_normalize / mixture-group convention)
+        # mixture-group convention)
         if any(r["__b"] is None for r in counts):
             raise ValueError(
                 f"snm_pairs: NULL sort key in column {key_col!r} — "
-                "null_normalize or filter null keys before calling"
+                "coalesce or filter null keys before calling"
             )
         if hot_share is None or not counts:
             return plen, counts
@@ -1096,9 +1080,9 @@ def snm_pairs(
     ordering must agree between Spark, Python's `sorted`, and the SQL
     oracle — ASCII keys, e.g. `normalize_text` output, are safe). A
     corpus-hot key prefix concentrates one bucket's window — the
-    default-on heavy-hitter probe (r10, the `salted_join_auto`
-    mirror) detects it from the bucket-count aggregate this
-    decomposition collects anyway and DOUBLES the prefix length until
+    default-on heavy-hitter probe (r10) detects it from the
+    bucket-count aggregate this decomposition collects anyway and
+    DOUBLES the prefix length until
     no bucket holds more than `hot_share` of rows (or
     `max_prefix_len`, or the mass is an exact-key tie that no
     order-preserving scheme can split — see `_snm_bucket_prefix`).

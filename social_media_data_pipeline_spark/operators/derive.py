@@ -1,4 +1,7 @@
-"""Derived-column scalar expressions (SURVEY.md §2.4, E1-E15).
+"""Derived-column scalar expressions (SURVEY.md §2.4): the Preprocessor's
+derivations (E1, E3, E6-E8). The other E-operators are single Spark
+built-ins used inline where needed (`F.split`, `F.timestamp_seconds`,
+`F.to_timestamp`, `F.element_at`, `F.array_join`, `F.when`).
 
 All built-in Column expressions — whole-stage-codegen'd, no Python in the
 hot path. The reference computes these row-at-a-time or via pandas apply
@@ -18,16 +21,6 @@ def concat_image_name(id_col: str, shortcode_col: str) -> Column:
     return F.concat_ws("_", F.col(id_col).cast("string"), F.concat(F.col(shortcode_col), F.lit(".jpg")))
 
 
-def post_url(shortcode_col: str) -> Column:
-    """E1 — url build (`InstagramFeedScraper.py:12-13`)."""
-    return F.format_string("https://www.instagram.com/p/%s/", F.col(shortcode_col))
-
-
-def split_part_col(col: str, delim: str, index: int) -> Column:
-    """E2 — string split → column (`Preprocessor.py:141-143`)."""
-    return F.split(F.col(col), delim).getItem(index)
-
-
 def with_date_parts(df: DataFrame, ts_col: str) -> DataFrame:
     """E3 — year/month/day convenience columns (`Preprocessor.py:149-151`)."""
     return (
@@ -35,16 +28,6 @@ def with_date_parts(df: DataFrame, ts_col: str) -> DataFrame:
         .withColumn("month", F.month(F.col(ts_col)))
         .withColumn("day", F.dayofmonth(F.col(ts_col)))
     )
-
-
-def epoch_to_timestamp(col: str) -> Column:
-    """E4 — epoch-seconds → timestamp (`InstagramFeedScraper.py:219`)."""
-    return F.timestamp_seconds(F.col(col))
-
-
-def parse_timestamp(col: str, fmt: str | None = None) -> Column:
-    """E5 — string → timestamp (`Preprocessor.py:41` converter)."""
-    return F.to_timestamp(F.col(col), fmt) if fmt else F.to_timestamp(F.col(col))
 
 
 def interactions(likes_col: str, comments_col: str) -> Column:
@@ -63,35 +46,6 @@ def extract_hashtags(text_col: str) -> Column:
 def lowercase_array(col: str) -> Column:
     """E8 — lowercase every array element (`Preprocessor.py:219-221`)."""
     return F.transform(F.col(col), lambda x: F.lower(x))
-
-
-def nested_field(path: str, alias: str) -> Column:
-    """E10 — nested-struct field extraction, e.g.
-    ``statistics.actual.favoriteCount`` → ``likes``
-    (`Preprocessor.py:45-51`, `CTExtractors.py:30-45`)."""
-    return F.col(path).alias(alias)
-
-
-def edge_list_to_array(edges_path: str, leaf_path: str) -> Column:
-    """E11 — edge-list → array, e.g. tagged users
-    (`InstagramPostScraper.py:303-304`)."""
-    return F.transform(F.col(edges_path), lambda e: e.getField("node").getField(leaf_path))
-
-
-def first_element_or_null(arr: Column) -> Column:
-    """E12 — `edges[0].node.text` else None
-    (`InstagramPostScraper.py:306-311`)."""
-    return F.when(F.size(arr) > 0, F.element_at(arr, 1))
-
-
-def array_join_lines(col: str) -> Column:
-    """E13 — `"\\n".join(comments_flat)` (`InstagramPostScraper.py:393-394`)."""
-    return F.array_join(F.col(col), "\n")
-
-
-def conditional_value(cond: Column, then: Column, otherwise: Column) -> Column:
-    """E15 — row-wise conditional (`Translator.py:125-139`)."""
-    return F.when(cond, then).otherwise(otherwise)
 
 
 def column_stuff(

@@ -1,4 +1,4 @@
-"""Projection / filter / predicate operators (SURVEY.md §2.2, P1-P14).
+"""Projection / filter / predicate operators (SURVEY.md §2.2).
 
 Each function is a pure ``DataFrame -> DataFrame`` transform. All
 predicates are built-in Column expressions so Catalyst pushes them into
@@ -75,11 +75,6 @@ def filter_text_contains_any(df: DataFrame, text_col: str, words: Sequence[str])
     return df.filter(F.lower(F.coalesce(F.col(text_col), F.lit(""))).rlike(pattern))
 
 
-def filter_isin(df: DataFrame, column: str, values: Sequence) -> DataFrame:
-    """P8 — IN-list filter. Reference: `InstagramPostScraper.py:449-452`."""
-    return df.filter(F.col(column).isin(list(values)))
-
-
 def filter_any(df: DataFrame, *predicates: Column) -> DataFrame:
     """P9 — disjunctive combine of Column predicates.
 
@@ -92,14 +87,6 @@ def filter_any(df: DataFrame, *predicates: Column) -> DataFrame:
     return df.filter(combined)
 
 
-def done_predicate(scraped_col: str, attempts_col: str, max_attempts_col: str) -> Column:
-    """P10 — state-table "done" predicate: scraped==1 OR attempts>=max.
-
-    Reference: `_get_image_done` (`InstagramImageScraper.py:151-155`).
-    """
-    return (F.col(scraped_col) == F.lit(1)) | (F.col(attempts_col) >= F.col(max_attempts_col))
-
-
 def filter_not_in(df: DataFrame, done: DataFrame, key: str | Sequence[str]) -> DataFrame:
     """P11 — anti-membership: rows of `df` whose key is not in `done`.
 
@@ -109,18 +96,6 @@ def filter_not_in(df: DataFrame, done: DataFrame, key: str | Sequence[str]) -> D
     """
     keys = [key] if isinstance(key, str) else list(key)
     return df.join(done.select(*keys).dropDuplicates(keys), keys, "left_anti")
-
-
-def null_normalize(df: DataFrame, text_cols: Sequence[str] = (), zero_cols: Sequence[str] = ()) -> DataFrame:
-    """P12 — NA→"" for text ops, fillna(0) for aggregates.
-
-    Reference: `Translator.py:85`, `plotting.py:150,307`.
-    """
-    for c in text_cols:
-        df = df.withColumn(c, F.coalesce(F.col(c), F.lit("")))
-    if zero_cols:
-        df = df.na.fill(0, subset=list(zero_cols))
-    return df
 
 
 def apply_filter_observed(df: DataFrame, transform, name: str) -> DataFrame:

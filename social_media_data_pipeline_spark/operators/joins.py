@@ -213,43 +213,6 @@ def salted_join(
     return hot_part.unionByName(cold_part)
 
 
-def salted_join_auto(
-    big: DataFrame,
-    other: DataFrame,
-    on: str | Sequence[str],
-    n_salts: int = 16,
-    *,
-    how: str = "inner",
-    hot_share: float = 0.01,
-    max_hot: int = 100,
-    seed: str = "salt-v1",
-) -> DataFrame:
-    """`salted_join` with the heavy hitters discovered inline: one
-    count aggregate over the big side's key column finds every key
-    holding ≥ `hot_share` of rows (capped at `max_hot` keys, largest
-    first), and only those take the salted path. Costs one extra
-    pass over the key column (map-side partial agg + a bounded
-    TakeOrdered); at 100 TB prefer computing the hot list once on
-    ingest statistics (`scale.key_skew_profile`, or a CMS sketch) and
-    calling `salted_join(..., hot_keys=...)` directly — this wrapper
-    is for ad-hoc use where the skew profile isn't known yet.
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    total = big.count()
-    floor = max(1, int(hot_share * total))
-    hot = (
-        big.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") >= floor)
-        .orderBy(F.desc("__n"), *keys)
-        .limit(max_hot)
-        .select(*keys)
-    )
-    return salted_join(
-        big, other, on, n_salts, how=how, hot_keys=hot, seed=seed
-    )
-
-
 def interval_join_bucketed(
     facts: DataFrame,
     intervals: DataFrame,

@@ -178,29 +178,6 @@ def assign_training_shards(
     )
 
 
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    token_col,
-    tokens_per_shard: int,
-    seed: str = "shards-v1",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the training-shard layout: assign shards, then write
-    Hive-partitioned parquet (`shard=K/` directories, one file each —
-    the shuffle key IS the partition key, so each task writes exactly
-    its shard). Consumers stream shards independently; a training job's
-    data-loader reads `shard=K` with no index or manifest."""
-    out = assign_training_shards(df, id_col, token_col, tokens_per_shard, seed)
-    (
-        out.repartition("shard")
-        .write.partitionBy("shard")
-        .mode(mode)
-        .parquet(path)
-    )
-
-
 def pack_bestfit(
     docs: DataFrame,
     id_col: str,

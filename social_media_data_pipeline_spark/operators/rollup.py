@@ -26,8 +26,8 @@ set stays ~touched-days-sized). The first batch's upsert creates
 generation 0 (a CAS, so two racing creators cannot both win); a
 manifest-less directory of state files is adopted by the first fold.
 
-The monoid state also makes the rollup a drop-in foreachBatch body
-(`rollup_stream_batch`): Structured Streaming's own incremental agg
+The monoid state also makes `incremental_rollup_batch` a drop-in
+foreachBatch body: Structured Streaming's own incremental agg
 keeps state in the checkpoint, private to one query — this store is a
 TABLE other queries read, survives checkpoint loss, and merges exactly.
 """
@@ -186,40 +186,6 @@ def read_rollup(spark: SparkSession, store_path: str) -> DataFrame:
         spark.read.schema(_STATE_SCHEMA).parquet(*scale.live_files(store_path))
     )
 
-
-def rollup_stream_batch(store_path: str):
-    """foreachBatch adapter: `writeStream.foreachBatch(
-    rollup_stream_batch(store))` — each micro-batch folds into the
-    same manifest-committed state table the batch path maintains."""
-
-    def _fn(batch: DataFrame, _batch_id: int) -> None:
-        incremental_rollup_batch(batch, store_path)
-
-    return _fn
-
-
-# ---------------------------------------------------------------------------
-# Sequence-statistic IVM: incrementally-maintained transition counts.
-#
-# The (day, type) rollup above is ALGEBRAIC — each batch's contribution
-# is independent of every other batch. A transition matrix is not: the
-# pair (last event of batch k, first event of batch k+1) exists in the
-# one-shot answer but inside neither batch. The state therefore carries,
-# besides the (src, dst) counts, a per-user TAIL (the user's last seen
-# event), and each fold adds the boundary pairs the chunk seam would
-# otherwise lose — the batch analog of sessionize_bounded's
-# boundary-repair pass. Counts are exact integers, so the chunked replay
-# is hash-identical to a one-shot aggregate (the incremental ≡ recompute
-# identity `events_rollup_incremental` checks for the algebraic case).
-#
-# Contract: batches arrive in event-time order per user (each user's
-# batch events strictly after their recorded tail, (ts, event_id)
-# lexicographic). A regressing batch is refused LOUDLY (bounded
-# limit(1) probe) — silently folding it would double-count pairs.
-# At 100 TB: counts are |types|² rows; tails are user-domain-sized and
-# mutate through `selective_upsert` keyed on user_id, so a fold
-# rewrites ~touched-users-sized files, never the full tail table.
-# ---------------------------------------------------------------------------
 
 _TRANS_STATE_SCHEMA = "trans_key bigint, src string, dst string, n bigint"
 _TAIL_STATE_SCHEMA = (
@@ -408,19 +374,3 @@ def read_transition_counts(spark: SparkSession, store_path: str) -> DataFrame:
     return spark.read.schema(_TRANS_STATE_SCHEMA).parquet(*files).select(
         "src", "dst", "n"
     )
-
-
-def transition_stream_batch(store_path: str):
-    """foreachBatch adapter for the transition IVM:
-    `writeStream.foreachBatch(transition_stream_batch(store))`. The
-    per-user event-time-order contract carries over: the SOURCE must
-    deliver each user's events in (ts, event_id) order across
-    micro-batches (a time-ordered file feed or a per-key-ordered log —
-    Kafka per-partition order with user-keyed partitioning); a
-    violating batch raises inside foreachBatch and fails the query
-    loudly rather than double-counting."""
-
-    def _fn(batch: DataFrame, _batch_id: int) -> None:
-        incremental_transition_batch(batch, store_path)
-
-    return _fn

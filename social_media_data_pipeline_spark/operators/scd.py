@@ -151,23 +151,6 @@ def scd2_apply(
     )
 
 
-def scd2_asof(
-    dim: DataFrame,
-    at,
-    from_col: str = "valid_from",
-    to_col: str = "valid_to",
-) -> DataFrame:
-    """Point-in-time slice: the version of every key valid AT `at`
-    ([from, to) semantics; open rows match any `at` >= from). Pure
-    filter — pushes to the scan; join the result to facts for
-    as-of-ingest metadata correctness."""
-    a = at if isinstance(at, Column) else F.lit(at)
-    return dim.filter(
-        (F.col(from_col) <= a)
-        & (F.col(to_col).isNull() | (F.col(to_col) > a))
-    )
-
-
 def scd2_asof_join(
     facts: DataFrame,
     dim: DataFrame,
@@ -180,8 +163,8 @@ def scd2_asof_join(
     broadcast_dim: bool = True,
 ) -> DataFrame:
     """Join each fact row to the dimension VERSION valid at the fact's
-    own `at_col` — the production shape of `scd2_asof` (which slices
-    at one fixed instant): facts ⋈ dim ON key equality AND
+    own `at_col` (a point-in-time slice is the same join against facts
+    that all carry one instant): facts ⋈ dim ON key equality AND
     [from, to) containment, `to_col` NULL meaning open. The reference
     analog is joining posts to the metadata version valid at scrape
     time (`Preprocessor.py` re-runs clobber that history; SCD2 keeps

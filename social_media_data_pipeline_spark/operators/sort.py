@@ -14,11 +14,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def global_sort(df: DataFrame, cols: Sequence[Column | str]) -> DataFrame:
-    """O1 — `sort_values` analog (`InstagramPostScraper.py:383`)."""
-    return df.orderBy(*cols)
-
-
 def top_k(df: DataFrame, order_by: Sequence[Column | str], k: int) -> DataFrame:
     """O2/O3 — deterministic top-k (callers must include a tie-break key)."""
     return df.orderBy(*order_by).limit(k)

@@ -14,13 +14,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def with_row_number(
-    df: DataFrame, partition_by: Sequence[str], order_by: Sequence[Column | str], name: str = "rn"
-) -> DataFrame:
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(name, F.row_number().over(w))
-
-
 def top_k_per_group(
     df: DataFrame,
     partition_by: Sequence[str],

@@ -32,24 +32,6 @@ class Stage(Protocol):
     def run(self, spark: SparkSession, input_path: str | None, output_path: str) -> DataFrame: ...
 
 
-# transform-style stage: read parquet → pure DataFrame transform → write
-TransformFn = Callable[[DataFrame, dict], DataFrame]
-
-
-@dataclass
-class TransformStage:
-    """Wraps a pure ``DataFrame -> DataFrame`` transform as a stage."""
-
-    fn: TransformFn
-    params: dict
-
-    def run(self, spark: SparkSession, input_path: str | None, output_path: str) -> DataFrame:
-        if input_path is None:
-            raise ValueError("transform stage requires an input table")
-        df = spark.read.parquet(input_path)
-        return self.fn(df, self.params)
-
-
 @dataclass
 class SourceStage:
     """A stage with no input table (ingest); fn(spark, params) → DataFrame."""

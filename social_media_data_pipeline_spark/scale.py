@@ -4,15 +4,13 @@ The reference runs one pandas process; nothing here has a reference
 analog — these are the knobs that make every operator in this engine
 hold up at 1000 executors (SURVEY.md §7.1 M8 notes):
 
-- `write_partitioned`: stage tables partitioned by access pattern
-  (posts by year/month — P4, D3, A1 all prune on it).
 - `write_bucketed`: co-located join layout; repeated joins on the same
   key (comments ⋈ posts on owner_id) stop shuffling entirely.
 - `operators.joins.salted_join` (not here): explicit skew-breaker for
   power-law keys (one celebrity owner_id = one straggler partition) —
   AQE's skew splitting handles sort-merge joins, salting also covers
-  aggregations.
-- `key_skew_profile`: measure before salting; salt only what's skewed.
+  aggregations; `operators.aggregates.key_skew_report` measures
+  before salting, so only what is skewed gets salted.
 """
 
 from __future__ import annotations
@@ -22,15 +20,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: Sequence[str], mode: str = "overwrite"
-) -> None:
-    """Hive-style partitioned parquet: predicates on `partition_cols`
-    prune whole directories at plan time (verify via
-    `tools/explain_audit.py` — PartitionFilters in the scan)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
 def write_bucketed(
@@ -48,24 +37,6 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)
-
-
-def key_skew_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:
-    """Top key frequencies + share of total — decide whether to salt.
-
-    Kept for the original round-1 signature; new code should use
-    `operators.aggregates.key_skew_report` (r11), which folds the
-    totals into a broadcast instead of a separate count() job and adds
-    cum_share / skew_ratio / the per-key salt_factor that
-    `operators.joins.salted_join` consumes."""
-    total = df.count()
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("share", F.round(F.col("n") / F.lit(total), 6))
-        .orderBy(F.desc("n"), F.asc(key))
-        .limit(top)
-    )
 
 
 def zorder_key(cols: Sequence, bits: int = 16) -> F.Column:
@@ -159,18 +130,17 @@ def file_skipping_index(spark: SparkSession, path: str, cols: Sequence[str]) -> 
 # `_manifest.json` lists the table's LIVE files, is replaced ATOMICALLY
 # (tmp + os.replace — the POSIX rename guarantee), and every
 # manifest-aware reader (`live_files` → `footer_stats_index*`,
-# `pruned_read*`, `manifest_read`, `read_store`) sees exactly the
+# `pruned_read`, `manifest_read`, `read_store`) sees exactly the
 # pre-commit or the post-commit snapshot, never a mix. At 100 TB this
 # file IS the transaction log entry; like Delta/Iceberg, every commit
 # also writes a numbered generation (`_manifest-<n>.json`), kept for
 # time travel until `vacuum_table` drops it when the commit that
 # supersedes it runs with `keep_history` (otherwise that commit deletes
 # it with the files it replaced). Every store in the package —
-# the tables `selective_upsert`/`selective_delete`/`compact_table`
-# mutate, the curation and IVM state tables, the spectrum monoid
-# store, the ANN artifacts, the lexical index and the dedup band
-# store — writes through ONE path, `commit_store`, and reads its CAS
-# base through `read_store`.
+# the tables `selective_upsert` mutates, the curation and IVM state
+# tables, the spectrum monoid store, the ANN artifacts, the lexical
+# index and the dedup band store — writes through ONE path,
+# `commit_store`, and reads its CAS base through `read_store`.
 
 _MANIFEST = "_manifest.json"
 
@@ -213,9 +183,9 @@ def write_table_manifest(
     generation N can never both commit N+1 (one loses loudly; retry by
     re-reading the table and redoing the rewrite against the new live
     set). The only in-package caller is `commit_store`, so every
-    in-package mutator — `selective_upsert`, `selective_delete`,
-    `compact_table`, `fold_store` (spectrum), the ANN artifacts,
-    the lexical index and the dedup band store — passes it. Pass the `EXPECT_ABSENT`
+    in-package mutator — `selective_upsert`, `fold_store`
+    (spectrum), the ANN artifacts, the lexical index and the dedup
+    band store — passes it. Pass the `EXPECT_ABSENT`
     sentinel when the writer read NO manifest and expects to CREATE
     generation 0 — the O_EXCL claim then arbitrates two writers racing
     to initialize the same store. Without `expect_generation` the
@@ -491,19 +461,22 @@ def fold_store(
     commutative monoid (the spectrum Gram partials): `merge(base)`
     folds the caller's PINNED batch into the committed table `base`
     (None before generation 0), and the merged
-    table replaces the whole (small) store as one file. Two folders
+    table replaces the whole (small) store as one file; the base's
+    files are deleted after the flip. Two folders
     that read the same generation both merge; the CAS lets only one
     flip, and the loser re-reads the NEW live table and re-merges —
     the fold is commutative, so every batch lands exactly once.
-    `first` = (base, generation) from the caller's own `read_store`
-    saves the first re-read (one parquet schema job)."""
+    `first` = (base, generation, files) from the caller's own
+    `read_store` saves the first re-read (one parquet schema job)."""
     for attempt in range(_MAX_COMMIT_RETRIES):
         if first is None:
             files, gen, _ = read_store(path)
-            first = (spark.read.parquet(*files) if files else None, gen)
-        base, gen = first
+            first = (spark.read.parquet(*files) if files else None, gen, files)
+        base, gen, files = first
         try:
-            commit_store(path, [(prefix, merge(base).coalesce(1))], gen)
+            commit_store(
+                path, [(prefix, merge(base).coalesce(1))], gen, replaced=files
+            )
             return
         except ConcurrentCommitError:
             if attempt == _MAX_COMMIT_RETRIES - 1:
@@ -537,7 +510,7 @@ def vacuum_table(
 
     `grace_seconds` (r9, the Delta retention-grace analog): unreferenced
     files YOUNGER than the grace are kept — a concurrent
-    upsert/delete/compact moves its staged files in BEFORE its manifest
+    upsert moves its staged files in BEFORE its manifest
     flip, so without the grace a vacuum running in that window would
     delete them and let the writer commit a manifest pointing at
     missing files. One vacuum per table at a time is still the
@@ -872,76 +845,6 @@ def upsert_rewrite_set(
     return hit.unionByName(missing).distinct()
 
 
-def pruned_read_footer_table(
-    spark: SparkSession,
-    path: str,
-    index: DataFrame,
-    predicates: dict,
-) -> DataFrame:
-    """File-level pruned read driven by the DISTRIBUTED footer-stats
-    table (`footer_stats_index_table`): the overlap test runs as Spark
-    filters over the index (a file survives if ANY of its row groups
-    overlaps every predicate interval; row groups with missing stats
-    cannot prune and count as overlapping), only the surviving FILE
-    LIST is collected (bounded by file count — the unavoidable driver
-    state, since the reader takes paths), and the parquet reader's own
-    row-group pushdown finishes the job. Row-identical to a full
-    scan + filter. This is the at-scale path; `pruned_read_footer`
-    below stays for driver-sized pandas indexes."""
-    cond = F.lit(True)
-    for c, (lo, hi) in predicates.items():
-        overlap = (F.col(f"max_{c}") >= F.lit(lo)) & (F.col(f"min_{c}") <= F.lit(hi))
-        no_stats = F.col(f"min_{c}").isNull() | F.col(f"max_{c}").isNull()
-        cond = cond & (overlap | no_stats)
-    keep = [
-        r["file"]
-        for r in index.filter(cond).select("file").distinct().collect()
-    ]
-    if not keep:
-        out = manifest_read(spark, path).limit(0)
-    else:
-        out = spark.read.parquet(*sorted(keep))
-    for c, (lo, hi) in predicates.items():
-        out = out.filter((F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi)))
-    return out
-
-
-def pruned_read_footer(
-    spark: SparkSession,
-    path: str,
-    cols_index: "object",
-    predicates: dict,
-) -> DataFrame:
-    """File-level pruned read driven by the footer-stats index: keep a
-    file if ANY of its row groups overlaps every predicate interval,
-    then let the parquet reader's own row-group pushdown finish the
-    job. Row-identical to a full scan + filter."""
-    from pyspark.sql import functions as _F
-
-    df = cols_index
-    keep = set()
-    for _, r in df.iterrows():
-        ok = True
-        for c, (lo, hi) in predicates.items():
-            mn, mx = r[f"min_{c}"], r[f"max_{c}"]
-            if mn is None or mx is None:
-                continue  # no stats → cannot prune this group
-            if mx < lo or mn > hi:
-                ok = False
-                break
-        if ok:
-            keep.add(r["file"])
-    if not keep:
-        empty = spark.read.parquet(path).limit(0)
-        for c, (lo, hi) in predicates.items():
-            empty = empty.filter((_F.col(c) >= lo) & (_F.col(c) <= hi))
-        return empty
-    out = spark.read.parquet(*sorted(keep))
-    for c, (lo, hi) in predicates.items():
-        out = out.filter((_F.col(c) >= _F.lit(lo)) & (_F.col(c) <= _F.lit(hi)))
-    return out
-
-
 #: file-count ceiling for the driver-side rewrite-set fast path — the
 #: same "driver-sized" bound footer_stats_index documents; above it the
 #: distributed index + bucket join takes over
@@ -966,7 +869,7 @@ def _keys_rewrite_set(
         isinstance(v, float) and v != v for v in update_keys
     ):
         raise ValueError(
-            "selective upsert/delete: NaN update keys cannot be "
+            "selective upsert: NaN update keys cannot be "
             "range-matched against file stats and would be silently "
             "skipped (stale duplicates after MERGE); filter or remap "
             "them first"
@@ -1050,7 +953,7 @@ def _small_table_rewrite_set(
     hit = updates.agg(*aggs).collect()[0]
     if fractional and hit["__nan"]:
         raise ValueError(
-            "selective upsert/delete: NaN update keys cannot be "
+            "selective upsert: NaN update keys cannot be "
             "range-matched against file stats and would be silently "
             "skipped (stale duplicates after MERGE); filter or remap "
             "them first"
@@ -1099,7 +1002,7 @@ def selective_upsert(
     swap COMMITS through the live-file manifest: staged files move in,
     the manifest is atomically replaced (the commit point), and only
     then are the replaced files deleted. A crash anywhere leaves
-    manifest readers (`manifest_read`, `pruned_read*`,
+    manifest readers (`manifest_read`, `pruned_read`,
     `footer_stats_index*`) on the exact pre- or post-commit snapshot —
     never transient duplicates (only a raw `spark.read.parquet(dir)`
     between move-in and cleanup can see both copies). At 100 TB the
@@ -1244,203 +1147,4 @@ def selective_upsert(
         "files_total": files_total,
         "files_rewritten": len(rewrite),
         "rows_written": int(_obs.get["rows"]),
-    }
-
-
-def selective_delete(
-    spark: SparkSession,
-    path: str,
-    keys: DataFrame,
-    key: str,
-    keep_history: bool = False,
-) -> dict:
-    """Copy-on-write DELETE by key — the right-to-be-forgotten /
-    retention-expiry primitive (Delta `DELETE FROM ... WHERE key IN`),
-    completing the table-maintenance suite (upsert / compact / vacuum /
-    time-travel / evolve). Footer stats pick the files whose key range
-    can contain a deleted key (the same bucket-blocked equi semi-join
-    as `selective_upsert` — no target scan, no BroadcastNestedLoopJoin);
-    only those files are rewritten (anti-join on the keys), and the
-    swap commits through the live-file manifest with the identical
-    crash contract: staged files move in, the manifest flips atomically
-    (THE commit point), replaced files are deleted post-commit. A file
-    whose every row is deleted simply leaves the manifest — no empty
-    file is written. With `keep_history=True` the pre-delete
-    generation stays readable via `manifest_read(version=...)` until
-    `vacuum_table` — note that for GDPR erasure the vacuum IS the
-    erasure: history generations still hold the deleted rows.
-
-    Returns {"files_total", "files_rewritten", "rows_deleted"}.
-    """
-    # CAS base (r9): same contract as selective_upsert — refuse the
-    # final flip if another writer committed since this read
-    before, gen0, meta = _cas_base(path)
-    files_total = len(before)
-    del_keys = keys.select(key).distinct()
-    n_rows_by_file: dict[str, int] | None = None
-    small = _small_table_rewrite_set(spark, path, del_keys, key, before)
-    if small is not None:
-        rewrite = small
-        pdf = footer_stats_index(path, [key])
-        n_rows_by_file = (
-            pdf.groupby("file")["n_rows"].sum().astype(int).to_dict()
-        )
-    else:
-        # one footer pass (the selective_upsert discipline): materialize
-        # the per-file ranges — carrying each file's row total, so the
-        # deleted-row accounting below never re-reads the rewritten files
-        idx = footer_stats_index_table(spark, path, [key])
-        ranges_df = idx.groupBy("file").agg(
-            F.min(f"min_{key}").alias("lo"),
-            F.max(f"max_{key}").alias("hi"),
-            F.sum("n_rows").alias("__n_rows"),
-        ).localCheckpoint(eager=True)
-        rewrite = sorted(
-            r["file"]
-            for r in upsert_rewrite_set(ranges_df, del_keys, key).collect()
-        )
-    if not rewrite:
-        return {"files_total": files_total, "files_rewritten": 0, "rows_deleted": 0}
-    # mergeSchema: the rewrite set can mix schemas after an
-    # evolve_schema=True upsert (same hazard as selective_upsert)
-    old = spark.read.option("mergeSchema", "true").parquet(*rewrite)
-    kept = old.join(del_keys, key, "left_anti")
-    # n_old from the footer index (no data-page read)
-    if n_rows_by_file is not None:
-        n_old = sum(n_rows_by_file[f] for f in rewrite)
-    else:
-        n_old = int(
-            ranges_df.filter(F.col("file").isin(rewrite))
-            .agg(F.sum("__n_rows"))
-            .collect()[0][0]
-        )
-    n_kept = kept.count()
-    # a file whose every row is deleted simply leaves the manifest
-    rewritten = set(rewrite)
-    commit_store(
-        path,
-        [("delete", kept)] if n_kept > 0 else [],
-        gen0,
-        keep=[f for f in before if f not in rewritten],
-        meta=meta,
-        replaced=rewrite,
-        keep_history=keep_history,
-    )
-    return {
-        "files_total": files_total,
-        "files_rewritten": len(rewrite),
-        "rows_deleted": n_old - n_kept,
-    }
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    keep_history: bool = False,
-    sort_cols: Sequence[str] | None = None,
-) -> dict:
-    """Bin-packing small-file compaction (the Delta OPTIMIZE / Iceberg
-    rewrite-data-files analog), committed through the same live-file
-    manifest as `selective_upsert`. Continuous ingest and selective
-    upserts both shed small files; at 100 TB the resulting
-    per-file-task overhead and footer-index bloat are the dominant
-    read tax, and compaction is the lifecycle op that pays it down.
-
-    Files smaller than `target_bytes` are greedily packed
-    (size-ascending first-fit) into groups whose summed size stays
-    ≤ `target_bytes`; each group with ≥ 2 files is rewritten as ONE
-    file. Files ≥ target, and lone leftovers, are left byte-identical
-    — compaction never rewrites what is already well-sized. Each
-    group's rewrite is an independent bounded job (a scheduler can run
-    groups in parallel; here they run sequentially), then
-    `commit_store` moves the staged files in, ONE manifest flip
-    commits every group atomically, and replaced files are deleted
-    post-commit (or kept when `keep_history=True`, readable via
-    `manifest_read(version=...)` until `vacuum_table`). A crash
-    anywhere leaves manifest readers on the exact pre- or post-commit
-    snapshot — the `selective_upsert` guarantee, inherited by sharing
-    its commit path.
-
-    `sort_cols` switches the rewrite to a RANGE-CLUSTERED compaction
-    (the Delta OPTIMIZE ZORDER mechanic): all sub-target files are
-    rewritten together through one repartitionByRange(sort_cols) +
-    within-partition sort, so each output file owns a DISJOINT key
-    range. Per-group sorting could never do this — rows from every
-    ingest batch span the whole key space, so sorting inside an
-    arbitrary bin leaves its file-level min/max as wide as before.
-    Compaction is the one moment the rows are rewritten anyway, so
-    the one range exchange is the cheapest point to restore the
-    footer min/max locality that `footer_stats_index*`/`pruned_read*`
-    prune with — small ingest batches scatter key ranges, clustered
-    compaction re-narrows them (measured in the pruning test: a point
-    probe prunes all but one output file).
-
-    Returns {"files_before", "files_after", "groups_compacted",
-    "bytes_compacted"}.
-    """
-    import os as _os
-
-    if target_bytes <= 0:
-        raise ValueError(f"target_bytes must be > 0, got {target_bytes}")
-    # CAS base (r9): compaction races ingest at 100 TB — refuse the
-    # flip if an upsert/delete committed since this read
-    before, gen0, meta = _cas_base(path)
-    sizes = {f: _os.path.getsize(f) for f in before}
-    small = sorted(
-        (f for f in before if sizes[f] < target_bytes), key=lambda f: sizes[f]
-    )
-    groups: list[list[str]] = []
-    cur: list[str] = []
-    cur_bytes = 0
-    for f in small:
-        if cur and cur_bytes + sizes[f] > target_bytes:
-            groups.append(cur)
-            cur, cur_bytes = [], 0
-        cur.append(f)
-        cur_bytes += sizes[f]
-    if cur:
-        groups.append(cur)
-    if sort_cols:
-        # range-clustered rewrite: one scope spanning every small file
-        groups = [small] if len(small) >= 2 else []
-    else:
-        groups = [g for g in groups if len(g) >= 2]
-    if not groups:
-        return {
-            "files_before": len(before),
-            "files_after": len(before),
-            "groups_compacted": 0,
-            "bytes_compacted": 0,
-        }
-    frames = []
-    for g in groups:
-        # mergeSchema: after selective_upsert(..., evolve_schema=True)
-        # files in one group can disagree on columns — a plain read
-        # resolves ONE footer and would silently drop the evolved
-        # column from the rewritten file (pinned by test)
-        gread = spark.read.option("mergeSchema", "true").parquet(*g)
-        if sort_cols:
-            n_out = max(1, -(-sum(sizes[f] for f in g) // target_bytes))
-            gdf = gread.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
-                *sort_cols
-            )
-        else:
-            gdf = gread.coalesce(1)
-        frames.append(("compact", gdf))
-    replaced = {f for g in groups for f in g}
-    moved = commit_store(
-        path,
-        frames,
-        gen0,
-        keep=[f for f in before if f not in replaced],
-        meta=meta,
-        replaced=sorted(replaced),
-        keep_history=keep_history,
-    )
-    return {
-        "files_before": len(before),
-        "files_after": len(before) - len(replaced) + len(moved),
-        "groups_compacted": len(groups),
-        "bytes_compacted": sum(sizes[f] for f in replaced),
     }

@@ -20,35 +20,8 @@ def _f(name: str, dtype: T.DataType, nullable: bool = True) -> T.StructField:
 
 S = T.StringType()
 L = T.LongType()
-D = T.DoubleType()
 B = T.BooleanType()
-TS = T.TimestampType()
-ARR_S = T.ArrayType(T.StringType())
 
-
-# posts table — feed-scrape metadata (`InstagramFeedScraper.py:189-221`,
-# header confirmed in data.zip:Test_test/posts.csv; FIXTURES.md §1)
-POSTS = T.StructType(
-    [
-        _f("id", S, False),
-        _f("shortcode", S, False),
-        _f("post_url", S),
-        _f("type", S),
-        _f("is_video", B),
-        _f("likes", L),
-        _f("comment_count", L),
-        _f("comments_disabled", B),
-        _f("search_mode", S),
-        _f("search_term", S),
-        _f("caption", S),
-        _f("hashtags", ARR_S),
-        _f("display_url", S),
-        _f("owner_id", S),
-        _f("timestamp", TS),
-        _f("mentions", ARR_S),
-        _f("thumbnail_src", S),
-    ]
-)
 
 # Preprocessor output — exact 20-column projection+order of
 # `Preprocessor.column_stuff` (`Preprocessor.py:156-158`) + index col id
@@ -171,101 +144,5 @@ POST_JSON = T.StructType(
     ]
 )
 
-# comments side table (`js_to_comment_table`, `InstagramPostScraper.py:263-267`)
-COMMENTS = T.StructType(
-    [
-        _f("post_id", S),
-        _f("post_shortcode", S),
-        _f("comment_count", L),
-        _f("parent_comment_id", S),  # null for top-level
-        _f("comment_id", S),
-        _f("owner", S),
-        _f("likes", L),
-        _f("text", S),
-    ]
-)
-
-# post→image link table (`create_image_df`, `InstagramPostScraper.py:359`)
-POST_IMAGES = T.StructType(
-    [
-        _f("shortcode", S),
-        _f("owner_username", S),
-        _f("timestamp", TS),
-        _f("image", S),
-    ]
-)
-
-# CrowdTangle flattened posts (`CTExtractors.py:30-46`,
-# `Preprocessor.py:41-54`; FIXTURES.md §6)
-CT_POSTS = T.StructType(
-    [
-        _f("platformId", S, False),
-        _f("platform", S),
-        _f("date", TS),
-        _f("type", S),
-        _f("description", S),
-        _f(
-            "account",
-            T.StructType(
-                [
-                    _f("id", L),
-                    _f("name", S),
-                    _f("handle", S),
-                    _f("subscriberCount", L),
-                    _f("url", S),
-                    _f("platform", S),
-                    _f("platformId", S),
-                    _f("verified", B),
-                ]
-            ),
-        ),
-        _f(
-            "statistics",
-            T.StructType(
-                [
-                    _f(
-                        "actual",
-                        T.StructType([_f("favoriteCount", L), _f("commentCount", L)]),
-                    ),
-                    _f(
-                        "expected",
-                        T.StructType([_f("favoriteCount", L), _f("commentCount", L)]),
-                    ),
-                ]
-            ),
-        ),
-        _f("score", D),
-        _f("postUrl", S),
-        _f("id", S),
-        _f("subscriberCount", L),
-    ]
-)
-
-# image-labels table (`ImageLabeler.py:153-167`; FIXTURES.md §7)
-IMAGE_LABELS = T.StructType(
-    [
-        _f("image", S),
-        _f(
-            "predictions",
-            T.ArrayType(T.StructType([_f("category", S), _f("confidence", D)])),
-        ),
-        _f("category", S),
-    ]
-)
-
-SCENE_HIERARCHY = T.StructType([_f("category", S), _f("level1", S), _f("level2", S)])
-
 # feature-vector table (`DIRAdapter.py` output; FIXTURES.md §8)
 IMAGE_FEATURES = T.StructType([_f("image", S), _f("feature", T.ArrayType(T.FloatType()))])
-
-# scrape-state table (`InstagramImageScraper.py:62-69`; FIXTURES.md §9)
-SCRAPE_STATE = T.StructType(
-    [
-        _f("post_id", S),
-        _f("image_scraped", T.IntegerType()),
-        _f("image_attempts", T.IntegerType()),
-        _f("max_attempts", T.IntegerType()),
-        _f("shortcode", S),
-        _f("image_url", S),
-    ]
-)

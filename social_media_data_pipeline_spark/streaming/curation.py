@@ -91,7 +91,7 @@ def curate_batch(
     `spectrum_drift` / `spectrum_alarm` in the returned counts — the
     documented REBUILD TRIGGER for ANN artifacts appended over this
     curated table (an alarm means the embedding model or corpus
-    distribution moved and `pq_codes_append`-maintained indexes are
+    distribution moved and indexes encoded with frozen artifacts are
     stale in DISTRIBUTION, which fingerprint staleness alone cannot
     see)."""
     from social_media_data_pipeline_spark import scale

@@ -1,165 +1,14 @@
-"""Streaming event processing (SURVEY.md §2.11 mappings).
+"""Sessionization over event tables (SURVEY.md §2.11 session windows).
 
-| reference behavior | here |
-|---|---|
-| tumbling calendar windows over post time (`plotting.py:50-67`) | `windowed_counts` (event-time window + watermark) |
-| dedup-on-natural-key after merge (`InstagramFeedScraper.py:220`) | `dedup_stream` (watermarked dropDuplicates) |
-| checkpoint-every-100-rows translation (`Translator.py:121-144`) | `merge_new_rows` foreachBatch idempotent keyed merge |
-
-All helpers operate on a streaming DataFrame; tests drive them with a
-parquet-dir source + `Trigger.AvailableNow` (bounded, offline). On a
-cluster the same code runs continuously against kafka/files with
-checkpointed offsets.
+`sessionize` is the batch gap-based session assignment; `sessionize_bounded`
+is its skew-tolerant chunked formulation with identical output. Both are
+registered queries checked against the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def read_event_stream(
-    spark: SparkSession, path: str, schema, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-based streaming source over a directory of parquet parts.
-
-    `maxFilesPerTrigger` is the ingest throttle — the streaming analog of
-    the reference's politeness sleeps (`InstagramFeedScraper.py:163`).
-    """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
-def windowed_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    extra_groups: tuple[str, ...] = (),
-) -> DataFrame:
-    """Tumbling event-time window + watermark for late data.
-
-    Calendar grains (month/quarter) don't exist as stream windows —
-    batch uses `date_trunc` (A1); streams use fixed-duration windows,
-    rolled up to calendar grains downstream.
-    """
-    groups = [F.window(F.col(ts_col), window).alias("win"), *[F.col(c) for c in extra_groups]]
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(*groups)
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            *extra_groups,
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def dedup_stream(
-    events: DataFrame, keys: tuple[str, ...], ts_col: str = "ts", watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming exactly-once on a natural key: watermark bounds the
-    dedup state so it doesn't grow forever (the batch analog is D2)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(list(keys))
-
-
-def merge_new_rows(
-    batch_df: DataFrame, output_dir: str, key: str
-) -> None:
-    """foreachBatch body: idempotent keyed merge into a parquet table —
-    rows whose key already exists are skipped (anti-join), so re-run /
-    retry never duplicates work. This is the reference's resumable
-    translation checkpoint (`Translator.py:121-144`) with the state
-    made explicit.
-    """
-    spark = batch_df.sparkSession
-    if os.path.isdir(output_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(output_dir)
-    ):
-        existing = spark.read.parquet(output_dir).select(key)
-        fresh = batch_df.join(existing, key, "left_anti")
-    else:
-        fresh = batch_df
-    fresh.write.mode("append").parquet(output_dir)
-
-
-def run_incremental_merge(
-    stream: DataFrame, output_dir: str, checkpoint_dir: str, key: str
-) -> None:
-    """Checkpointed incremental pipeline: each micro-batch merges only
-    unseen keys; offsets in `checkpoint_dir` make restarts resume where
-    they left off (S12 scrape-state store, engine-native)."""
-    (
-        stream.writeStream.foreachBatch(
-            lambda df, _epoch: merge_new_rows(df, output_dir, key)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def run_paced_merge(
-    stream: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    key: str,
-    interval: str = "500 milliseconds",
-    idle_triggers: int = 2,
-    timeout_sec: float = 120.0,
-) -> int:
-    """ST5 throttled continuous ingest: `Trigger.ProcessingTime` paces
-    micro-batches at `interval` — the engine-native form of the
-    reference's request pacing (`InstagramFeedScraper.py:163` sleeps
-    between feed pages); `maxFilesPerTrigger` on the reader is the
-    batch-size knob (`read_event_stream`).
-
-    Unlike AvailableNow the query never self-terminates, so this
-    wrapper watches progress and stops after `idle_triggers`
-    consecutive empty micro-batches (source drained) or `timeout_sec`.
-    Each batch merges idempotently via `merge_new_rows`. Returns the
-    number of non-empty micro-batches processed — callers can assert
-    the pacing actually split the work.
-    """
-    import time
-
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, _epoch: merge_new_rows(df, output_dir, key)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=interval)
-        .start()
-    )
-    deadline = time.time() + timeout_sec
-    idle = 0
-    non_empty = 0
-    last_batch_id = -1
-    try:
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p["batchId"] != last_batch_id:
-                last_batch_id = p["batchId"]
-                if p["numInputRows"] == 0:
-                    idle += 1
-                    if idle >= idle_triggers:
-                        break
-                else:
-                    idle = 0
-                    non_empty += 1
-            time.sleep(0.05)
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    return non_empty
 
 
 def sessionize(
@@ -290,69 +139,3 @@ def sessionize_bounded(
         )
         .drop("__epoch", "__chunk", "__new", "__local_id", "__offset", "__merged")
     )
-
-
-def session_window_stream(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """True streaming session windows (stateful, watermark-bounded)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("session"), F.col(user_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col(user_col),
-            F.col("session.start").alias("session_start"),
-            F.col("session.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def enrich_stream(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: str,
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static enrichment join: every micro-batch joins against
-    the CURRENT static side (re-read per batch for file sources), the
-    streaming analog of the batch broadcast dim join (J1). The static
-    side is explicitly broadcast — per-batch hash join with no shuffle
-    of the stream; stateless, so no watermark is needed.
-    """
-    from pyspark.sql.functions import broadcast
-
-    return stream.join(broadcast(dim), on, how)
-
-
-def join_streams_within(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream inner join: pairs rows sharing `on` whose event
-    times are within `within` of each other (right at-or-after left —
-    click→purchase attribution shape).
-
-    Both sides carry watermarks and the join predicate bounds the time
-    skew, so Spark can expire buffered state: without BOTH conditions a
-    stream-stream join's state grows forever. State size ≈ each side's
-    (watermark + within) window of data, partitioned by the equi key.
-    """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        (lw[on] == rw[on])
-        & (rw[right_ts] >= lw[left_ts])
-        & (rw[right_ts] <= lw[left_ts] + F.expr(f"INTERVAL {within}"))
-    )
-    return lw.join(rw, cond, "inner").drop(rw[on])

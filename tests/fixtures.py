@@ -5,6 +5,28 @@ from __future__ import annotations
 import datetime as dt
 import random
 
+# posts table — feed-scrape metadata (`InstagramFeedScraper.py:189-221`;
+# FIXTURES.md §1)
+POSTS = (
+    "id string not null, shortcode string not null, post_url string, "
+    "type string, is_video boolean, likes bigint, comment_count bigint, "
+    "comments_disabled boolean, search_mode string, search_term string, "
+    "caption string, hashtags array<string>, display_url string, "
+    "owner_id string, timestamp timestamp, mentions array<string>, "
+    "thumbnail_src string"
+)
+
+# CrowdTangle flattened posts (`CTExtractors.py:30-46`; FIXTURES.md §6)
+_CT_COUNTS = "struct<favoriteCount: bigint, commentCount: bigint>"
+CT_POSTS = (
+    "platformId string not null, platform string, date timestamp, "
+    "type string, description string, account struct<id: bigint, "
+    "name: string, handle: string, subscriberCount: bigint, url: string, "
+    "platform: string, platformId: string, verified: boolean>, "
+    f"statistics struct<actual: {_CT_COUNTS}, expected: {_CT_COUNTS}>, "
+    "score double, postUrl string, id string, subscriberCount bigint"
+)
+
 
 def make_posts_rows(n: int = 200, seed: int = 42) -> list[dict]:
     """FIXTURES.md §1 posts rows: duplicates for D1/D2, nulls for E12,

@@ -1,20 +1,42 @@
-"""Tests: exploratory-analytics bundle + CLI orchestrator entry point."""
+"""Tests: exploratory analytics, PNG chart artifacts and the CLI
+orchestrator entry point."""
 
 from __future__ import annotations
 
 import json
+import struct
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
 
 from social_media_data_pipeline_spark import cli, schemas
 from social_media_data_pipeline_spark.analytics import explore
-from tests.fixtures import make_posts_rows
+from social_media_data_pipeline_spark.operators import aggregates
+from tests.fixtures import POSTS, make_posts_rows
+
+
+def decode_rgb_png(data: bytes):
+    """(width, height, h×w×3 pixels) of an 8-bit RGB PNG whose scanlines
+    are all filter 0 — the layout `binary.encode_png` writes."""
+    import numpy as np
+
+    w, h, depth, color = struct.unpack(">IIBB", data[16:26])
+    assert (depth, color) == (8, 2)
+    pos, idat = 8, b""
+    while pos < len(data):
+        n, tag = struct.unpack(">I4s", data[pos : pos + 8])
+        if tag == b"IDAT":
+            idat += data[pos + 8 : pos + 8 + n]
+        pos += 12 + n
+    raw = np.frombuffer(zlib.decompress(idat), np.uint8).reshape(h, 1 + 3 * w)
+    assert not raw[:, 0].any()
+    return w, h, raw[:, 1:].reshape(h, w, 3)
 
 
 @pytest.fixture(scope="module")
 def posts(spark):
-    return spark.createDataFrame(make_posts_rows(120), schema=schemas.POSTS)
+    return spark.createDataFrame(make_posts_rows(120), schema=POSTS)
 
 
 class TestExplore:
@@ -29,34 +51,29 @@ class TestExplore:
         counts = [r["count"] for r in rows]
         assert counts == sorted(counts, reverse=True)
 
-    def test_profile_covers_all_columns(self, posts):
-        prof = explore.profile(posts)
-        assert prof.count() == len(posts.columns)
-
-    def test_analyze_dataset_bundle(self, posts):
-        bundle = explore.analyze_dataset(posts)
-        assert {"summary", "profile", "posts_per_M", "hashtag_frequency", "correlation"} <= set(
-            bundle
-        )
-        # correlation is long-format over the numeric cols
-        corr = bundle["correlation"].collect()
-        assert all(abs(r.corr) <= 1.0 + 1e-9 for r in corr if r.corr is not None)
-
     def test_category_share_over_time_sums_to_one(self, posts):
-        out = explore.category_share_over_time(posts, "timestamp", "search_mode", freq="Y")
+        counts = aggregates.group_by_time(
+            posts,
+            "timestamp",
+            "Y",
+            "timestamp",
+            how="count",
+            extra_groups=("search_mode",),
+            bucket_name="period",
+            out_name="value",
+        )
+        out = aggregates.relative_to_group(counts, ["period"], "value", "share")
         sums = out.groupBy("period").agg(F.sum("share").alias("s")).collect()
         assert all(abs(r.s - 1.0) < 1e-9 for r in sums)
 
 
 class TestPngRender:
     """PNG artifact path (Exploration/plotting.py parity): the numpy
-    rasterizer writes real PNGs verified through the repo's own
-    decoder; the matplotlib backend is exercised only where the
+    rasterizer writes real PNGs, decoded here with zlib; the matplotlib backend is exercised only where the
     library exists (not in this container)."""
 
     def test_timeseries_png_with_trendline(self, spark, tmp_path, posts):
         from social_media_data_pipeline_spark.analytics import png_render
-        from social_media_data_pipeline_spark.sources.binary import _decode_png
 
         daily = posts.groupBy(F.to_date("timestamp").alias("day")).agg(
             F.count(F.lit(1)).alias("n")
@@ -65,10 +82,9 @@ class TestPngRender:
         out = png_render.timeseries_png(
             daily, "day", "n", path, smooth_sigma=2.0, backend="raster"
         )
-        w, h, c, px = _decode_png(open(out, "rb").read())
-        assert (w, h, c) == (640, 320, 3)
-        img = px.reshape(h, w, 3)
-        flat = img.reshape(-1, 3)
+        w, h, px = decode_rgb_png(open(out, "rb").read())
+        assert (w, h) == (640, 320)
+        flat = px.reshape(-1, 3)
         # bars in the first series color, trendline in the line color
         assert (flat == png_render._SERIES_RGB[0]).all(axis=1).any()
         assert (flat == png_render._SERIES_RGB[3]).all(axis=1).any()
@@ -77,12 +93,11 @@ class TestPngRender:
 
     def test_catplot_png_category_colors(self, spark, tmp_path, posts):
         from social_media_data_pipeline_spark.analytics import png_render
-        from social_media_data_pipeline_spark.sources.binary import _decode_png
 
         counts = posts.groupBy("type").agg(F.count(F.lit(1)).alias("n"))
         path = str(tmp_path / "cat.png")
         out = png_render.catplot_png(counts, "type", "n", path, backend="raster")
-        w, h, c, px = _decode_png(open(out, "rb").read())
+        w, h, px = decode_rgb_png(open(out, "rb").read())
         assert (w, h) == (640, 320)
         flat = px.reshape(-1, 3)
         n_cats = counts.count()
@@ -217,14 +232,22 @@ class TestReport:
     def test_category_timeseries_grid(self, posts):
         from social_media_data_pipeline_spark.analytics import report
 
-        cat = explore.category_share_over_time(posts, "timestamp", "type", freq="Y")
+        cat = aggregates.group_by_time(
+            posts,
+            "timestamp",
+            "Y",
+            "timestamp",
+            extra_groups=("type",),
+            bucket_name="period",
+            out_name="value",
+        )
         out = report.category_timeseries_chart(cat, "period", "type", "value")
         assert len(out.splitlines()) >= 2  # header + >=1 period row
 
     def test_correlation_heatmap_diagonal_is_one(self, posts):
         from social_media_data_pipeline_spark.analytics import report
 
-        corr = explore.correlation(posts.select("likes", "comment_count"))
+        corr = aggregates.correlation_matrix(posts, ["likes", "comment_count"])
         out = report.correlation_heatmap(corr)
         assert "+@@1.00" in out  # self-correlation cell at max intensity
 

@@ -173,7 +173,7 @@ class TestTrainCommitSafety:
         ann_index.ivf_centroids_for(emb, tag, k=4, iters=2)
         path = ann_index.ivf_index_path(tag, params)
         live0 = sorted(scale.read_table_manifest(path))
-        meta0 = ann_index._load_meta(path)
+        meta0 = scale.read_store(path)[2]
         # simulate a writer that lands between this trainer's manifest
         # read and its commit: steal the CAS by bumping the pointer
         # from inside the fingerprint scan (which train_ivf_index runs
@@ -209,7 +209,7 @@ class TestTrainCommitSafety:
             assert os.path.exists(os.path.join(path, os.path.basename(f)))
         # the loser's params/fingerprint never went live either: the
         # meta is committed with its files, not ahead of the flip
-        assert ann_index._load_meta(path) == meta0
+        assert scale.read_store(path)[2] == meta0
 
 
 class TestPqCodebookLifecycle:
@@ -330,78 +330,6 @@ class TestPqCodesLifecycle:
         assert key(got) == key(want)
 
 
-class TestPqCodesAppend:
-    """r10: incremental index maintenance — frozen-model batch encode,
-    manifest append, mergeable fingerprint."""
-
-    def _split(self, spark):
-        rows = [
-            (i, [float((i * 7 + j * 3) % 13) for j in range(8)])
-            for i in range(64)
-        ]
-        base = spark.createDataFrame(
-            rows[:48], "vec_id int, embedding array<float>"
-        )
-        batch = spark.createDataFrame(
-            rows[48:], "vec_id int, embedding array<float>"
-        )
-        full = spark.createDataFrame(
-            rows, "vec_id int, embedding array<float>"
-        )
-        return base, batch, full
-
-    def test_append_equals_frozen_full_encode(self, spark):
-        from social_media_data_pipeline_spark.functions import pq
-
-        base, batch, full = self._split(spark)
-        tag = "unit:emb"
-        kw = dict(ivf_k=4, ivf_iters=2, m=2, ksub=4, iters=2)
-        ann_index.pq_codes_for(base, tag, **kw)
-        appended = ann_index.pq_codes_append(batch, tag, **kw)
-        # identical to re-encoding the UNION with the frozen (base-
-        # trained) artifacts — the no-retrain contract
-        cents = ann_index.ivf_centroids_for(
-            base, tag, k=4, iters=2, trust_cache=True
-        )
-        cb = ann_index.pq_residual_codebook_for(
-            base, tag, trust_cache=True, **kw
-        )
-        want = pq.pq_encode(
-            pq.residual_table(full, cents), cb, "vec_id", "__resid",
-            keep_cols=["cluster"],
-        )
-        key = lambda df: sorted(  # noqa: E731
-            (r["vec_id"], r["cluster"], tuple(r["codes"]))
-            for r in df.collect()
-        )
-        assert key(appended) == key(want)
-        assert appended.count() == 64
-
-    def test_merged_fingerprint_validates_grown_corpus(self, spark):
-        base, batch, full = self._split(spark)
-        tag = "unit:emb"
-        kw = dict(ivf_k=4, ivf_iters=2, m=2, ksub=4, iters=2)
-        ann_index.pq_codes_for(base, tag, **kw)
-        ann_index.pq_codes_append(batch, tag, **kw)
-        params = {**kw, "id_col": "vec_id", "vec_col": "embedding"}
-        path = ann_index.pq_codes_path(tag, params)
-        meta = ann_index._load_meta(path)
-        # (count, bit_xor) merge == a fresh scan of the grown corpus
-        assert meta["fingerprint"] == ann_index.corpus_fingerprint(full)
-        # and a validating pq_codes_for read against the grown corpus
-        # cache-hits (no re-encode): manifest generation unchanged
-        g0 = scale.read_store(path)[1]
-        got = ann_index.pq_codes_for(full, tag, **kw)
-        assert scale.read_store(path)[1] == g0
-        assert got.count() == 64
-
-    def test_append_without_base_refused(self, spark):
-        base, batch, _ = self._split(spark)
-        with pytest.raises(ValueError, match="base index"):
-            ann_index.pq_codes_append(batch, "unit:emb", ivf_k=4,
-                                      ivf_iters=2, m=2, ksub=4, iters=2)
-
-
 class TestOpqRotationLifecycle:
     """Persisted OPQ rotation artifact (r12): train-once, reload
     bit-exact, retrain on corpus change."""
@@ -444,6 +372,6 @@ class TestOpqRotationLifecycle:
         assert scale.read_store(path)[1] != g0  # fingerprint miss retrained
         # scaling is isotropic so the basis may persist, but the meta
         # must now carry the NEW fingerprint
-        fp = ann_index._load_meta(path)["fingerprint"]
+        fp = scale.read_store(path)[2]["fingerprint"]
         assert fp == ann_index.corpus_fingerprint(changed)
         assert r2.shape == r1.shape

@@ -1,6 +1,6 @@
 """Tests: archive-shard ingestion (`binary.read_archive_members`) —
-zip and tar.gz shards exploded to member rows, member-glob filtering,
-composition with image decode, and error reporting."""
+zip and tar.gz shards exploded to member rows, member-glob filtering
+and error reporting."""
 
 from __future__ import annotations
 
@@ -51,17 +51,6 @@ class TestArchiveSource:
         )
         df = binary.read_archive_members(spark, str(tmp_path), member_glob="*.txt")
         assert {r["member"] for r in df.collect()} == {"one.txt", "sub/three.txt"}
-
-    def test_composes_with_image_decode(self, spark, tmp_path):
-        # a zip of ppm images flows straight into decode_image
-        ppm = b"P6\n2 1\n255\n" + bytes([255, 0, 0, 0, 255, 0])
-        (tmp_path / "imgs.zip").write_bytes(_zip_bytes({"r.ppm": ppm, "g.ppm": ppm}))
-        members = binary.read_archive_members(spark, str(tmp_path))
-        decoded = binary.decode_image(
-            members.withColumnRenamed("member", "image")
-        ).collect()
-        assert len(decoded) == 2
-        assert all((r["width"], r["height"]) == (2, 1) for r in decoded)
 
     def test_non_archive_reported(self, spark, tmp_path):
         (tmp_path / "bad.zip").write_bytes(b"this is not an archive at all")

@@ -324,31 +324,6 @@ class TestTrainingShards:
             packing.assign_training_shards(self._docs(spark), "doc_id", "toks", 0)
 
 
-class TestWriteTrainingShards:
-    def test_partitioned_layout_round_trips(self, spark, tmp_path):
-        from social_media_data_pipeline_spark.operators import packing
-
-        df = spark.createDataFrame(
-            [(i, 40 + (i * 53) % 400) for i in range(300)], "doc_id long, toks long"
-        )
-        path = str(tmp_path / "shards")
-        packing.write_training_shards(df, path, "doc_id", "toks", 2000)
-        back = spark.read.parquet(path)
-        assert back.count() == 300
-        # partition column survives and matches a fresh assignment
-        want = {
-            r["doc_id"]: r["shard"]
-            for r in packing.assign_training_shards(
-                df, "doc_id", "toks", 2000
-            ).collect()
-        }
-        got = {r["doc_id"]: r["shard"] for r in back.collect()}
-        assert got == want
-        # every shard is one hive directory readable on its own
-        sh0 = spark.read.parquet(f"{path}/shard=0")
-        assert sh0.count() == sum(1 for v in want.values() if v == 0)
-
-
 class TestPackBestfit:
     def _ref_bfd(self, sizes_ids, budget):
         """Sequential best-fit-decreasing reference (list scan)."""
@@ -554,18 +529,12 @@ def test_salted_join_reserves_salt_column(salt_frames, spark):
         joins.salted_join(big.withColumn("_salt", F.lit(0)), other, "k")
 
 
-@pytest.mark.parametrize("how", ["inner", "left"])
-def test_salted_join_auto_matches_plain(salt_frames, how):
-    big, other = salt_frames
-    got = joins.salted_join_auto(big, other, "k", n_salts=4, how=how, hot_share=0.3)
-    exp = big.join(other, "k", how)
-    assert _sorted_rows(got) == _sorted_rows(exp)
 
-
-def test_salted_join_auto_uniform_no_hot_keys(spark):
-    # uniform keys: nothing clears the hot threshold — the hybrid path
-    # must degrade to the plain cold join and stay correct
+def test_salted_join_empty_hot_keys_is_plain_join(spark):
+    # uniform keys leave the hot list empty: the hybrid path must
+    # degrade to the plain cold join and stay correct
     big = spark.createDataFrame([(i % 10, i) for i in range(100)], "k long, v long")
     dim = spark.createDataFrame([(i, f"s{i}") for i in range(10)], "k long, seg string")
-    got = joins.salted_join_auto(big, dim, "k", hot_share=0.5)
+    hot = spark.createDataFrame([], "k long")
+    got = joins.salted_join(big, dim, "k", hot_keys=hot)
     assert _sorted_rows(got) == _sorted_rows(big.join(dim, "k"))

@@ -80,7 +80,7 @@ class TestBpeEncode:
     def test_encode_applies_merges_in_order(self, spark):
         exp_merges, exp_words = py_bpe(TEXTS, 8)
         docs = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(TEXTS)])
-        out = bpe.bpe_encode(docs, [(l, r) for _, l, r, _ in exp_merges])
+        out = bpe.bpe_encode_corpus(docs, [(l, r) for _, l, r, _ in exp_merges])
         got = {r.doc_id: r.bpe_tokens for r in out.collect()}
         for i, t in enumerate(TEXTS):
             exp_tokens = [s for w in t.lower().split() for s in exp_words[w]]
@@ -89,30 +89,28 @@ class TestBpeEncode:
 
 class TestBpeVocab:
     def test_vocab_join_equals_per_token_replay(self, spark):
-        exp_merges, _ = py_bpe(TEXTS, 8)
+        exp_merges, exp_words = py_bpe(TEXTS, 8)
         merges = [(l, r) for _, l, r, _ in exp_merges]
         docs = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(TEXTS)])
         vocab = {r.w: r.syms for r in bpe.bpe_vocab(docs, merges).collect()}
-        enc = {r.doc_id: r.bpe_tokens for r in bpe.bpe_encode(docs, merges).collect()}
-        for i, t in enumerate(TEXTS):
-            via_vocab = [s for w in t.lower().split() if w for s in vocab[w]]
-            assert enc[i] == via_vocab, f"doc {i}"
+        assert set(vocab) == {w for t in TEXTS for w in t.lower().split() if w}
+        for w, syms in vocab.items():
+            assert syms == exp_words[w], w
 
 
 class TestBpeEncodeCorpus:
     def test_corpus_encoder_agrees_token_for_token(self, spark):
-        exp_merges, _ = py_bpe(TEXTS, 8)
+        exp_merges, exp_words = py_bpe(TEXTS, 8)
         merges = [(l, r) for _, l, r, _ in exp_merges]
         docs = spark.createDataFrame(
             [Row(doc_id=i, text=t) for i, t in enumerate(TEXTS)]
         ).repartition(3)
-        per_token = {r.doc_id: r.bpe_tokens for r in bpe.bpe_encode(docs, merges).collect()}
         corpus = {r.doc_id: (r.n_words, r.bpe_tokens)
                   for r in bpe.bpe_encode_corpus(docs, merges).collect()}
-        assert set(corpus) == set(per_token)
+        assert set(corpus) == set(range(len(TEXTS)))
         for i, t in enumerate(TEXTS):
             n_words, toks = corpus[i]
-            assert toks == per_token[i], f"doc {i}"
+            assert toks == [s for w in t.lower().split() for s in exp_words[w]], f"doc {i}"
             assert n_words == len([w for w in t.lower().split() if w])
 
 
@@ -198,14 +196,14 @@ class TestBpeTrainBatched:
         assert stats["rounds"] <= 40
 
     def test_encoder_accepts_batched_merges(self, spark):
-        df = spark.createDataFrame([Row(text=t) for t in TEXTS])
+        df = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(TEXTS)])
         merges = [
             (r["lhs"], r["rhs"])
             for r in bpe.bpe_train_batched(df, num_merges=10).orderBy(
                 "merge_rank"
             ).collect()
         ]
-        out = bpe.bpe_encode(df, merges).collect()
+        out = bpe.bpe_encode_corpus(df, merges).collect()
         assert all(len(r["bpe_tokens"]) > 0 for r in out)
 
 

@@ -10,7 +10,7 @@ from social_media_data_pipeline_spark import schemas
 from social_media_data_pipeline_spark.plans.pipeline import PipelineRunner, summarize
 from social_media_data_pipeline_spark.plans.stages import default_registry
 from social_media_data_pipeline_spark.sources import rest
-from tests.fixtures import make_posts_rows
+from tests.fixtures import POSTS, make_posts_rows
 
 
 def feed_page_for(term: str):
@@ -126,7 +126,7 @@ class TestReferenceConfigCompat:
         root = str(tmp_path)
         ds = os.path.join(root, ref["dataset_name"])
         os.makedirs(ds, exist_ok=True)
-        spark.createDataFrame(make_posts_rows(150), schema=schemas.POSTS).write.mode(
+        spark.createDataFrame(make_posts_rows(150), schema=POSTS).write.mode(
             "overwrite"
         ).parquet(os.path.join(ds, "posts.csv"))
         offline = ("PreprocessorStage", "ExploratoryanalysisStage", "TranslatorStage")

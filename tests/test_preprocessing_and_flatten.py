@@ -10,12 +10,12 @@ from pyspark.sql import functions as F
 
 from social_media_data_pipeline_spark import preprocessing, schemas
 from social_media_data_pipeline_spark.sources import json_flatten
-from tests.fixtures import make_post_json_docs, make_posts_rows
+from tests.fixtures import CT_POSTS, POSTS, make_post_json_docs, make_posts_rows
 
 
 @pytest.fixture(scope="module")
 def posts_df(spark):
-    return spark.createDataFrame(make_posts_rows(), schema=schemas.POSTS)
+    return spark.createDataFrame(make_posts_rows(), schema=POSTS)
 
 
 class TestPreprocess:
@@ -91,7 +91,7 @@ class TestPreprocess:
                 "subscriberCount": 9,
             }
         ]
-        df = spark.createDataFrame(rows, schema=schemas.CT_POSTS)
+        df = spark.createDataFrame(rows, schema=CT_POSTS)
         out = preprocessing.preprocess_ct_posts(df).collect()[0]
         assert out.likes == 92 and out.comment_count == 2
         assert out.likes_expected == 650 and out.comment_count_expected == 8

@@ -154,16 +154,13 @@ class TestTextProperties:
             list(enumerate(vecs)), "vec_id long, embedding array<float>"
         )
         q = quantize.quantize_embeddings(df)
-        recon = q.select(
-            "vec_id", "scale", "q_embedding",
-            quantize.dequantize_vector("q_embedding", F.col("scale")).alias("r"),
-        ).collect()
-        for row in recon:
+        for row in q.collect():
             assert all(-127 <= x <= 127 for x in row.q_embedding)
             orig = [float(x) for x in vecs[row.vec_id]]
             # float32 storage rounds the original; bound with an epsilon
             # proportional to magnitude
-            for x, xhat in zip(orig, row.r):
+            for x, v in zip(orig, row.q_embedding):
+                xhat = v * row.scale
                 assert abs(x - xhat) <= row.scale / 2 + abs(x) * 1e-6 + 1e-9
 
 

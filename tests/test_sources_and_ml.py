@@ -1,5 +1,5 @@
 """Tests: REST-shaped incremental sources (resume/retry semantics),
-binary metadata decode, ML inference UDF harness, NLP translate stage."""
+binary folder scan, ML inference UDF harness, NLP translate stage."""
 
 from __future__ import annotations
 
@@ -137,26 +137,6 @@ class TestRequestsHttpClient:
             client.get(f"{base}/flaky", {"cursor": ""})
 
 
-class TestChunkedSource:
-    def test_chunks_and_resume(self, spark, tmp_path):
-        from datetime import datetime
-
-        doc = {"posts": [{"platformId": "1_2", "score": 0.5}], "hitCount": 42}
-        client = rest.OfflineStubClient(pages={"ct": [doc] * 100})
-        src = rest.ChunkedTimeRangeSource(
-            client=client,
-            url="ct",
-            bronze_dir=str(tmp_path / "ct"),
-            start=datetime(2020, 1, 1),
-            end=datetime(2020, 2, 1),
-            chunk_days=7,
-        )
-        assert len(src.chunks()) == 5  # 31 days / 7 → 5 chunks (last short)
-        assert src.hit_count() == 42
-        src.scrape()
-        assert src.to_dataframe(spark).count() == 5
-
-
 class TestRetryBudgetSource:
     def test_attempt_budget_and_status(self, spark, tmp_path):
         ok = {"id": "a", "v": 1}
@@ -214,12 +194,8 @@ class TestImageScraperStage:
         assert len(batch_sizes) >= 3
 
 
-def make_png(w=7, h=5, pixels=None, filter_type=0):
-    """Real PNG: 8-bit RGB, one IDAT, every scanline filtered with
-    `filter_type` (forward-filtered here so decode exercises the
-    matching unfilter path). `pixels` is an h×w×3 uint8 array."""
-    import numpy as np
-
+def make_png(w=7, h=5):
+    """A PNG header (signature, IHDR, IEND) of the given dimensions."""
     ihdr = struct.pack(">II5B", w, h, 8, 2, 0, 0, 0)
 
     def chunk(tag, data):
@@ -227,60 +203,7 @@ def make_png(w=7, h=5, pixels=None, filter_type=0):
             ">I", zlib.crc32(tag + data)
         )
 
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-    if pixels is not None:
-        img = np.asarray(pixels, dtype=np.uint8).reshape(h, w * 3).astype(np.int16)
-        raw = bytearray()
-        prev = np.zeros(w * 3, dtype=np.int16)
-        for y in range(h):
-            line = img[y]
-            if filter_type == 0:
-                enc = line
-            elif filter_type == 1:  # Sub
-                left = np.concatenate([np.zeros(3, np.int16), line[:-3]])
-                enc = (line - left) % 256
-            elif filter_type == 2:  # Up
-                enc = (line - prev) % 256
-            elif filter_type == 3:  # Average
-                left = np.concatenate([np.zeros(3, np.int16), line[:-3]])
-                enc = (line - ((left + prev) >> 1)) % 256
-            else:  # Paeth
-                left = np.concatenate([np.zeros(3, np.int16), line[:-3]])
-                ul = np.concatenate([np.zeros(3, np.int16), prev[:-3]])
-                p = left + prev - ul
-                pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - ul)
-                pred = np.where(
-                    (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, ul)
-                )
-                enc = (line - pred) % 256
-            raw.append(filter_type)
-            raw += enc.astype(np.uint8).tobytes()
-            prev = line
-        out += chunk(b"IDAT", zlib.compress(bytes(raw)))
-    return out + chunk(b"IEND", b"")
-
-
-def make_bmp(w, h, pixels):
-    """24bpp bottom-up BI_RGB bmp from an h×w×3 uint8 RGB array."""
-    import numpy as np
-
-    img = np.asarray(pixels, dtype=np.uint8).reshape(h, w, 3)
-    stride = (w * 3 + 3) & ~3
-    body = bytearray()
-    for y in range(h - 1, -1, -1):  # bottom-up
-        row = img[y][:, ::-1].tobytes()  # RGB → BGR
-        body += row + b"\x00" * (stride - len(row))
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 0, 0, 0, 0)
-    header = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(body), 0, 0, 14 + 40)
-    return header + dib + bytes(body)
-
-
-def make_ppm(w, h, pixels):
-    import numpy as np
-
-    return b"P6\n# comment\n%d %d\n255\n" % (w, h) + np.asarray(
-        pixels, dtype=np.uint8
-    ).tobytes()
+    return b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(b"IEND", b"")
 
 
 class TestBinary:
@@ -289,210 +212,13 @@ class TestBinary:
         d.mkdir()
         (d / "a.png").write_bytes(make_png(7, 5))
         (d / "b.png").write_bytes(make_png(20, 10))
+        (d / "c.txt").write_bytes(b"skip")
         df = binary_source.read_binary_folder(spark, str(d), "*.png")
-        assert df.count() == 2 and "content" in df.columns
-        meta = {r.image: r.meta for r in binary_source.image_metadata(df).collect()}
-        assert meta["a.png"]["format"] == "png"
-        assert (meta["a.png"]["width"], meta["a.png"]["height"]) == (7, 5)
-        assert meta["b.png"]["n_bytes"] == len(make_png(20, 10))
-
-    def test_decode_stub_raises(self, spark):
-        with pytest.raises(NotImplementedError):
-            binary_source.decode_image_stub(None)
-
-    def test_decode_image_real_pixels_all_formats(self, spark, tmp_path):
-        """ppm/bmp/png (every png filter type) decode to the SAME known
-        pixel tensor through the Spark mapInPandas operator."""
-        import numpy as np
-
-        rng = np.random.default_rng(7)
-        w, h = 6, 4
-        pixels = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        d = tmp_path / "imgs"
-        d.mkdir()
-        (d / "a.ppm").write_bytes(make_ppm(w, h, pixels))
-        (d / "b.bmp").write_bytes(make_bmp(w, h, pixels))
-        for ft in range(5):
-            (d / f"png_f{ft}.png").write_bytes(make_png(w, h, pixels, filter_type=ft))
-        df = binary_source.read_binary_folder(spark, str(d), "*")
-        out = {r.image: r for r in binary_source.decode_image(df).collect()}
-        assert len(out) == 7
-        expected = pixels.reshape(-1).tolist()
-        for name, row in out.items():
-            assert (row.width, row.height, row.channels) == (w, h, 3), name
-            assert list(row.pixels) == expected, f"pixel mismatch in {name}"
-
-    def test_decode_image_rgba_png(self, spark, tmp_path):
-        import numpy as np
-        import struct as _struct
-        import zlib as _zlib
-
-        w, h = 3, 2
-        rgba = np.arange(w * h * 4, dtype=np.uint8).reshape(h, w * 4)
-        ihdr = _struct.pack(">II5B", w, h, 8, 6, 0, 0, 0)
-
-        def chunk(tag, data):
-            return _struct.pack(">I", len(data)) + tag + data + _struct.pack(
-                ">I", _zlib.crc32(tag + data)
-            )
-
-        raw = b"".join(b"\x00" + rgba[y].tobytes() for y in range(h))
-        png = (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", _zlib.compress(raw))
-            + chunk(b"IEND", b"")
-        )
-        d = tmp_path / "imgs2"
-        d.mkdir()
-        (d / "x.png").write_bytes(png)
-        df = binary_source.read_binary_folder(spark, str(d), "*")
-        row = binary_source.decode_image(df).collect()[0]
-        assert row.channels == 4
-        assert list(row.pixels) == rgba.reshape(-1).tolist()
-
-    def test_resize_image_binary_roundtrip(self, spark, tmp_path):
-        """resize is binary→binary: bmp in, ppm out, nearest-neighbor
-        verified against a numpy reference, and the output decodes back
-        through decode_image."""
-        import numpy as np
-
-        rng = np.random.default_rng(11)
-        w, h = 8, 6
-        pixels = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        d = tmp_path / "imgs3"
-        d.mkdir()
-        (d / "a.bmp").write_bytes(make_bmp(w, h, pixels))
-        df = binary_source.read_binary_folder(spark, str(d), "*")
-        out = binary_source.resize_image(df, width=4, height=3).collect()[0]
-        assert (out.width, out.height) == (4, 3)
-        ys = (np.arange(3) * h) // 3
-        xs = (np.arange(4) * w) // 4
-        expected = pixels[ys][:, xs]
-        redecoded = binary_source.decode_image(
-            spark.createDataFrame(
-                [("a.ppm", bytes(out.content))], "image string, content binary"
-            )
-        ).collect()[0]
-        assert list(redecoded.pixels) == expected.reshape(-1).tolist()
-
-    def test_decode_image_jpeg_real_decode(self, spark):
-        """Baseline jpeg now decodes for real through the Spark path:
-        encode a solid-color image (DCT-exact) and check pixel values."""
-        import numpy as np
-
-        from social_media_data_pipeline_spark.sources.jpeg import encode_jpeg
-
-        w, h = 24, 16
-        solid = np.full((h, w, 3), 200, dtype=np.uint8)
-        df = spark.createDataFrame(
-            [("x.jpg", encode_jpeg(w, h, solid, quality=95))],
-            "image string, content binary",
-        )
-        row = binary_source.decode_image(df).collect()[0]
-        assert (row.format, row.width, row.height, row.channels) == (
-            "jpeg", w, h, 3,
-        )
-        got = np.array(row.pixels, dtype=np.int16).reshape(h, w, 3)
-        assert np.abs(got - 200).max() <= 1
-
-    def test_decode_image_truncated_jpeg_raises_clear_error(self, spark):
-        df = spark.createDataFrame(
-            [("x.jpg", b"\xff\xd8\xff\xe0fakejpeg")], "image string, content binary"
-        )
-        with pytest.raises(Exception, match="jpeg"):
-            binary_source.decode_image(df).collect()
-
-
-class TestVideoFrames:
-    """Real Y4M frame sampling: every_n stride, chroma-family coverage,
-    mono exact round-trip, and composition with decode_image."""
-
-    @staticmethod
-    def _solid_frames(n, w, h, start=0):
-        import numpy as np
-
-        return [
-            np.full((h, w, 3), (start + 40 * i) % 256, dtype=np.uint8)
-            for i in range(n)
-        ]
-
-    def test_mono_roundtrip_exact_and_stride(self, spark):
-        import numpy as np
-
-        w, h, n = 6, 4, 7
-        frames = self._solid_frames(n, w, h, start=10)
-        video = binary_source.encode_y4m(w, h, frames, colorspace="mono")
-        df = spark.createDataFrame([("v.y4m", video)], "video string, content binary")
-        out = binary_source.sample_video_frames(df, every_n=3).collect()
-        # frames 0, 3, 6 sampled
-        assert [r.frame_idx for r in sorted(out, key=lambda r: r.frame_idx)] == [0, 3, 6]
-        for r in out:
-            assert (r.width, r.height) == (w, h)
-            # mono Y carries the R channel verbatim → ppm pixels exact
-            w2, h2, c, px = binary_source._decode_ppm(bytes(r.frame))
-            expect = (10 + 40 * r.frame_idx) % 256
-            assert (w2, h2, c) == (w, h, 3)
-            assert np.all(px == expect)
-
-    @pytest.mark.parametrize("cs", ["420", "422", "444"])
-    def test_chroma_families_decode_close(self, spark, cs):
-        import numpy as np
-
-        w, h = 8, 6
-        rgb = np.zeros((h, w, 3), np.uint8)
-        rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2] = 200, 60, 120
-        video = binary_source.encode_y4m(w, h, [rgb], colorspace=cs)
-        df = spark.createDataFrame([("v", video)], "video string, content binary")
-        row = binary_source.sample_video_frames(df, every_n=1).collect()[0]
-        _, _, _, px = binary_source._decode_ppm(bytes(row.frame))
-        got = px.reshape(h, w, 3).astype(int)
-        # BT.601 limited-range round trip: small quantization error only
-        assert np.abs(got - rgb.astype(int)).max() <= 4
-
-    def test_frames_feed_decode_image(self, spark):
-        """Sampled frames are ppm binaries — the image decode/resize
-        stages consume them directly (multimodal pipeline composition)."""
-        w, h = 4, 4
-        video = binary_source.encode_y4m(w, h, self._solid_frames(2, w, h))
-        df = spark.createDataFrame([("v", video)], "video string, content binary")
-        frames = binary_source.sample_video_frames(df, every_n=1).select(
-            F.concat(F.col("video"), F.lit("#"), F.col("frame_idx")).alias("image"),
-            F.col("frame").alias("content"),
-        )
-        decoded = binary_source.decode_image(frames).collect()
-        assert {r.image for r in decoded} == {"v#0", "v#1"}
-        assert all(r.format == "ppm" and r.channels == 3 for r in decoded)
-        resized = binary_source.resize_image(frames, 2, 2).collect()
-        assert all(len(bytes(r.content)) > 0 for r in resized)
-
-    def test_compressed_video_raises_clear_error(self, spark):
-        df = spark.createDataFrame(
-            [("clip.mp4", b"\x00\x00\x00\x18ftypmp42fake")], "video string, content binary"
-        )
-        with pytest.raises(Exception, match="ffmpeg|Y4M"):
-            binary_source.sample_video_frames(df).collect()
-        with pytest.raises(NotImplementedError):
-            binary_source.sample_video_frames_stub(df)
-
-    def test_sniff_reports_y4m(self):
-        video = binary_source.encode_y4m(2, 2, self._solid_frames(1, 2, 2))
-        assert binary_source._sniff_format(video) == "y4m"
-
-    def test_odd_dims_chroma_subsampled_rejected(self, spark):
-        video = binary_source.encode_y4m(4, 4, self._solid_frames(1, 4, 4), colorspace="420")
-        # doctor the header to claim odd width with C420
-        bad = video.replace(b"W4 H4", b"W5 H4", 1)
-        df = spark.createDataFrame([("v", bad)], "video string, content binary")
-        with pytest.raises(Exception, match="even W"):
-            binary_source.sample_video_frames(df, every_n=1).collect()
-
-    def test_image_metadata_parses_y4m_dims(self, spark):
-        video = binary_source.encode_y4m(6, 4, self._solid_frames(1, 6, 4))
-        df = spark.createDataFrame([("v.y4m", video)], "video string, content binary")
-        meta = binary_source.image_metadata(df).collect()[0].meta
-        assert meta["format"] == "y4m"
-        assert (meta["width"], meta["height"]) == (6, 4)
+        rows = {r.image: r for r in df.collect()}
+        assert set(rows) == {"a.png", "b.png"}
+        assert rows["a.png"].path.endswith("/imgs/a.png")
+        assert rows["b.png"].length == len(make_png(20, 10))
+        assert bytes(rows["b.png"].content) == make_png(20, 10)
 
 
 class TestInference:

@@ -1,5 +1,4 @@
-"""Tests: CSV adapter IO, observable filter metrics, JSON/CSV
-quarantine reads."""
+"""Tests: CSV adapter IO and observable filter metrics."""
 
 from __future__ import annotations
 
@@ -68,51 +67,3 @@ class TestObserve:
             df, lambda d: d.filter(F.col("x") < 3), "xfilter"
         )
         assert out.count() == 3  # transform applied; metrics ride along
-
-
-class TestJsonQuarantine:
-    def test_valid_and_corrupt_split(self, spark, tmp_path):
-        from social_media_data_pipeline_spark.io import read_json_with_quarantine
-
-        p = tmp_path / "feed.jsonl"
-        p.write_text(
-            '{"id": 1, "name": "ok"}\n'
-            '{"id": 2, "name": "also ok"}\n'
-            'this is not json at all\n'
-            '{"id": "not-an-int", "name": "type clash"}\n'
-            '{"id": 3, "name": "fine"}\n'
-        )
-        valid, corrupt = read_json_with_quarantine(
-            spark, str(p), "id long, name string"
-        )
-        ids = sorted(r["id"] for r in valid.collect())
-        assert ids == [1, 2, 3]
-        raws = [r["raw"] for r in corrupt.collect()]
-        assert len(raws) == 2
-        assert any("not json" in r for r in raws)
-        assert any("not-an-int" in r for r in raws)
-
-    def test_quarantine_sink_written(self, spark, tmp_path):
-        from social_media_data_pipeline_spark.io import read_json_with_quarantine
-
-        p = tmp_path / "feed.jsonl"
-        p.write_text('{"id": 1}\nbroken line\n')
-        qdir = str(tmp_path / "quarantine")
-        valid, corrupt = read_json_with_quarantine(
-            spark, str(p), "id long", quarantine_path=qdir
-        )
-        assert valid.count() == 1
-        stored = spark.read.parquet(qdir).collect()
-        assert len(stored) == 1 and "broken" in stored[0]["raw"]
-
-    def test_csv_twin_splits(self, spark, tmp_path):
-        from social_media_data_pipeline_spark.io import read_csv_with_quarantine
-
-        p = tmp_path / "feed.csv"
-        p.write_text("id,name\n1,ok\nnot-an-int,bad\n3,fine\n")
-        valid, corrupt = read_csv_with_quarantine(
-            spark, str(p), "id long, name string"
-        )
-        assert sorted(r["id"] for r in valid.collect()) == [1, 3]
-        raws = [r["raw"] for r in corrupt.collect()]
-        assert len(raws) == 1 and "not-an-int" in raws[0]

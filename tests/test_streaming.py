@@ -6,7 +6,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from social_media_data_pipeline_spark.streaming import events as sev
 
@@ -16,101 +15,11 @@ pytestmark = pytest.mark.slow  # r13 fast-gate split: long property/replication/
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
 
-def make_events(spark, rows, path):
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("overwrite").parquet(path)
-
-
 def t(minute, second=0):
     return dt.datetime(2024, 1, 1, 10, 0, second) + dt.timedelta(minutes=minute)
 
 
 class TestStreaming:
-    def test_windowed_counts_with_watermark(self, spark, tmp_path):
-        src = str(tmp_path / "src")
-        make_events(
-            spark,
-            [
-                (1, t(5), 1, "click", 1.0),
-                (2, t(20), 1, "click", 2.0),
-                (3, t(61), 2, "view", 3.0),
-            ],
-            src,
-        )
-        stream = sev.read_event_stream(spark, src, SCHEMA)
-        agg = sev.windowed_counts(stream, window="30 minutes", watermark="1 hour")
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("win_counts")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = {r.window_start: r.n_events for r in spark.sql("select * from win_counts").collect()}
-        assert rows[dt.datetime(2024, 1, 1, 10, 0)] == 2
-        assert rows[dt.datetime(2024, 1, 1, 11, 0)] == 1
-
-    def test_dedup_stream(self, spark, tmp_path):
-        src = str(tmp_path / "src")
-        make_events(
-            spark,
-            [(1, t(1), 1, "click", 1.0), (1, t(2), 1, "click", 1.0), (2, t(3), 1, "view", 2.0)],
-            src,
-        )
-        stream = sev.read_event_stream(spark, src, SCHEMA)
-        out = sev.dedup_stream(stream, ("event_id",))
-        q = (
-            out.writeStream.format("memory")
-            .queryName("dedup_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        assert spark.sql("select count(*) c from dedup_out").collect()[0].c == 2
-
-    def test_incremental_merge_is_idempotent(self, spark, tmp_path):
-        src = str(tmp_path / "src")
-        out_dir = str(tmp_path / "out")
-        ckpt1 = str(tmp_path / "ck1")
-        make_events(spark, [(1, t(1), 1, "click", 1.0), (2, t(2), 1, "view", 2.0)], src)
-        stream = sev.read_event_stream(spark, src, SCHEMA)
-        sev.run_incremental_merge(stream, out_dir, ckpt1, "event_id")
-        assert spark.read.parquet(out_dir).count() == 2
-        # replay the SAME data with a fresh checkpoint (simulated retry
-        # after losing offsets): keyed anti-join keeps output exactly-once
-        ckpt2 = str(tmp_path / "ck2")
-        stream2 = sev.read_event_stream(spark, src, SCHEMA)
-        sev.run_incremental_merge(stream2, out_dir, ckpt2, "event_id")
-        assert spark.read.parquet(out_dir).count() == 2
-
-    def test_paced_merge_processing_time_trigger(self, spark, tmp_path):
-        """ST5: Trigger.ProcessingTime pacing — maxFilesPerTrigger=1
-        over 3 source files must yield ≥2 separate non-empty
-        micro-batches (the throttle actually splits the work), drain
-        completely, and stay idempotent on replay."""
-        src = str(tmp_path / "src")
-        out_dir = str(tmp_path / "out")
-        # three separate files → three paced micro-batches
-        for i in range(3):
-            spark.createDataFrame(
-                [(i, t(i), 1, "click", float(i))], SCHEMA
-            ).coalesce(1).write.mode("append").parquet(src)
-        stream = sev.read_event_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-        n_batches = sev.run_paced_merge(
-            stream, out_dir, str(tmp_path / "ck1"), "event_id",
-            interval="250 milliseconds",
-        )
-        assert n_batches >= 2
-        assert spark.read.parquet(out_dir).count() == 3
-        # replay with fresh checkpoint: keyed merge keeps exactly-once
-        stream2 = sev.read_event_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-        sev.run_paced_merge(
-            stream2, out_dir, str(tmp_path / "ck2"), "event_id",
-            interval="250 milliseconds",
-        )
-        assert spark.read.parquet(out_dir).count() == 3
-
     def test_sessionize_batch(self, spark):
         df = spark.createDataFrame(
             [
@@ -166,96 +75,6 @@ class TestStreaming:
         df = spark.createDataFrame([(1, t(0), 10, "c", 1.0)], SCHEMA)
         with pytest.raises(ValueError, match="chunk_hours"):
             sev.sessionize_bounded(df, gap_minutes=120, chunk_hours=1)
-
-    def test_session_window_stream(self, spark, tmp_path):
-        src = str(tmp_path / "src")
-        make_events(
-            spark,
-            [(1, t(0), 10, "c", 1.0), (2, t(5), 10, "c", 1.0), (3, t(59), 10, "c", 1.0)],
-            src,
-        )
-        stream = sev.read_event_stream(spark, src, SCHEMA)
-        out = sev.session_window_stream(stream, gap="30 minutes")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("sess")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = spark.sql("select * from sess order by session_start").collect()
-        assert len(rows) == 2 and rows[0].n_events == 2 and rows[1].n_events == 1
-
-
-class TestStreamJoins:
-    def test_enrich_stream_static_broadcast(self, spark, tmp_path):
-        src = str(tmp_path / "src_enrich")
-        make_events(
-            spark,
-            [(1, t(1), 1, "click", 1.0), (2, t(2), 2, "view", 2.0), (3, t(3), 9, "view", 3.0)],
-            src,
-        )
-        dim = spark.createDataFrame(
-            [(1, "alice"), (2, "bob")], "user_id long, user_name string"
-        )
-        stream = sev.read_event_stream(spark, src, SCHEMA)
-        out = sev.enrich_stream(stream, dim, "user_id")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("enriched")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = {r.event_id: r.user_name for r in spark.sql("select * from enriched").collect()}
-        assert rows == {1: "alice", 2: "bob", 3: None}  # left join keeps unmatched
-
-    def test_join_streams_within_interval(self, spark, tmp_path):
-        """click→purchase attribution: purchase joins clicks of the same
-        user at-or-after the click and within 1 hour."""
-        clicks_dir = str(tmp_path / "clicks")
-        buys_dir = str(tmp_path / "buys")
-        make_events(
-            spark,
-            [(10, t(0), 1, "click", 0.0), (11, t(0), 2, "click", 0.0)],
-            clicks_dir,
-        )
-        make_events(
-            spark,
-            [
-                (20, t(30), 1, "purchase", 9.0),   # within 1h of click 10
-                (21, t(90), 2, "purchase", 5.0),   # 90 min after click 11: out
-            ],
-            buys_dir,
-        )
-        clicks = sev.read_event_stream(spark, clicks_dir, SCHEMA).select(
-            F.col("event_id").alias("click_id"), "user_id", "ts"
-        )
-        buys = sev.read_event_stream(spark, buys_dir, SCHEMA).select(
-            F.col("event_id").alias("buy_id"),
-            "user_id",
-            F.col("ts").alias("buy_ts"),
-            "value",
-        )
-        out = sev.join_streams_within(
-            clicks, buys, "user_id", left_ts="ts", right_ts="buy_ts", within="1 hour"
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("attrib")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = [
-            (r.click_id, r.buy_id, r.value)
-            for r in spark.sql("select * from attrib").collect()
-        ]
-        assert rows == [(10, 20, 9.0)]
-
 
 class TestStreamingBloom:
     def test_bloom_semi_join_composes_with_stream(self, spark, tmp_path):
@@ -878,88 +697,3 @@ class TestStreamingCurationLabels:
             stats[1]["spectrum_drift"] + 1e-9
         )
 
-
-class TestStreamingAnnIngest:
-    """r10: the ANN index as a continuously-maintained store — new
-    embedding micro-batches encode with the FROZEN artifacts and append
-    to the manifest-committed codes table (`ann_index.pq_codes_append`
-    as a foreachBatch body), the vector-search mirror of the band-store
-    and label-store maintenance paths."""
-
-    def test_batches_append_and_match_frozen_full_encode(
-        self, spark, tmp_path, monkeypatch
-    ):
-        import glob
-        import os
-        import time as _time
-
-        from social_media_data_pipeline_spark import scale
-        from social_media_data_pipeline_spark.functions import ann_index, pq
-
-        monkeypatch.setenv(
-            "SPARK_GRAFT_ARTIFACTS_DIR", str(tmp_path / "arts")
-        )
-        rows = [
-            (i, [float((i * 7 + j * 3) % 13) for j in range(8)])
-            for i in range(64)
-        ]
-        schema = "vec_id int, embedding array<float>"
-        base = spark.createDataFrame(rows[:32], schema)
-        tag = "stream:emb"
-        kw = dict(ivf_k=4, ivf_iters=2, m=2, ksub=4, iters=2)
-        ann_index.pq_codes_for(base, tag, **kw)
-
-        src = str(tmp_path / "vecs")
-        for name, chunk in (("b1", rows[32:48]), ("b2", rows[48:64])):
-            spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(
-                src + f"/{name}"
-            )
-        now = _time.time()
-        for i, b in enumerate(("b1", "b2")):
-            for f in glob.glob(src + f"/{b}/*"):
-                os.utime(f, (now - 40 + i * 20, now - 40 + i * 20))
-
-        sizes = []
-
-        def step(batch_df, batch_id):
-            if batch_df.isEmpty():
-                return
-            out = ann_index.pq_codes_append(batch_df, tag, **kw)
-            sizes.append(out.count())
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/b*")
-        )
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        assert sizes == [48, 64]
-        # final store == frozen full re-encode of all 64 vectors
-        full = spark.createDataFrame(rows, schema)
-        cents = ann_index.ivf_centroids_for(
-            full, tag, k=4, iters=2, trust_cache=True
-        )
-        cb = ann_index.pq_residual_codebook_for(
-            full, tag, trust_cache=True, **kw
-        )
-        want = pq.pq_encode(
-            pq.residual_table(full, cents), cb, "vec_id", "__resid",
-            keep_cols=["cluster"],
-        )
-        params = {**kw, "id_col": "vec_id", "vec_col": "embedding"}
-        got = scale.manifest_read(
-            spark, ann_index.pq_codes_path(tag, params)
-        )
-        key = lambda df: sorted(  # noqa: E731
-            (r["vec_id"], r["cluster"], tuple(r["codes"]))
-            for r in df.collect()
-        )
-        assert key(got) == key(want)
-        # and the merged fingerprint validates the grown corpus
-        meta = ann_index._load_meta(ann_index.pq_codes_path(tag, params))
-        assert meta["fingerprint"] == ann_index.corpus_fingerprint(full)

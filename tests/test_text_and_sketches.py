@@ -90,9 +90,15 @@ class TestText:
 class TestSketches:
     def test_minhash_identical_docs_same_signature(self, spark):
         df = spark.createDataFrame(
-            [("one two three four five",), ("one two three four five",)], "text string"
+            [(1, "one two three four five"), (2, "one two three four five")],
+            "doc_id long, text string",
         )
-        sigs = [tuple(r.s) for r in df.select(sketches.minhash_signature("text").alias("s")).collect()]
+        sigs = [
+            tuple(r.sig)
+            for r in sketches.minhash_signatures_table(df, "doc_id", "text")
+            .orderBy("doc")
+            .collect()
+        ]
         assert sigs[0] == sigs[1]
         assert len(set(sigs[0])) > 1  # salts actually differ (regression: index-capture bug)
 
@@ -160,7 +166,7 @@ class TestSketches:
              (3, "totally unrelated content words here")],
             "doc_id long, text string",
         )
-        fps = {r.doc_id: r.s for r in df.select("doc_id", sketches.simhash64("text").alias("s")).collect()}
+        fps = {r.doc: r.simhash for r in sketches.simhash_table(df, "doc_id", "text").collect()}
         d12 = bin(fps[1] ^ fps[2]).count("1")
         d13 = bin(fps[1] ^ fps[3]).count("1")
         assert d12 < d13
@@ -297,17 +303,13 @@ class TestQuantize:
             "vec_id long, embedding array<float>",
         )
         q = quantize.quantize_embeddings(df)
-        recon = q.select(
-            "vec_id",
-            "scale",
-            "q_embedding",
-            quantize.dequantize_vector("q_embedding", F.col("scale")).alias("recon"),
-        )
-        rows = {r.vec_id: r for r in recon.collect()}
+        rows = {r.vec_id: r for r in q.collect()}
         orig = {1: [0.5, -1.0, 0.25, 0.0], 2: [0.0] * 4, 3: [1e-6, -1e-6, 5e-7, 0.0]}
         for vid, r in rows.items():
             assert all(-127 <= v <= 127 for v in r.q_embedding)
-            for x, xhat in zip(orig[vid], r.recon):
+            # stored form reconstructs as x̂ = q·scale
+            for x, v in zip(orig[vid], r.q_embedding):
+                xhat = v * r.scale
                 # symmetric SQ8 bound: |x - x̂| <= scale/2 (+ float eps)
                 assert abs(x - xhat) <= r.scale / 2 + 1e-9
         assert rows[2].scale == 0.0 and set(rows[2].q_embedding) == {0}
@@ -664,11 +666,13 @@ class TestCountMinSketch:
 
         a = spark.createDataFrame([Row(t="x")] * 5 + [Row(t="y")] * 2)
         b = spark.createDataFrame([Row(t="x")] * 3 + [Row(t="z")] * 7)
-        merged = sk.cms_merge(
-            sk.cms_build(a, depth=3, width=64), sk.cms_build(b, depth=3, width=64)
-        )
+        # sketches merge by adding cell counts: the cell-wise sum of two
+        # builds equals the build over the union
+        m = {}
+        for part in (a, b):
+            for r in sk.cms_build(part, depth=3, width=64).collect():
+                m[(r["d"], r["col"])] = m.get((r["d"], r["col"]), 0) + r["cnt"]
         direct = sk.cms_build(a.unionByName(b), depth=3, width=64)
-        m = {(r["d"], r["col"]): r["cnt"] for r in merged.collect()}
         d = {(r["d"], r["col"]): r["cnt"] for r in direct.collect()}
         assert m == d
 

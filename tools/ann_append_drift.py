@@ -1,10 +1,10 @@
 """Recall drift of a FROZEN IVF-PQ index under appends (r10): quantify
-when `pq_codes_append`'s no-retrain contract stops being free.
+when encoding new batches with frozen artifacts (no retrain) stops
+being free.
 
 Protocol: train centroids + residual codebook on the FIRST HALF of the
 sf0.1 embedding corpus (the base index), then grow the corpus in 25%
-steps encoding each batch with the FROZEN artifacts (exactly what
-pq_codes_append commits). At every corpus state, measure recall@5 of
+steps encoding each batch with the FROZEN artifacts. At every corpus state, measure recall@5 of
 the 4-probe residual search against brute-force truth ON THAT corpus —
 frozen vs a fully RETRAINED index at the same state. The gap is the
 price of not rebuilding; where it exceeds the tolerance is the rebuild
