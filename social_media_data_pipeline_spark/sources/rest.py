@@ -1,11 +1,14 @@
 """Incremental REST-shaped sources with checkpointed offsets and retry
-state (SURVEY.md §2.1 S5/S7/S8, §2.11; M5).
+state (SURVEY.md §2.1 S5-S8, §2.11; M5).
 
-Two ingestion shapes from the reference, each resumable mid-stream:
+Three ingestion shapes from the reference, each resumable mid-stream:
 
 - S5 cursor pagination: follow `end_cursor` until `has_more` is false,
   persisting every page + the cursor history
   (`InstagramFeedScraper.py:87-168`). Offset ≙ cursor list.
+- S6 chunked time range: split [start, end] into N-day chunks, fetch
+  sequentially, `current_chunk` is the offset
+  (`CTScraper.py:98-164`, `CTConfig.py:5-9`).
 - S7 per-item retry budget: fetch each id, track attempts/successes in
   a state table, re-scan until done or budget exhausted
   (`InstagramPostScraper.py:139-188`, `InstagramImageScraper.py:97-139`).
@@ -26,6 +29,7 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
+from datetime import datetime, timedelta
 from typing import Any, Protocol
 
 from pyspark.sql import DataFrame, SparkSession
@@ -182,6 +186,59 @@ class CursorFeedSource:
         """Bronze pages → one row per item (S3 folder scan + explode)."""
         raw = spark.read.option("multiLine", True).json(
             os.path.join(self.bronze_dir, "page_*.json")
+        )
+        return raw.select(F.explode(F.col(item_field)).alias("item")).select("item.*")
+
+
+@dataclass
+class ChunkedTimeRangeSource:
+    """S6: time-chunked queries with a `current_chunk` offset
+    (`CTScraper.py:136-164`). Chunking ≙ manual partition pruning of the
+    query space; the chunk table is deterministic from (start, end, days).
+    """
+
+    client: HttpClient
+    url: str
+    bronze_dir: str
+    start: datetime
+    end: datetime
+    chunk_days: int
+
+    @property
+    def _state_path(self) -> str:
+        return os.path.join(self.bronze_dir, "_chunk_state.json")
+
+    def chunks(self) -> list[tuple[str, str]]:
+        out = []
+        lo = self.start
+        while lo < self.end:
+            hi = min(lo + timedelta(days=self.chunk_days), self.end)
+            out.append((lo.isoformat(), hi.isoformat()))
+            lo = hi
+        return out
+
+    def scrape(self) -> dict:
+        os.makedirs(self.bronze_dir, exist_ok=True)
+        chunks = self.chunks()
+        state = _read_json(self._state_path, {"current_chunk": 0})
+        while state["current_chunk"] < len(chunks):
+            lo, hi = chunks[state["current_chunk"]]
+            doc = self.client.get(self.url, {"start": lo, "end": hi})
+            _write_json(
+                os.path.join(self.bronze_dir, f"chunk_{state['current_chunk']:05d}.json"), doc
+            )
+            state["current_chunk"] += 1
+            _write_json(self._state_path, state)
+        return state
+
+    def hit_count(self) -> int:
+        """A13: `count=0` probe — source-side aggregate pushdown analog
+        (`one_query.py:45-51`)."""
+        return int(self.client.get(self.url, {"count": 0}).get("hitCount", 0))
+
+    def to_dataframe(self, spark: SparkSession, item_field: str = "posts") -> DataFrame:
+        raw = spark.read.option("multiLine", True).json(
+            os.path.join(self.bronze_dir, "chunk_*.json")
         )
         return raw.select(F.explode(F.col(item_field)).alias("item")).select("item.*")
 

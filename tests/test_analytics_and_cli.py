@@ -51,6 +51,35 @@ class TestExplore:
         counts = [r["count"] for r in rows]
         assert counts == sorted(counts, reverse=True)
 
+    def test_profile_covers_all_columns(self, posts):
+        # A6 `summarize` profiles every column, arrays and timestamps too
+        from functools import reduce
+
+        from pyspark.sql import DataFrame
+
+        prof = reduce(
+            DataFrame.unionByName,
+            [aggregates.profile_column(posts, c) for c in posts.columns],
+        )
+        assert prof.count() == len(posts.columns)
+
+    def test_analyze_dataset_bundle(self, spark, tmp_path, posts):
+        # the exploratory stage's bundle: one long (metric, key, value)
+        # table holding monthly post counts and hashtag frequencies
+        from social_media_data_pipeline_spark.plans import stages
+
+        src = str(tmp_path / "posts")
+        posts.write.parquet(src)
+        bundle = stages.ExploratoryanalysisStage({}).run(spark, src, "")
+        assert bundle.columns == ["metric", "key", "value"]
+        rows = bundle.collect()
+        assert {r.metric for r in rows} == {"posts_per_month", "hashtag_count"}
+        monthly = [r.value for r in rows if r.metric == "posts_per_month"]
+        assert sum(monthly) == posts.count()
+        tags = {r.key: r.value for r in rows if r.metric == "hashtag_count"}
+        want = explore.hashtag_frequency(posts).collect()
+        assert tags == {r["hashtag"]: float(r["count"]) for r in want}
+
     def test_category_share_over_time_sums_to_one(self, posts):
         counts = aggregates.group_by_time(
             posts,

@@ -1,6 +1,6 @@
 """Tests: archive-shard ingestion (`binary.read_archive_members`) —
-zip and tar.gz shards exploded to member rows, member-glob filtering
-and error reporting."""
+zip and tar.gz shards exploded to member rows, member-glob filtering,
+composition with the image stages and error reporting."""
 
 from __future__ import annotations
 
@@ -51,6 +51,26 @@ class TestArchiveSource:
         )
         df = binary.read_archive_members(spark, str(tmp_path), member_glob="*.txt")
         assert {r["member"] for r in df.collect()} == {"one.txt", "sub/three.txt"}
+
+    def test_composes_with_image_decode(self, spark, tmp_path):
+        # a zip of images flows straight into the F3 labeling step, where
+        # the model backend decodes the pixels: each member's bytes must
+        # label exactly as the same bytes read from a loose file would
+        from social_media_data_pipeline_spark.ml import inference, models
+
+        imgs = {"r.ppm": b"P6\n2 1\n255\n" + bytes([255, 0, 0, 0, 255, 0]),
+                "g.ppm": b"P6\n1 1\n255\n" + bytes([0, 255, 0])}
+        (tmp_path / "imgs.zip").write_bytes(_zip_bytes(imgs))
+        members = binary.read_archive_members(spark, str(tmp_path))
+        got = inference.label_images(
+            members, models.StubSceneLabeler, image_col="member"
+        ).collect()
+        loose = spark.createDataFrame(list(imgs.items()), "image string, content binary")
+        want = inference.label_images(loose, models.StubSceneLabeler).collect()
+        assert len(got) == 2
+        assert {r.image: r.predictions for r in got} == {
+            r.image: r.predictions for r in want
+        }
 
     def test_non_archive_reported(self, spark, tmp_path):
         (tmp_path / "bad.zip").write_bytes(b"this is not an archive at all")

@@ -324,6 +324,30 @@ class TestTrainingShards:
             packing.assign_training_shards(self._docs(spark), "doc_id", "toks", 0)
 
 
+class TestWriteTrainingShards:
+    def test_partitioned_layout_round_trips(self, spark, tmp_path):
+        # the `shard` column is the hive partition key a training
+        # data-loader reads `shard=K/` by, with no index or manifest
+        df = spark.createDataFrame(
+            [(i, 40 + (i * 53) % 400) for i in range(300)], "doc_id long, toks long"
+        )
+        want = {
+            r["doc_id"]: r["shard"]
+            for r in packing.assign_training_shards(
+                df, "doc_id", "toks", 2000
+            ).collect()
+        }
+        path = str(tmp_path / "shards")
+        out = packing.assign_training_shards(df, "doc_id", "toks", 2000)
+        out.repartition("shard").write.partitionBy("shard").parquet(path)
+        back = spark.read.parquet(path)
+        assert back.count() == 300
+        got = {r["doc_id"]: r["shard"] for r in back.collect()}
+        assert got == want
+        sh0 = spark.read.parquet(f"{path}/shard=0")
+        assert sh0.count() == sum(1 for v in want.values() if v == 0)
+
+
 class TestPackBestfit:
     def _ref_bfd(self, sizes_ids, budget):
         """Sequential best-fit-decreasing reference (list scan)."""
@@ -529,8 +553,26 @@ def test_salted_join_reserves_salt_column(salt_frames, spark):
         joins.salted_join(big.withColumn("_salt", F.lit(0)), other, "k")
 
 
+@pytest.mark.parametrize("how", ["inner", "left"])
+def test_salted_join_auto_matches_plain(salt_frames, how):
+    # the hot list as an ingest-time skew profile would hand it over: a
+    # lazy count aggregate keeping every key with >= 30% of the rows
+    big, other = salt_frames
+    floor = int(0.3 * big.count())
+    hot = (
+        big.groupBy("k")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= floor)
+        .orderBy(F.desc("n"), "k")
+        .select("k")
+    )
+    assert [r.k for r in hot.collect()] == [7]
+    got = joins.salted_join(big, other, "k", n_salts=4, how=how, hot_keys=hot)
+    exp = big.join(other, "k", how)
+    assert _sorted_rows(got) == _sorted_rows(exp)
 
-def test_salted_join_empty_hot_keys_is_plain_join(spark):
+
+def test_salted_join_auto_uniform_no_hot_keys(spark):
     # uniform keys leave the hot list empty: the hybrid path must
     # degrade to the plain cold join and stay correct
     big = spark.createDataFrame([(i % 10, i) for i in range(100)], "k long, v long")

@@ -69,6 +69,7 @@ ALLOWED_UNREACHED_DEFS = {
     f"{PKG}.operators.sort.top_k_array": "(a) O4 per-row top-k",
     f"{PKG}.sources.json_flatten.extract_comments": "(a) F7 comments table",
     f"{PKG}.sources.json_flatten.flatten_minimal": "(a) F7 minimal post table",
+    f"{PKG}.sources.rest.ChunkedTimeRangeSource": "(a) S6 chunked time-range source",
     f"{PKG}.sources.rest.RequestsHttpClient": "(b) requests-backed HTTP transport",
     f"{PKG}.analytics.report.render_table": "(c) markdown table section",
     f"{PKG}.analytics.report.dual_timeseries_chart": "(c) dualplot_timeseries",

@@ -137,6 +137,26 @@ class TestRequestsHttpClient:
             client.get(f"{base}/flaky", {"cursor": ""})
 
 
+class TestChunkedSource:
+    def test_chunks_and_resume(self, spark, tmp_path):
+        from datetime import datetime
+
+        doc = {"posts": [{"platformId": "1_2", "score": 0.5}], "hitCount": 42}
+        client = rest.OfflineStubClient(pages={"ct": [doc] * 100})
+        src = rest.ChunkedTimeRangeSource(
+            client=client,
+            url="ct",
+            bronze_dir=str(tmp_path / "ct"),
+            start=datetime(2020, 1, 1),
+            end=datetime(2020, 2, 1),
+            chunk_days=7,
+        )
+        assert len(src.chunks()) == 5  # 31 days / 7 → 5 chunks (last short)
+        assert src.hit_count() == 42
+        src.scrape()
+        assert src.to_dataframe(spark).count() == 5
+
+
 class TestRetryBudgetSource:
     def test_attempt_budget_and_status(self, spark, tmp_path):
         ok = {"id": "a", "v": 1}
